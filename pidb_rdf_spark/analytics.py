@@ -1,5 +1,6 @@
 """Iterative graph analytics: connected components, BFS hop counts,
-PageRank, and near-dup clustering built on them.
+shortest paths, centralities, PageRank, and near-dup clustering built
+on them.
 
 The reference's only iterative compute is its ontology closure
 (``semantics/inference/MicroReasoners.java:20-22``, mirrored here by
@@ -12,13 +13,18 @@ tiers, link-based quality scores).
 Scale shape shared by every loop below:
 - each iteration is one equi-join + one aggregation (both shuffle on
   the node id — a cluster co-partitions them after the first stage);
-- ``localCheckpoint(eager=True)`` per round truncates lineage so the
-  plan does not grow with iteration count;
+- a ``localCheckpoint`` per round truncates lineage so the plan does
+  not grow with iteration count;
 - convergence tests run on the frontier / delta only, never the full
   state;
 - min-label propagation converges in O(diameter) rounds; for
   pathological diameters ``connected_components_star`` provides the
   pointer-doubling alternative (O(log n) rounds).
+
+The frontier-shaped loops (BFS, Bellman-Ford, Brandes' forward pass)
+run on :mod:`pidb_rdf_spark.frontier`, whose module docstring states
+the convergence policy every loop here follows: a round budget that
+runs out raises; only an explicit bound returns a bounded answer.
 """
 
 from __future__ import annotations
@@ -30,6 +36,8 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from pidb_rdf_spark import frontier
 
 # Below this state size, whole-stage codegen is disabled inside
 # fixpoint loops: Janino compilation of each round's stages costs more
@@ -50,23 +58,15 @@ _LOOP_ROWS_PER_PARTITION = int(
     os.environ.get("SPARK_GRAFT_LOOP_ROWS_PER_PARTITION", "100000")
 )
 
-# State-size gate for the pinned-layout conversion (r14, VERDICT r13
-# #1). Below this many state rows the `_fixpoint_conf` form runs the
-# whole loop on ONE partition with AQE and broadcasts off, plus fixed
-# setup jobs (node count + two repartition+checkpoints) that never
-# amortize — the driver measured sssp 4.13→7.72 s and
-# connected_components_regions 1.55→2.11 s at sf0.1 from exactly this.
-# Loops with a semi-naive (shrinking-frontier) small-state form keep
-# their r12 AQE shape below the gate: the planner's broadcast-friendly
-# default wins at small state (the r13 transitive_closure rejection
-# proved the same point). Defaults to _LOOP_ROWS_PER_PARTITION — the
-# first state size at which the sizer allocates a second partition,
-# i.e. the point where the pinned layout starts to mean something.
-_FIXPOINT_MIN_STATE_ROWS = int(
-    os.environ.get(
-        "SPARK_GRAFT_FIXPOINT_MIN_STATE_ROWS", str(_LOOP_ROWS_PER_PARTITION)
-    )
-)
+# State-size gate for connected_components' pinned-layout loop. Below
+# this many state rows the `_fixpoint_conf` form would run the whole
+# loop on ONE partition with AQE and broadcasts off, plus fixed setup
+# jobs (node count + two repartition+checkpoints) that never amortize;
+# the AQE form with the planner's broadcast-friendly defaults wins
+# there. Equal to _LOOP_ROWS_PER_PARTITION — the first state size at
+# which the sizer allocates a second partition, i.e. the point where
+# the pinned layout starts to mean something.
+_FIXPOINT_MIN_STATE_ROWS = _LOOP_ROWS_PER_PARTITION
 
 # _fixpoint_conf mutates SESSION-GLOBAL SQL conf for the duration of a
 # loop. Concurrent loops on one session (threads submitting queries in
@@ -253,14 +253,10 @@ def connected_components(
         .localCheckpoint(eager=True)
     )
     n = nodes.count()
-    # State-size gate (r14, VERDICT r13 #1): below
-    # _FIXPOINT_MIN_STATE_ROWS the pinned-layout conversion runs its
-    # AQE-off rounds on ONE partition with fixed setup jobs (two
-    # repartition+checkpoints) that never amortize — the driver
-    # measured connected_components_regions 1.55→2.11 s at sf0.1 from
-    # the ungated form. Small graphs keep the r12 AQE loop — same
-    # min-label math, identical output. The nodes frame is shared:
-    # the small path seeds its labels from the same checkpoint.
+    # State-size gate (see _FIXPOINT_MIN_STATE_ROWS): small graphs run
+    # the AQE loop — same min-label math, identical output. The nodes
+    # frame is shared: the small path seeds its labels from the same
+    # checkpoint.
     if n < _FIXPOINT_MIN_STATE_ROWS:
         return _connected_components_small(edges, nodes, max_iter)
     # Pinned-layout loop (_fixpoint_conf): edges laid out by dst (the
@@ -300,6 +296,8 @@ def connected_components(
                 labels = spark.sql(round_sql).localCheckpoint(eager=True)
                 if labels.filter("__chg").isEmpty():
                     break
+            else:
+                raise frontier.exhausted("connected_components", max_iter)
         finally:
             spark.catalog.dropTempView(vl)
             spark.catalog.dropTempView(ve)
@@ -309,9 +307,9 @@ def connected_components(
 def _connected_components_small(
     edges: DataFrame, nodes: DataFrame, max_iter: int
 ) -> DataFrame:
-    """Min-label propagation below the pinned-layout gate: the r12
-    AQE form — per round one union+groupBy-min plus a convergence
-    join, planner defaults (broadcast, AQE) left on. ``edges`` is the
+    """Min-label propagation below the pinned-layout gate: the AQE
+    form — per round one union+groupBy-min plus a convergence join,
+    planner defaults (broadcast, AQE) left on. ``edges`` is the
     symmetrized, checkpointed edge set; ``nodes`` its checkpointed
     distinct endpoints (shared with the caller's gate probe). Output
     contract identical to the pinned path: (node, component),
@@ -335,8 +333,8 @@ def _connected_components_small(
         )
         labels = new
         if converged:
-            break
-    return labels
+            return labels
+    raise frontier.exhausted("connected_components", max_iter)
 
 
 def connected_components_star(
@@ -369,10 +367,9 @@ def connected_components_star(
 
     cur = edges
     n_cur = cur.count()
-    # r13: the alternating rounds run under the pinned static layout
-    # (AQE off — measured 5.0→3.9 s warm at sf0.1 on top of the probe
-    # fix below; size-derived partitions). The edge set is the loop
-    # state, so it is the sizer.
+    # the alternating rounds run under the pinned static layout (AQE
+    # off, size-derived partitions); the edge set is the loop state,
+    # so it is the sizer
     with _fixpoint_conf(edges.sparkSession, n_cur):
         cur, n_cur = _components_star_rounds(cur, n_cur, max_iter, min_nbr)
     # at the fixpoint every non-root neighbors its component min
@@ -403,7 +400,7 @@ def _components_star_rounds(cur, n_cur, max_iter, min_nbr):
             .filter(F.col("src") != F.col("dst"))
             .dropDuplicates()
         )
-        # lazy (r13): two consumers (m2, small) share the one
+        # lazy: two consumers (m2, small) share the one
         # materialization that rides nxt's count below
         ls = ls.unionAll(
             ls.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -423,7 +420,7 @@ def _components_star_rounds(cur, n_cur, max_iter, min_nbr):
         nxt = nxt.unionAll(
             nxt.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         ).dropDuplicates().localCheckpoint(eager=False)
-        # convergence (r13): both frames are deduplicated SETS, so
+        # convergence: both frames are deduplicated SETS, so
         # equality ⟺ equal size AND nxt \ cur = ∅. One count (which
         # also materializes the lazy round checkpoint) replaces the
         # two per-round exceptAll probes; the anti-join only runs on
@@ -435,8 +432,8 @@ def _components_star_rounds(cur, n_cur, max_iter, min_nbr):
         cur = nxt
         n_cur = n_nxt
         if not changed:
-            break
-    return cur, n_cur
+            return cur, n_cur
+    raise frontier.exhausted("connected_components_star", max_iter)
 
 
 def shortest_hops(
@@ -448,51 +445,17 @@ def shortest_hops(
     max_iter: int = 50,
 ) -> DataFrame:
     """(node, hops) = unweighted BFS distance from the nearest source
-    node. ``sources`` is a one-column DataFrame of node ids. Frontier
-    expansion: each round joins ONLY the newly-settled frontier
-    against the edges (semi-naive), so total work is O(edges reached),
-    not O(edges × diameter).
-
-    The settled set is kept as a UNION of the per-hop frontier
-    checkpoints rather than re-materialized each round: hops never
-    change once assigned (unlike :func:`sssp`, whose distances relax),
-    so re-checkpointing the whole accumulated frame every round —
-    O(V·diameter) total writes on a big graph — buys nothing. The
-    union plan grows one cached-scan branch per hop, bounded by
-    ``max_iter``; every branch is already pinned, so no lineage
-    blow-up."""
+    node. ``sources`` is a one-column DataFrame of node ids. A
+    :func:`frontier.reach` loop (semi-naive: total work is O(edges
+    reached), not O(edges x diameter)); ``max_iter`` is a round budget
+    that raises when it runs out."""
     edges = (
         pairs.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         if directed
         else _sym(pairs, src, dst)
     ).localCheckpoint(eager=True)
-    dist = sources.select(
-        F.col(sources.columns[0]).alias("node"), F.lit(0).cast("long").alias("hops")
-    ).dropDuplicates(["node"]).localCheckpoint(eager=True)
-    frontier = dist
-    for hop in range(1, max_iter + 1):
-        reached = (
-            edges.join(
-                frontier.withColumnRenamed("node", "src").select("src"),
-                on="src",
-                how="leftsemi",
-            )
-            .select(F.col("dst").alias("node"))
-            .dropDuplicates()
-            .join(dist.select("node"), on="node", how="leftanti")
-            .select("node", F.lit(hop).cast("long").alias("hops"))
-            # lazy + count (r13): ONE count() both fully materializes
-            # the round checkpoint and decides termination. (An
-            # isEmpty probe here measured SLOWER than the eager form:
-            # it limit-probes, then doCheckpoint materializes the rest
-            # as a second implicit job — see OPTIMIZATION_r13.md.)
-            .localCheckpoint(eager=False)
-        )
-        if reached.count() == 0:
-            break
-        dist = dist.unionAll(reached)
-        frontier = reached
-    return dist
+    seeds = sources.select(F.col(sources.columns[0]).alias("node")).dropDuplicates()
+    return frontier.reach(edges, seeds, max_iter, what="shortest_hops")[0]
 
 
 def sssp(
@@ -505,24 +468,19 @@ def sssp(
     max_iter: int = 20,
 ) -> DataFrame:
     """(node, dist) = minimum-cost distance from the nearest source
-    node — bounded Bellman-Ford with semi-naive frontiers.
+    node — bounded Bellman-Ford with semi-naive frontiers
+    (:func:`frontier.relax`).
 
     Each round relaxes ONLY edges out of nodes whose distance improved
-    last round, so total work is O(edges touched by improvements), not
-    O(edges x rounds); the loop exits early at the fixpoint. After i
-    rounds ``dist`` equals the minimum cost over paths of <= i edges
-    (the same invariant whether relaxation is naive or semi-naive),
-    which is what makes the operator replayable: an oracle that
-    unrolls i naive rounds matches this exactly, converged or not.
+    last round, and the loop exits early at the fixpoint. ``max_iter``
+    is a BOUND, not a budget: after i rounds ``dist`` equals the
+    minimum cost over paths of <= i edges, which is what makes the
+    operator replayable — an oracle that unrolls i naive rounds
+    matches this exactly, converged or not.
 
-    Weights must be non-negative (Bellman-Ford relaxation converges
-    to shortest costs only without negative cycles; with bounded
-    rounds, negative edges would make the i-round invariant the only
-    guarantee). INTEGER weights recommended: min() over exact longs
+    Weights must be non-negative and INTEGRAL: min() over exact longs
     is partition-order-independent, where float path sums can tie
-    apart by rounding. One shuffle per round (join on src + min-combine
-    on dst); ``localCheckpoint`` truncates lineage like the other
-    fixpoint loops here.
+    apart by rounding.
     """
     from pyspark.sql import types as T
 
@@ -551,129 +509,13 @@ def sssp(
                 F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
             )
         )
-    edges = e.localCheckpoint(eager=True)
-    # Pinned-layout loop (_fixpoint_conf): state = EVERY node (edge
-    # endpoints ∪ sources), dist NULL = unreached, laid out by node
-    # once; edges laid out by src once. The semi-naive frontier is a
-    # FILTER of the state (is_new carries "reached or strictly
-    # improved last round"), so the frontier⋈edges join is
-    # co-partitioned with no exchange, and the per-round plan is: one
-    # contribution shuffle (GROUP BY dst) + a layout-preserving merge
-    # left-join back onto the state. Long-integer min/+ semantics are
-    # exactly those of the union+min(struct) form this replaces: a
-    # candidate wins only when strictly smaller (ties keep old =
-    # is_new false), so the i-round invariant the oracle replays is
-    # unchanged.
-    spark = pairs.sparkSession
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionAll(edges.select(F.col("dst").alias("node")))
-        .unionAll(sources.select(F.col(sources.columns[0]).alias("node")))
-        .dropDuplicates()
-        .localCheckpoint(eager=True)
+    seeds = sources.select(
+        F.col(sources.columns[0]).alias("node"),
+        F.lit(0).cast("long").alias("dist"),
+    ).dropDuplicates(["node"])
+    return frontier.relax(
+        e.localCheckpoint(eager=True), seeds, max_iter, bounded=True, what="sssp"
     )
-    n = nodes.count()
-    # State-size gate (r14, VERDICT r13 #1): the pinned form carries
-    # the FULL node set as loop state — per round it rewrites O(V)
-    # rows even when the frontier is nearly empty, which only pays
-    # once the state is big enough to occupy a real layout (the
-    # driver measured 4.13→7.72 s at sf0.1 from the ungated
-    # conversion: 34k nodes → a SinglePartition AQE-off loop). Below
-    # the gate the r12 semi-naive form (frontier-sized rounds,
-    # planner defaults) wins; n — the true state size, the same number
-    # _fixpoint_conf sizes by — is the gate probe.
-    if n < _FIXPOINT_MIN_STATE_ROWS:
-        return _sssp_small(edges, sources, max_iter)
-    with _fixpoint_conf(spark, n) as n_parts:
-        ew = edges.repartition(n_parts, "src").localCheckpoint(eager=True)
-        state = (
-            nodes.join(
-                sources.select(
-                    F.col(sources.columns[0]).alias("node"),
-                    F.lit(0).cast("long").alias("dist"),
-                ).dropDuplicates(["node"]),
-                on="node",
-                how="left",
-            )
-            .select("node", "dist", F.col("dist").isNotNull().alias("is_new"))
-            .repartition(n_parts, "node")
-            .localCheckpoint(eager=True)
-        )
-        vs = _loop_view(state, "sssp_state")
-        ve = _loop_view(ew, "sssp_edges")
-        improved = "c.nd IS NOT NULL AND (s.dist IS NULL OR c.nd < s.dist)"
-        round_sql = f"""
-            SELECT s.node,
-                   CASE WHEN {improved} THEN c.nd ELSE s.dist END AS dist,
-                   ({improved}) AS is_new
-            FROM {vs} s
-            LEFT JOIN (
-              SELECT e.dst AS node, min(f.dist + e.w) AS nd
-              FROM {ve} e JOIN {vs} f ON e.src = f.node AND f.is_new
-              GROUP BY e.dst
-            ) c ON s.node = c.node
-        """
-        try:
-            for _ in range(max_iter):
-                state.createOrReplaceTempView(vs)
-                state = spark.sql(round_sql).localCheckpoint(eager=True)
-                if state.filter("is_new").isEmpty():
-                    break
-        finally:
-            spark.catalog.dropTempView(vs)
-            spark.catalog.dropTempView(ve)
-    return state.filter(F.col("dist").isNotNull()).select("node", "dist")
-
-
-def _sssp_small(
-    edges: DataFrame, sources: DataFrame, max_iter: int
-) -> DataFrame:
-    """Bellman-Ford below the pinned-layout gate: the r12 semi-naive
-    form whose per-round state is the reached set only, planner
-    defaults left on. ``edges`` is the direction-expanded (src, dst,
-    w) frame, already checkpointed. Long-integer min/+ semantics and
-    the i-round invariant match the pinned path exactly."""
-    dist = (
-        sources.select(
-            F.col(sources.columns[0]).alias("node"),
-            F.lit(0).cast("long").alias("dist"),
-        )
-        .dropDuplicates(["node"])
-        .localCheckpoint(eager=True)
-    )
-    frontier = dist
-    for _ in range(max_iter):
-        # ONE shuffle per round: merge the old distances with the
-        # relaxed candidates and take min(struct(dist, is_new)) per
-        # node — struct ordering breaks dist ties toward is_new=False
-        # (false < true), so is_new survives in the winner exactly
-        # when the node is newly reached or strictly improved. That
-        # folds candidate reduction, improvement detection, and the
-        # distance merge into a single aggregation.
-        cand = edges.join(
-            frontier.withColumnRenamed("node", "src"), on="src"
-        ).select(
-            F.col("dst").alias("node"),
-            (F.col("dist") + F.col("w")).alias("dist"),
-            F.lit(True).alias("is_new"),
-        )
-        merged = (
-            dist.withColumn("is_new", F.lit(False))
-            .unionByName(cand)
-            .groupBy("node")
-            .agg(F.min(F.struct("dist", "is_new")).alias("s"))
-            .select(
-                "node",
-                F.col("s.dist").alias("dist"),
-                F.col("s.is_new").alias("is_new"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        frontier = merged.filter("is_new").select("node", "dist")
-        if frontier.isEmpty():
-            return merged.select("node", "dist")
-        dist = merged.select("node", "dist")
-    return dist
 
 
 def pagerank(
@@ -1528,84 +1370,11 @@ def closeness_centrality(
     ``sources`` (the estimate is unbiased under uniform sampling,
     scale by N/|sources| if an absolute total is needed).
     """
-    if weight is not None:
-        w_base = pairs.select(
-            F.col(src).alias("src"),
-            F.col(dst).alias("dst"),
-            F.col(weight).cast("double").alias("__w"),
-        ).filter((F.col("__w") > 0) & (F.col("src") != F.col("dst")))
-        if not directed:
-            w_base = w_base.unionAll(
-                w_base.select(
-                    F.col("dst").alias("src"), F.col("src").alias("dst"), "__w"
-                )
-            )
-        w_edges = (
-            w_base.groupBy("src", "dst")
-            .agg(F.min("__w").alias("__w"))
-            .localCheckpoint(eager=True)
-        )
-        if sources is None:
-            sources = w_edges.select(F.col("src").alias("node")).unionAll(
-                w_edges.select(F.col("dst").alias("node"))
-            )
-        origins = (
-            sources.select(F.col(sources.columns[0]).alias("origin"))
-            .dropDuplicates()
-            .localCheckpoint(eager=True)
-        )
-        state = origins.select(
-            "origin",
-            F.col("origin").alias("node"),
-            F.lit(0.0).alias("hops"),
-        ).localCheckpoint(eager=True)
-        frontier = state
-        for _ in range(max_iter):
-            cand = (
-                frontier.select("origin", F.col("node").alias("src"), "hops")
-                .join(w_edges, on="src")
-                .groupBy("origin", F.col("dst").alias("node"))
-                .agg(F.min(F.col("hops") + F.col("__w")).alias("__new"))
-            )
-            improved = (
-                cand.join(
-                    state.withColumnRenamed("hops", "__old"),
-                    on=["origin", "node"],
-                    how="left",
-                )
-                .filter(
-                    F.col("__old").isNull() | (F.col("__new") < F.col("__old"))
-                )
-                .select("origin", "node", F.col("__new").alias("hops"))
-                .localCheckpoint(eager=True)
-            )
-            if improved.isEmpty():
-                break
-            # distances RELAX (unlike the BFS hop states), so the
-            # merged state re-pins each round — the sssp shape
-            state = (
-                state.unionAll(improved)
-                .groupBy("origin", "node")
-                .agg(F.min("hops").alias("hops"))
-                .localCheckpoint(eager=True)
-            )
-            frontier = improved
-        else:
-            raise RuntimeError(
-                "closeness_centrality: distances were still relaxing "
-                f"after max_iter={max_iter} rounds — a truncated "
-                "Bellman-Ford would overstate every unfinished "
-                "distance; raise max_iter (rounds needed = the max "
-                "EDGE COUNT of any minimum-cost path, which can reach "
-                "V-1 when many cheap hops undercut a direct edge)"
-            )
-        return _closeness_from_state(origins, state)
     edges = (
-        pairs.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .dropDuplicates()
-        if directed
-        else _sym(pairs, src, dst)
-    ).localCheckpoint(eager=True)
+        _hop_edges(pairs, src, dst, directed)
+        if weight is None
+        else _cost_edges(pairs, src, dst, weight, directed, "double")
+    )
     if sources is None:
         sources = edges.select(F.col("src").alias("node")).unionAll(
             edges.select(F.col("dst").alias("node"))
@@ -1615,38 +1384,67 @@ def closeness_centrality(
         .dropDuplicates()
         .localCheckpoint(eager=True)
     )
-    state = origins.select(
-        "origin",
-        F.col("origin").alias("node"),
-        F.lit(0).cast("long").alias("hops"),
-    ).localCheckpoint(eager=True)
-    frontier = state
-    for hop in range(1, max_iter + 1):
-        reached = (
-            frontier.select("origin", F.col("node").alias("src"))
-            .join(edges, on="src")
-            .select("origin", F.col("dst").alias("node"))
-            .dropDuplicates()
-            .join(state.select("origin", "node"), on=["origin", "node"], how="leftanti")
-            .select("origin", "node", F.lit(hop).cast("long").alias("hops"))
-            .localCheckpoint(eager=True)
-        )
-        if reached.isEmpty():
-            break
-        # settled (origin, node, hops) rows never change — accumulate
-        # as a union of the pinned per-hop frontiers instead of
-        # re-checkpointing the whole state every round (same
-        # rationale as shortest_hops)
-        state = state.unionAll(reached)
-        frontier = reached
+    seeds = origins.select("origin", F.col("origin").alias("node"))
+    if weight is None:
+        state = frontier.reach(
+            edges, seeds, max_iter, what="closeness_centrality"
+        )[0]
     else:
-        raise RuntimeError(
-            "closeness_centrality: the BFS frontier was still growing "
-            f"after max_iter={max_iter} rounds — a truncated sum would "
-            "silently understate every distance; raise max_iter above "
-            "the graph's diameter"
-        )
+        # rounds needed = the max EDGE COUNT of any minimum-cost path,
+        # which can reach V-1 when many cheap hops undercut a direct edge
+        state = frontier.relax(
+            edges, seeds.withColumn("dist", F.lit(0.0)), max_iter,
+            what="closeness_centrality",
+        ).withColumnRenamed("dist", "hops")
     return _closeness_from_state(origins, state)
+
+
+def _hop_edges(pairs, src, dst, directed) -> DataFrame:
+    """Pinned distinct (src, dst) BFS edges (see :func:`_sym` for the
+    undirected view)."""
+    return (
+        pairs.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        .dropDuplicates()
+        if directed
+        else _sym(pairs, src, dst)
+    ).localCheckpoint(eager=True)
+
+
+def _cost_edges(pairs, src, dst, weight, directed, dtype) -> DataFrame:
+    """Pinned (src, dst, w) edges for a DISTANCE metric: parallel edges
+    take the CHEAPEST weight (min — unlike the flow-style operators,
+    where parallel weights sum); zero/negative/NULL weights and
+    self-loops drop; undirected adds both directions."""
+    e = pairs.select(
+        F.col(src).alias("src"),
+        F.col(dst).alias("dst"),
+        F.col(weight).cast(dtype).alias("w"),
+    ).filter((F.col("w") > 0) & (F.col("src") != F.col("dst")))
+    if not directed:
+        e = e.unionAll(
+            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
+        )
+    return e.groupBy("src", "dst").agg(F.min("w").alias("w")).localCheckpoint(
+        eager=True
+    )
+
+
+def _endpoints_and_origins(edges: DataFrame, sources: DataFrame | None):
+    """Pinned distinct edge endpoints ``(node)`` and pinned distinct
+    origins ``(origin)``: ``sources``' first column, or every
+    endpoint."""
+    all_nodes = (
+        edges.select(F.col("src").alias("node"))
+        .unionAll(edges.select(F.col("dst").alias("node")))
+        .dropDuplicates()
+        .localCheckpoint(eager=True)
+    )
+    origins = (
+        all_nodes.select(F.col("node").alias("origin"))
+        if sources is None
+        else sources.select(F.col(sources.columns[0]).alias("origin")).dropDuplicates()
+    ).localCheckpoint(eager=True)
+    return all_nodes, origins
 
 
 def _closeness_from_state(origins: DataFrame, state: DataFrame) -> DataFrame:
@@ -1734,78 +1532,22 @@ def _betweenness_weighted(
             "DAG test dist(u) + w == dist(v) needs exact arithmetic — "
             "scale fractional weights to integers first"
         )
-    w_base = pairs.select(
-        F.col(src).alias("src"),
-        F.col(dst).alias("dst"),
-        F.col(weight).cast("long").alias("w"),
-    ).filter(
-        F.col("w").isNotNull() & (F.col("w") > 0) & (F.col("src") != F.col("dst"))
-    )
-    if not directed:
-        w_base = w_base.unionAll(
-            w_base.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
-            )
-        )
-    edges = (
-        w_base.groupBy("src", "dst")
-        .agg(F.min("w").alias("w"))
-        .localCheckpoint(eager=True)
-    )
-    all_nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionAll(edges.select(F.col("dst").alias("node")))
-        .dropDuplicates()
-        .localCheckpoint(eager=True)
-    )
-    origins = (
-        all_nodes.select(F.col("node").alias("origin"))
-        if sources is None
-        else sources.select(
-            F.col(sources.columns[0]).alias("origin")
-        ).dropDuplicates()
-    ).localCheckpoint(eager=True)
+    edges = _cost_edges(pairs, src, dst, weight, directed, "long")
+    all_nodes, origins = _endpoints_and_origins(edges, sources)
     # -- (1) Bellman-Ford: settle dist(origin, node), semi-naive ------
-    state = origins.select(
-        "origin",
-        F.col("origin").alias("node"),
-        F.lit(0).cast("long").alias("dist"),
-    ).localCheckpoint(eager=True)
-    frontier = state
-    for _ in range(max_iter):
-        cand = (
-            frontier.select("origin", F.col("node").alias("src"), "dist")
-            .join(edges, on="src")
-            .groupBy("origin", F.col("dst").alias("node"))
-            .agg(F.min(F.col("dist") + F.col("w")).alias("__new"))
-        )
-        improved = (
-            cand.join(
-                state.withColumnRenamed("dist", "__old"),
-                on=["origin", "node"],
-                how="left",
-            )
-            .filter(F.col("__old").isNull() | (F.col("__new") < F.col("__old")))
-            .select("origin", "node", F.col("__new").alias("dist"))
-            .localCheckpoint(eager=True)
-        )
-        if improved.isEmpty():
-            break
-        state = (
-            state.unionAll(improved)
-            .groupBy("origin", "node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
-        )
-        frontier = improved
-    else:
-        raise RuntimeError(
-            "betweenness_centrality: distances were still relaxing "
-            f"after max_iter={max_iter} rounds — a truncated "
-            "Bellman-Ford would corrupt the shortest-path DAG; raise "
-            "max_iter (rounds needed = the max EDGE COUNT of any "
-            "minimum-cost path)"
-        )
+    state = frontier.relax(
+        edges,
+        origins.select(
+            "origin",
+            F.col("origin").alias("node"),
+            F.lit(0).cast("long").alias("dist"),
+        ),
+        max_iter,
+        what="betweenness_centrality",
+        hint="a truncated Bellman-Ford would corrupt the shortest-path "
+        "DAG; raise max_iter (rounds needed = the max EDGE COUNT of any "
+        "minimum-cost path)",
+    )
     # -- (2) rank = dense_rank(dist) per origin: a topological
     #    layering of the DAG in one window shuffle (partitioned by
     #    origin — never SinglePartition; plan-pinned on _dag_rank)
@@ -1933,24 +1675,9 @@ def betweenness_centrality(
         return _betweenness_weighted(
             pairs, sources, src, dst, directed, max_iter, weight
         )
-    edges = (
-        pairs.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .dropDuplicates()
-        if directed
-        else _sym(pairs, src, dst)
-    ).localCheckpoint(eager=True)
-    all_nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionAll(edges.select(F.col("dst").alias("node")))
-        .dropDuplicates()
-        .localCheckpoint(eager=True)
-    )
-    origins = (
-        all_nodes.select(F.col("node").alias("origin"))
-        if sources is None
-        else sources.select(F.col(sources.columns[0]).alias("origin")).dropDuplicates()
-    ).localCheckpoint(eager=True)
-    # r13: both passes run under the pinned static layout (AQE off so
+    edges = _hop_edges(pairs, src, dst, directed)
+    all_nodes, origins = _endpoints_and_origins(edges, sources)
+    # both passes run under the pinned static layout (AQE off so
     # per-level checkpoints keep their hash layout and exchanges stop
     # materializing one job each; size-derived partitions) — the
     # settled state is at most |origins| x |nodes| rows, the honest
@@ -1972,46 +1699,21 @@ def _betweenness_unweighted_inner(
     max_iter: int,
 ) -> DataFrame:
     """Both Brandes passes of :func:`betweenness_centrality`, run
-    under the caller's pinned layout. Per-level checkpoints are LAZY
-    (walk-loop discipline): the forward pass's one ``isEmpty`` probe
-    per level materializes that level, the backward pass rides the
-    final action; math is expression-identical either way."""
-    # -- forward: settle (origin, node) -> (lvl, sigma), level by level
-    state = origins.select(
-        "origin",
-        F.col("origin").alias("node"),
-        F.lit(0).alias("lvl"),
-        F.lit(1).cast("double").alias("sigma"),
-    ).localCheckpoint(eager=True)
-    frontier = state
-    levels = [state]  # per-level checkpoints; settled rows never change
-    depth = 0
-    for lvl in range(1, max_iter + 1):
-        nxt = (
-            frontier.select("origin", F.col("node").alias("src"), "sigma")
-            .join(edges, on="src")
-            .groupBy("origin", F.col("dst").alias("node"))
-            .agg(F.sum("sigma").alias("sigma"))
-            .join(state.select("origin", "node"), on=["origin", "node"], how="leftanti")
-            .select("origin", "node", F.lit(lvl).alias("lvl"), "sigma")
-            .localCheckpoint(eager=False)
-        )
-        if nxt.isEmpty():
-            break
-        # accumulate as a union of the pinned level frames instead of
-        # re-checkpointing the whole state each round (hops/sigma are
-        # final once settled — same rationale as shortest_hops)
-        state = state.unionAll(nxt)
-        levels.append(nxt)
-        frontier = nxt
-        depth = lvl
-    else:
-        raise RuntimeError(
-            "betweenness_centrality: the BFS frontier was still growing "
-            f"after max_iter={max_iter} rounds — truncated levels would "
-            "corrupt every dependency; raise max_iter above the graph's "
-            "diameter"
-        )
+    under the caller's pinned layout. The forward pass is a
+    :func:`frontier.reach` loop with sigma; the backward pass's
+    per-level checkpoints are lazy and ride the final action."""
+    # -- forward: settle (origin, node) -> (hops, sigma), level by level
+    levels = frontier.reach(
+        edges,
+        origins.select(
+            "origin",
+            F.col("origin").alias("node"),
+            F.lit(1).cast("double").alias("sigma"),
+        ),
+        max_iter,
+        what="betweenness_centrality",
+    )[1]
+    depth = len(levels) - 1
     # -- backward: each (origin, node)'s delta is a function of the
     # level ABOVE it only, so it is computed exactly once — process
     # one level frame at a time (per-round work ∝ that level's size,

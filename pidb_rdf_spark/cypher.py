@@ -147,6 +147,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pidb_rdf_spark import frontier
 from pidb_rdf_spark.graph import NODE_CORE, SIDECAR_COLS, PropertyGraph
 
 
@@ -1601,9 +1602,10 @@ def _bind_rel(c: _Compile, rel: RelPat, prev: str, pat_next: NodePat) -> str:
 
 def _bind_shortest(c: _Compile, sp: ShortestPat) -> None:
     """Bind ``p = shortestPath((a)-[:T*..m]->(b))``: a multi-source
-    BFS keyed by origin — semi-naive, each round expands ONLY the
-    newly-settled frontier through one equi-join, so total work is
-    O(origin-node pairs reached), never all-pairs. The path variable
+    BFS keyed by origin (:func:`frontier.reach`) — semi-naive, each
+    round expands ONLY the newly-settled frontier through one
+    equi-join, so total work is O(origin-node pairs reached), never
+    all-pairs. The path variable
     binds the hop count; the subset exposes it through ``length(p)``
     only (Neo4j's path object has no DataFrame analog).
 
@@ -1643,92 +1645,46 @@ def _bind_shortest(c: _Compile, sp: ShortestPat) -> None:
         )
     else:
         edges = fwd
-    # the loop re-scans the edge set every round: pin it once
-    edges = edges.localCheckpoint(eager=True)
     # sigma = number of distinct shortest paths to the node (Brandes'
     # forward-pass recurrence: new arrivals sum their frontier
     # predecessors' counts; parallel edges count as distinct paths).
     # Plain shortestPath ignores it; allShortestPaths emits each pair
-    # sigma times (bag semantics).
-    dist = (
+    # sigma times (bag semantics). An UNBOUNDED * pattern gets a
+    # default 50-round budget that raises when it runs out; an
+    # explicit *..m upper bound is the user's own cap and never raises.
+    dist = frontier.reach(
+        edges.localCheckpoint(eager=True),
         c.cur.select(F.col(a).alias("origin"))
         .dropDuplicates()
         .select(
             "origin",
             F.col("origin").alias("node"),
-            F.lit(0).cast("long").alias("hops"),
             F.lit(1).cast("long").alias("sigma"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    frontier = dist
-    # an UNBOUNDED * pattern gets a default round budget; if BFS is
-    # still expanding when it runs out we RAISE — silently reporting
-    # farther pairs as unreachable would be a wrong answer, not an
-    # approximation (an explicit *..m upper bound is the user's own
-    # cap and never raises)
-    bounded = rel.max_len is not None
-    limit = rel.max_len if bounded else 50
-    settled = False
-    for hop in range(1, limit + 1):
-        reached = (
-            frontier.select("origin", F.col("node").alias("src"), "sigma")
-            .join(edges, on="src")
-            .select("origin", F.col("dst").alias("node"), "sigma")
-            .groupBy("origin", "node")
-            .agg(F.sum("sigma").alias("sigma"))
-            .join(
-                dist.select("origin", "node"),
-                on=["origin", "node"],
-                how="leftanti",
-            )
-            .select(
-                "origin",
-                "node",
-                F.lit(hop).cast("long").alias("hops"),
-                "sigma",
-            )
-            .localCheckpoint(eager=True)
-        )
-        if reached.isEmpty():
-            settled = True
-            break
-        dist = dist.unionAll(reached).localCheckpoint(eager=True)
-        frontier = reached
-    if not settled and not bounded:
-        raise CypherSyntaxError(
-            "shortestPath: BFS still expanding after the default "
-            "50-hop budget on an unbounded * pattern — add an "
-            "explicit upper bound (e.g. *..100) sized to the "
-            "graph's diameter"
-        )
+        ),
+        50 if rel.max_len is None else rel.max_len,
+        bounded=rel.max_len is not None,
+        what="shortestPath",
+        hint="add an explicit upper bound (e.g. *..100) sized to the "
+        "graph's diameter",
+    )[0]
     if rel.min_len >= 1:
         dist = dist.filter(F.col("hops") >= 1)
     sig = c.fresh("sig") if sp.all_paths else None
     extra = [F.col("sigma").alias(sig)] if sp.all_paths else []
+    nxt = b_pat.var or c.fresh("n")
+    far = c.fresh("j") if b_bound else nxt
+    c.cur = c.cur.join(
+        dist.select(
+            F.col("origin").alias(a),
+            F.col("node").alias(far),
+            F.col("hops").alias(sp.path_var),
+            *extra,
+        ),
+        on=a,
+    )
     if b_bound:
-        tmp = c.fresh("j")
-        hopf = dist.select(
-            F.col("origin").alias(a),
-            F.col("node").alias(tmp),
-            F.col("hops").alias(sp.path_var),
-            *extra,
-        )
-        c.cur = (
-            c.cur.join(hopf, on=a)
-            .filter(F.col(tmp) == F.col(b_pat.var))
-            .drop(tmp)
-        )
-        nxt = b_pat.var
+        c.cur = c.cur.filter(F.col(far) == F.col(nxt)).drop(far)
     else:
-        nxt = b_pat.var or c.fresh("n")
-        hopf = dist.select(
-            F.col("origin").alias(a),
-            F.col("node").alias(nxt),
-            F.col("hops").alias(sp.path_var),
-            *extra,
-        )
-        c.cur = c.cur.join(hopf, on=a)
         c.kinds[nxt] = "node"
     if b_pat.labels or b_pat.label_alts or b_pat.props:
         c.cur = c.cur.join(

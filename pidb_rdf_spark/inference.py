@@ -27,6 +27,7 @@ from collections import OrderedDict
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pidb_rdf_spark import frontier
 from pidb_rdf_spark.graph import PropertyGraph
 
 # hierarchy kinds, reference LiteOntologyImporter.java:136-147,185-195
@@ -68,9 +69,13 @@ def transitive_closure(
     Equivalent semantics to Cypher ``(a)<-[:KIND*]-(d)`` in the
     reference's closure queries (``MicroReasoners.java:20-22``).
 
+    The distributed fixpoint is a :func:`frontier.reach` loop keyed by
+    the descendant; ``max_iter`` is a round budget that raises when it
+    runs out (:mod:`pidb_rdf_spark.frontier` states the policy).
+
     ``small_cap``: if set and the (deduplicated) edge set has at most
     that many rows, the closure is computed driver-side in one collect
-    instead of ~2 Spark jobs per fixpoint round. Ontology hierarchies
+    instead of one Spark job per fixpoint round. Ontology hierarchies
     are vocabulary-sized by construction (same bound as
     ``graph.MAX_SCHEMA_KEYS``), so ``sub_closure`` passes a cap;
     data-sized closures (reachability over rows) keep ``None`` and run
@@ -78,62 +83,35 @@ def transitive_closure(
     """
     base = edges.select(F.col(child).alias("child"), F.col(parent).alias("parent")).dropDuplicates()
     if small_cap is not None:
-        # probe the RAW pair set first (r14): a bare limit+collect
+        # probe the RAW pair set first: a bare limit+collect
         # needs no shuffle (the limit pushes into the scan), where
         # probing the deduplicated frame pays the dropDuplicates
         # exchange — one near-empty task per input partition — before
         # a single row comes back. raw ≤ cap ⟹ dedup ≤ cap, and
         # _closure_driver_side dedups via its pair set anyway; only
         # when raw overflows is the dedup probe worth its shuffle.
-        raw = edges.select(
+        rows = edges.select(
             F.col(child).alias("child"), F.col(parent).alias("parent")
         ).limit(small_cap + 1).collect()
-        if len(raw) <= small_cap:
+        if len(rows) > small_cap:
+            rows = base.limit(small_cap + 1).collect()
+        if len(rows) <= small_cap:
             out = _closure_driver_side(
-                edges.sparkSession, base.schema, raw, include_self,
+                edges.sparkSession, base.schema, rows, include_self,
                 max_pairs=_DRIVER_CLOSURE_MAX_PAIRS,
             )
             if out is not None:
                 return out
-        else:
-            probe = base.limit(small_cap + 1).collect()
-            if len(probe) <= small_cap:
-                out = _closure_driver_side(
-                    edges.sparkSession, base.schema, probe, include_self,
-                    max_pairs=_DRIVER_CLOSURE_MAX_PAIRS,
-                )
-                if out is not None:
-                    return out
+    # the seeds ARE the hop-1 pairs: origin = child, node = parent;
+    # each round extends paths by exactly ONE base edge, so a budget
+    # that runs out means depth > max_iter+1 remains
     base = base.localCheckpoint(eager=True)
-    closure = base
-    frontier = base
-    up = base.select(
-        F.col("child").alias("__mid"), F.col("parent").alias("__anc")
-    )
-    settled = False
-    for _ in range(max_iter):
-        new = (
-            frontier.join(up, on=frontier["parent"] == up["__mid"], how="inner")
-            .select(F.col("child"), F.col("__anc").alias("parent"))
-            .dropDuplicates()
-            .join(closure, on=["child", "parent"], how="leftanti")
-        )
-        new = new.localCheckpoint(eager=True)
-        if new.isEmpty():
-            settled = True
-            break
-        closure = closure.unionAll(new).localCheckpoint(eager=True)
-        frontier = new
-    if not settled:
-        # each round extends paths by exactly ONE base edge, so
-        # exhaustion means depth > max_iter+1 remains — a silently
-        # truncated closure would answer reachability/label queries
-        # WRONG (the core_numbers loud-failure contract)
-        raise RuntimeError(
-            f"transitive_closure: still growing after max_iter="
-            f"{max_iter} rounds (closure depth exceeds {max_iter + 1} "
-            f"— raise max_iter; each round is one frontier join)"
-        )
+    closure = frontier.reach(
+        base.select(F.col("child").alias("src"), F.col("parent").alias("dst")),
+        base.select(F.col("child").alias("origin"), F.col("parent").alias("node")),
+        max_iter,
+        what="transitive_closure",
+    )[0].select(F.col("origin").alias("child"), F.col("node").alias("parent"))
     if include_self:
         nodes = (
             closure.select(F.col("child").alias("n"))

@@ -1,5 +1,6 @@
-"""Property-based tests (hypothesis): transitive closure vs a pure-
-Python oracle on random graphs, and RDF import→export→parse
+"""Property-based tests (hypothesis): transitive closure and the
+other frontier loops (BFS hops, sssp, closeness, betweenness) vs pure-
+Python oracles on random graphs, and RDF import→export→parse
 round-trips on random triple sets (SURVEY.md §5.4-5.5).
 
 Example counts are small — every example runs Spark jobs — but the
@@ -225,6 +226,112 @@ def test_star_components_match_union_find(spark, pairs):
         for r in connected_components(df).collect()
     }
     assert got_star == got_minlabel
+
+
+def _py_bfs(pairs, sources, directed=True):
+    """Multi-source BFS hop counts (nearest source wins)."""
+    from collections import deque
+
+    adj: dict = {}
+    for a, b in pairs:
+        adj.setdefault(a, set()).add(b)
+        if not directed and a != b:
+            adj.setdefault(b, set()).add(a)
+    dist = dict.fromkeys(sources, 0)
+    q = deque(sources)
+    while q:
+        u = q.popleft()
+        for v in adj.get(u, ()):
+            if v not in dist:
+                dist[v] = dist[u] + 1
+                q.append(v)
+    return dist
+
+
+@SLOW
+@given(pairs=edges_strategy, sources=st.sets(st.integers(0, 12), min_size=1, max_size=3))
+def test_shortest_hops_matches_python_bfs(spark, pairs, sources):
+    from pidb_rdf_spark.analytics import shortest_hops
+
+    df = spark.createDataFrame(pairs, "src long, dst long")
+    s = spark.createDataFrame([(x,) for x in sources], "id long")
+    for directed in (True, False):
+        got = dict(map(tuple, shortest_hops(df, s, directed=directed).collect()))
+        assert got == _py_bfs(pairs, sorted(sources), directed)
+
+
+def _py_sssp(wpairs, sources, rounds):
+    """``rounds`` naive directed Bellman-Ford rounds."""
+    dist = dict.fromkeys(sources, 0)
+    for _ in range(rounds):
+        nxt = dict(dist)
+        for a, b, w in wpairs:
+            if a in dist and dist[a] + w < nxt.get(b, float("inf")):
+                nxt[b] = dist[a] + w
+        dist = nxt
+    return dist
+
+
+@SLOW
+@given(
+    wpairs=st.lists(
+        st.tuples(st.integers(0, 12), st.integers(0, 12), st.integers(0, 9)),
+        min_size=1,
+        max_size=25,
+    ),
+    rounds=st.sampled_from([1, 2, 3, 30]),
+)
+def test_sssp_matches_naive_rounds(spark, wpairs, rounds):
+    """Bounded (few rounds) or converged (30 > any path's edge count
+    here), sssp equals ``rounds`` naive Bellman-Ford rounds."""
+    from pidb_rdf_spark.analytics import sssp
+
+    df = spark.createDataFrame(wpairs, "src long, dst long, weight long")
+    s = spark.createDataFrame([(0,)], "node long")
+    got = dict(map(tuple, sssp(df, s, max_iter=rounds).collect()))
+    assert got == _py_sssp(wpairs, [0], rounds)
+
+
+@SLOW
+@given(pairs=edges_strategy)
+def test_closeness_matches_python_bfs(spark, pairs):
+    from pidb_rdf_spark.analytics import closeness_centrality
+
+    df = spark.createDataFrame(pairs, "src long, dst long")
+    got = {
+        r["node"]: (r["n_reached"], r["sum_hops"], r["harmonic"])
+        for r in closeness_centrality(df).collect()
+    }
+    nodes = {x for a, b in pairs if a != b for x in (a, b)}
+    want = {}
+    for n in nodes:
+        hops = [h for h in _py_bfs(pairs, [n], directed=False).values() if h > 0]
+        want[n] = (len(hops), sum(hops), sum(1.0 / h for h in hops))
+    assert got.keys() == want.keys()
+    for n, (cnt, tot, harm) in want.items():
+        assert got[n][:2] == (cnt, tot)
+        assert got[n][2] == pytest.approx(harm)
+
+
+@SLOW
+@given(pairs=edges_strategy, directed=st.booleans())
+def test_betweenness_matches_brute_force(spark, pairs, directed):
+    from test_analytics import _brute_betweenness
+
+    from pidb_rdf_spark.analytics import betweenness_centrality
+
+    # the directed edge view keeps self-loops (their nodes score 0),
+    # the undirected one drops them
+    edges = sorted({(a, b) for a, b in pairs if directed or a != b})
+    df = spark.createDataFrame(pairs, "src long, dst long")
+    got = {
+        r["node"]: r["betweenness"]
+        for r in betweenness_centrality(df, directed=directed).collect()
+    }
+    want = _brute_betweenness(edges, directed=directed)
+    assert got.keys() == want.keys()
+    for n, v in want.items():
+        assert got[n] == pytest.approx(v)
 
 
 def _py_ktruss(pairs, k):

@@ -132,17 +132,11 @@ def main() -> None:
                 stage_shuffle.setdefault(sid, [0, 0])
                 stage_shuffle[sid][0] += srm.get("Remote Bytes Read", 0) + srm.get("Local Bytes Read", 0)
                 stage_shuffle[sid][1] += swm.get("Shuffle Bytes Written", 0)
-            elif et == "SparkListenerStageCompleted":
-                pass
 
     # attribute jobs to entries by job description
     for name in args.names:
         t0, t1, tb = marks[name]
         sel = [j for j in jobs if j.get("desc") == f"entry:{name}"]
-        n_tasks = 0
-        for j in sel:
-            pass
-        # tasks per entry: stages belonging to those jobs
         print(f"\n=== {name}: wall {t1 - t0:.2f}s (build {tb:.2f}s), "
               f"{len(sel)} jobs ===")
         tot_sh = 0
