@@ -8,8 +8,10 @@ executed through the embedded Neo4j engine
 ``semantics/inference/MicroReasoners.java:20-22``). Here the same
 query text compiles to DataFrame joins — each node pattern is a
 filtered scan of the nodes table, each relationship a hash join
-through the edges table, WHERE/property predicates become Catalyst
-filters pushed to the parquet scan, and RETURN aggregation uses
+through the edges table, every property the query reads of a pattern
+variable is projected by the scan that binds it, WHERE/property
+predicates become Catalyst filters pushed to the parquet scan, and
+RETURN aggregation uses
 Cypher's implicit grouping (group by every non-aggregate item).
 
 Supported subset (the shapes the reference's own code and tests
@@ -141,7 +143,7 @@ from __future__ import annotations
 
 import re
 import warnings
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, fields, is_dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -1354,6 +1356,9 @@ class _Compile:
     params: dict | None = None
     kinds: dict = field(default_factory=dict)  # var -> "node" | "rel"
     prop_cols: dict = field(default_factory=dict)  # (var, prop) -> col name
+    # var -> every prop the whole query reads of it (_query_reads):
+    # the columns a scan binding that var projects
+    reads: dict = field(default_factory=dict)
     # every single-hop relationship column (named or anonymous) with
     # its type restriction, for Cypher's relationship-uniqueness rule
     rel_cols: list = field(default_factory=list)  # (col, frozenset(types))
@@ -1391,8 +1396,14 @@ def _pat_value(expr: tuple, params: dict | None):
 
 
 def _node_frame(
-    g: PropertyGraph, pat: NodePat, var: str, params: dict | None = None
+    g: PropertyGraph,
+    pat: NodePat,
+    var: str,
+    params: dict | None = None,
+    cols: list = (),
 ) -> DataFrame:
+    """The label- and property-filtered node scan: ``id`` as ``var``
+    plus the scan columns ``cols`` (from :func:`_scan_cols`)."""
     nd = g.nodes
     for lab in pat.labels:
         nd = nd.filter(F.array_contains(F.col("labels"), lab))
@@ -1403,7 +1414,85 @@ def _node_frame(
         nd = nd.filter(cond)
     for k, v in pat.props.items():
         nd = nd.filter(g.node_prop(k) == F.lit(_pat_value(v, params)))
-    return nd.select(F.col("id").alias(var))
+    return nd.select(F.col("id").alias(var), *cols)
+
+
+_NODE_ONLY = {"__labels__"}
+_REL_ONLY = {"__type__", "__src__", "__dst__"}
+
+
+def _prop_col(g: PropertyGraph, kind: str, var: str, p: str) -> Column:
+    """``var.p`` read from ``var``'s own row of the nodes (``kind`` =
+    "node") or edges table; ``p`` may be a pseudo-prop collected by
+    :func:`_collect_props` (``labels()``, ``type()``, ``startNode()``
+    / ``endNode()``, ``properties()``/``keys()``, ``v[key]``)."""
+    if p in _NODE_ONLY and kind != "node":
+        raise CypherSyntaxError(f"labels() needs a node, got {var!r}")
+    if p in _REL_ONLY and kind != "rel":
+        what = "type() needs" if p == "__type__" else "startNode()/endNode() need"
+        raise CypherSyntaxError(f"{what} a relationship, got {var!r}")
+    if p == "__labels__":
+        return F.col("labels")
+    if p == "__type__":
+        return F.col("predicate")
+    if p in ("__src__", "__dst__"):
+        return F.col("src" if p == "__src__" else "dst")
+    if p in ("__props__", "__dynprops__"):
+        # the full property map: a node's schemaless props merged with
+        # its typed hot columns (stringified — the map is
+        # map<string,string>, the reference's storage dtype)
+        hot = [
+            col
+            for col in g.nodes.columns
+            if col not in NODE_CORE and col not in SIDECAR_COLS
+        ] if kind == "node" else []
+        if not hot:
+            return F.col("props")
+        pairs: list = []
+        for h in hot:
+            pairs.extend([F.lit(h), F.col(h).cast("string")])
+        return F.map_concat(
+            F.map_filter(F.col("props"), lambda k, _: ~k.isin(hot)),
+            F.map_filter(F.create_map(*pairs), lambda _, v: v.isNotNull()),
+        )
+    if kind == "node":
+        return g.node_prop(p)
+    return F.col("props")[p]
+
+
+def _scan_cols(c: _Compile, var: str, kind: str) -> list:
+    """The ``__p_`` columns a fresh scan binding of ``var`` projects:
+    every property the query reads of ``var`` (``c.reads``) that a
+    ``kind`` entity can have, registered in ``c.prop_cols``. Pseudo-
+    props of the other kind stay unregistered, so reading them raises
+    in :func:`_materialize_props`."""
+    wrong = _REL_ONLY if kind == "node" else _NODE_ONLY
+    cols = []
+    for p in sorted(c.reads.get(var, ())):
+        if p in wrong:
+            continue
+        cname = f"__p_{var}_{p}"
+        c.prop_cols[(var, p)] = cname
+        cols.append(_prop_col(c.graph, kind, var, p).alias(cname))
+    return cols
+
+
+def _join_node(c: _Compile, pat: NodePat, var: str, fresh: bool) -> None:
+    """Apply a node pattern's label/property constraints to ``var``,
+    already an id column of the frame (a hop's far end, or a variable
+    bound by an earlier pattern). A ``fresh`` binding also takes its
+    scan columns — one join with the filtered node scan does both:
+    inner when constrained, left when only columns are attached (a
+    dangling edge end keeps its row, its properties null), semi when
+    only constrained."""
+    cols = _scan_cols(c, var, "node") if fresh else []
+    constrained = bool(pat.labels or pat.label_alts or pat.props)
+    if not (cols or constrained):
+        return
+    how = ("inner" if constrained else "left") if cols else "leftsemi"
+    c.cur = c.cur.join(
+        _node_frame(c.graph, pat, var, c.params, cols), on=var, how=how
+    )
 
 
 def _bind_node(c: _Compile, pat: NodePat) -> str:
@@ -1413,13 +1502,11 @@ def _bind_node(c: _Compile, pat: NodePat) -> str:
     if pat.var is not None and pat.var in c.kinds:
         if c.kinds[var] != "node":
             raise CypherSyntaxError(f"variable {var!r} bound as both node and relationship")
-        # already bound: apply any extra label/prop constraints as a semi-join
-        if pat.labels or pat.label_alts or pat.props:
-            keep = _node_frame(g, pat, var, c.params)
-            c.cur = c.cur.join(keep, on=var, how="leftsemi")
+        # already bound: extra label/prop constraints are a semi-join
+        _join_node(c, pat, var, fresh=False)
         return var
     c.kinds[var] = "node"
-    nd = _node_frame(g, pat, var, c.params)
+    nd = _node_frame(g, pat, var, c.params, _scan_cols(c, var, "node"))
     if c.cur is None:
         c.cur = nd
     else:
@@ -1551,8 +1638,7 @@ def _bind_rel(c: _Compile, rel: RelPat, prev: str, pat_next: NodePat) -> str:
             hop = pairs.select(F.col(here).alias(prev), F.col(there).alias(nxt))
             c.cur = c.cur.join(hop, on=prev)
             c.kinds[nxt] = "node"
-        if pat_next.labels or pat_next.label_alts or pat_next.props:
-            c.cur = c.cur.join(_node_frame(g, pat_next, nxt, c.params), on=nxt, how="leftsemi")
+        _join_node(c, pat_next, nxt, fresh=not nxt_bound)
         return nxt
 
     rvar = rel.var or c.fresh("r")
@@ -1566,37 +1652,29 @@ def _bind_rel(c: _Compile, rel: RelPat, prev: str, pat_next: NodePat) -> str:
     if rel.types:
         e = e.filter(F.col("predicate").isin(rel.types))
     for k, v in rel.props.items():
-        e = e.filter(
-            F.col("props").getItem(k) == F.lit(str(_pat_value(v, c.params)))
-        )
+        e = e.filter(F.col("props")[k] == F.lit(str(_pat_value(v, c.params))))
     # the far column gets a temp name when its variable is already
     # bound — including the self-loop pattern (n)-[:T]->(n), where
     # aliasing both ends to the same name would collide
     far = c.fresh("j") if nxt_bound else nxt
-    if rel.direction == "out":
-        hop = e.select(
-            F.col("src").alias(prev), F.col("dst").alias(far), F.col("id").alias(rvar)
+    rcols = _scan_cols(c, rvar, "rel")
+    hop = None
+    for here, there in {
+        "out": [("src", "dst")],
+        "in": [("dst", "src")],
+        "both": [("src", "dst"), ("dst", "src")],  # either orientation
+    }[rel.direction]:
+        h = e.select(
+            F.col(here).alias(prev), F.col(there).alias(far),
+            F.col("id").alias(rvar), *rcols,
         )
-    elif rel.direction == "in":
-        hop = e.select(
-            F.col("dst").alias(prev), F.col("src").alias(far), F.col("id").alias(rvar)
-        )
-    else:  # undirected: either orientation
-        hop = e.select(
-            F.col("src").alias(prev), F.col("dst").alias(far), F.col("id").alias(rvar)
-        ).unionAll(
-            e.select(
-                F.col("dst").alias(prev), F.col("src").alias(far), F.col("id").alias(rvar)
-            )
-        )
+        hop = h if hop is None else hop.unionAll(h)
     if nxt_bound:
         c.cur = c.cur.join(hop, on=prev).filter(F.col(far) == F.col(nxt)).drop(far)
     else:
         c.kinds[nxt] = "node"
         c.cur = c.cur.join(hop, on=prev)
-    if pat_next.labels or pat_next.label_alts or pat_next.props:
-        keep = _node_frame(c.graph, pat_next, nxt, c.params)
-        c.cur = c.cur.join(keep, on=nxt, how="leftsemi")
+    _join_node(c, pat_next, nxt, fresh=not nxt_bound)
     return nxt
 
 
@@ -1686,10 +1764,7 @@ def _bind_shortest(c: _Compile, sp: ShortestPat) -> None:
         c.cur = c.cur.filter(F.col(far) == F.col(nxt)).drop(far)
     else:
         c.kinds[nxt] = "node"
-    if b_pat.labels or b_pat.label_alts or b_pat.props:
-        c.cur = c.cur.join(
-            _node_frame(g, b_pat, nxt, c.params), on=nxt, how="leftsemi"
-        )
+    _join_node(c, b_pat, nxt, fresh=not b_bound)
     if sp.all_paths:
         # bag multiplicity AFTER the endpoint filters (never explode
         # rows a label/prop constraint is about to drop)
@@ -1708,15 +1783,27 @@ def _qcol(name: str) -> Column:
 
 
 def _collect_props(expr, acc: set) -> None:
+    """Add every ``(var, prop)`` read in ``expr`` to ``acc``. Also
+    walks parsed clauses: patterns, projections and nested subqueries
+    through their fields (inline WHERE, CALL bodies)."""
     if expr is None:
         return
     if isinstance(expr, list):
         for e in expr:
             _collect_props(e, acc)
         return
+    if is_dataclass(expr):
+        for f in fields(expr):
+            _collect_props(getattr(expr, f.name), acc)
+        return
+    if isinstance(expr, dict):  # pattern property values
+        _collect_props(list(expr.values()), acc)
+        return
     if not isinstance(expr, tuple) or not expr:
         return
     if isinstance(expr[0], str):
+        if expr[0] == "callproc":  # YIELD names, not expressions
+            return
         if expr[0] == "prop":
             acc.add((expr[1], expr[2]))
             return
@@ -1761,10 +1848,27 @@ def _collect_props(expr, acc: set) -> None:
         _collect_props(part, acc)
 
 
+def _query_reads(q: CypherQuery) -> dict:
+    """var -> every property the query reads of it, anywhere (WHERE,
+    projections, inline predicates, subqueries): what each scan
+    binding projects. A name reused across scopes only over-projects
+    columns Catalyst prunes."""
+    acc: set = set()
+    _collect_props(q.clauses, acc)
+    reads: dict = {}
+    for var, prop in acc:
+        reads.setdefault(var, set()).add(prop)
+    return reads
+
+
 def _materialize_props(c: _Compile, needed: set) -> None:
-    """Join each referenced var.prop in as a concrete column (one
-    projection join per variable — column-pruned scans, broadcast-
-    eligible)."""
+    """Make each referenced var.prop a concrete column of the frame.
+    A pattern variable's scan already projected it (:func:`_scan_cols`,
+    forwarded through WITH and into correlated blocks), so what is left
+    here is property access on WITH/UNWIND values — plain column
+    expressions — and the fallback for a node/relationship id that no
+    scan bound (a variable returned by a CALL subquery): one left join
+    of the node or edge table on that id per variable."""
     g = c.graph
     by_var: dict[str, list[str]] = {}
     for var, prop in needed:
@@ -1815,53 +1919,7 @@ def _materialize_props(c: _Compile, needed: set) -> None:
         for p in props:
             cname = f"__p_{var}_{p}"
             c.prop_cols[(var, p)] = cname
-            if p == "__labels__":
-                if kind != "node":
-                    raise CypherSyntaxError(f"labels() needs a node, got {var!r}")
-                cols.append(F.col("labels").alias(cname))
-            elif p == "__type__":
-                if kind != "rel":
-                    raise CypherSyntaxError(f"type() needs a relationship, got {var!r}")
-                cols.append(F.col("predicate").alias(cname))
-            elif p in ("__src__", "__dst__"):
-                if kind != "rel":
-                    raise CypherSyntaxError(
-                        f"startNode()/endNode() need a relationship, got {var!r}"
-                    )
-                cols.append(
-                    F.col("src" if p == "__src__" else "dst").alias(cname)
-                )
-            elif p in ("__props__", "__dynprops__"):
-                # the full property map: schemaless props merged with
-                # the typed hot columns (stringified — the map is
-                # map<string,string>, the reference's storage dtype)
-                if kind == "node":
-                    hot = [
-                        col
-                        for col in g.nodes.columns
-                        if col not in NODE_CORE and col not in SIDECAR_COLS
-                    ]
-                    m = F.col("props")
-                    if hot:
-                        pairs: list = []
-                        for h in hot:
-                            pairs.extend([F.lit(h), F.col(h).cast("string")])
-                        m = F.map_concat(
-                            F.map_filter(
-                                F.col("props"), lambda k, _: ~k.isin(hot)
-                            ),
-                            F.map_filter(
-                                F.create_map(*pairs),
-                                lambda _, v: v.isNotNull(),
-                            ),
-                        )
-                    cols.append(m.alias(cname))
-                else:
-                    cols.append(F.col("props").alias(cname))
-            elif kind == "node":
-                cols.append(g.node_prop(p).alias(cname))
-            else:
-                cols.append(F.col("props").getItem(p).alias(cname))
+            cols.append(_prop_col(g, kind, var, p).alias(cname))
         side = (g.nodes if kind == "node" else g.edges).select(
             F.col("id").alias(var), *cols
         )
@@ -2983,6 +3041,24 @@ def _pattern_vars(pats: list) -> list:
     return out
 
 
+def _keyed_compile(c: _Compile, shared: list, allow_cartesian: bool) -> _Compile:
+    """The state a correlated block (OPTIONAL MATCH, EXISTS/COUNT/
+    COLLECT, CALL) compiles in: the DISTINCT values of its ``shared``
+    variables, with the scan columns they carry (functions of the
+    key, so deduplicating on the key alone keeps them)."""
+    c2 = _Compile(
+        c.graph, allow_cartesian=allow_cartesian, params=c.params, reads=c.reads
+    )
+    c2.anon = c.anon
+    c2.kinds = {v: c.kinds[v] for v in shared}
+    if shared:
+        c2.prop_cols = {k: col for k, col in c.prop_cols.items() if k[0] in shared}
+        c2.cur = c.cur.select(*shared, *c2.prop_cols.values()).dropDuplicates(
+            shared
+        )
+    return c2
+
+
 def _bind_optional_match(c: _Compile, pats: list, where: tuple | None) -> None:
     """OPTIONAL MATCH = compile the block against the distinct values
     of its shared variables, then LEFT-join it back: unmatched rows
@@ -3009,10 +3085,7 @@ def _bind_optional_match(c: _Compile, pats: list, where: tuple | None) -> None:
             "OPTIONAL MATCH must share at least one variable with a "
             "previous MATCH in this subset"
         )
-    c2 = _Compile(c.graph, allow_cartesian=c.allow_cartesian, params=c.params)
-    c2.anon = c.anon
-    c2.kinds = {v: c.kinds[v] for v in shared}
-    c2.cur = c.cur.select(*shared).dropDuplicates()
+    c2 = _keyed_compile(c, shared, c.allow_cartesian)
     if is_sp:
         # OPTIONAL reachability: run the BFS over the distinct shared
         # origins, then LEFT-join — unreached rows keep NULL for the
@@ -3031,15 +3104,19 @@ def _bind_optional_match(c: _Compile, pats: list, where: tuple | None) -> None:
         _collect_props(where, block_props)
         _materialize_props(c2, block_props)
         c2.cur = c2.cur.filter(_to_col(c2, where))
-        c2.cur = c2.cur.drop(*[c2.prop_cols[k] for k in block_props])
         for extra in set(c2.kinds) - pre_kinds:  # subquery count columns
             c2.cur = c2.cur.drop(extra)
             del c2.kinds[extra]
     c.anon = c2.anon
     new_vars = [v for v in c2.kinds if v not in c.kinds]
     c.kinds.update({v: c2.kinds[v] for v in new_vars})
+    # the block's scan columns ride the left join (null when unmatched)
+    new_props = {k: col for k, col in c2.prop_cols.items() if k[0] in new_vars}
+    c.prop_cols.update(new_props)
     c.cur = c.cur.join(
-        c2.cur.select(*shared, *new_vars), on=shared, how="left"
+        c2.cur.select(*shared, *new_vars, *new_props.values()),
+        on=shared,
+        how="left",
     )
 
 
@@ -3095,6 +3172,11 @@ def _apply_projection(c: _Compile, proj: Projection) -> tuple:
         raise CypherSyntaxError(
             f"multiple result columns with the same name {dup!r}"
         )
+    # a WITH forwards the scan columns of the variables it passes on
+    carry = {
+        f"__p_{name}_{p}": col
+        for (name, p), col in _with_carry(c, proj, names).items()
+    }
     aggregating = any(_has_agg(it.expr) for it in proj.items)
     if aggregating:
         keys = [
@@ -3106,16 +3188,19 @@ def _apply_projection(c: _Compile, proj: Projection) -> tuple:
             _agg_col(c, it.expr).alias(name)
             for it, name in zip(proj.items, names)
             if _has_agg(it.expr)
-        ]
+        ] + [F.any_value(col).alias(cname) for cname, col in carry.items()]
         out = c.cur.groupBy(*keys).agg(*aggs) if keys else c.cur.agg(*aggs)
         # restore declared item order
-        out = out.select(*[_qcol(n) for n in names])
+        out = out.select(*[_qcol(n) for n in names], *carry)
     else:
-        out = c.cur.select(
-            *[_to_col(c, it.expr).alias(name) for it, name in zip(proj.items, names)]
-        )
+        sel = [
+            _to_col(c, it.expr).alias(name)
+            for it, name in zip(proj.items, names)
+        ] + [F.col(col).alias(cname) for cname, col in carry.items()]
+        out = c.cur.select(*sel)
     if proj.distinct:
-        out = out.dropDuplicates()
+        # carried columns are functions of the items they ride with
+        out = out.dropDuplicates(names) if carry else out.dropDuplicates()
 
     if proj.order:
         # Sort keys that are projection items (by alias or verbatim
@@ -3124,10 +3209,6 @@ def _apply_projection(c: _Compile, proj: Projection) -> tuple:
         # sort — valid only pre-aggregation (post-aggregation the
         # source rows are gone) and without DISTINCT (the hidden
         # column would change the distinct-row set).
-        sel = [
-            _to_col(c, it.expr).alias(name)
-            for it, name in zip(proj.items, names)
-        ] if not aggregating else None
         hidden: list[str] = []
         sort_cols = []
         for idx, (e, etext, asc) in enumerate(proj.order):
@@ -3190,7 +3271,8 @@ def _rebind_after_with(c: _Compile, proj: Projection, out: DataFrame, names: lis
     """Reset the compile state after a WITH: the projected frame
     becomes the current frame and only the projected names remain in
     scope (a bare or aliased variable keeps its node/rel kind — later
-    clauses can hop from it or read its properties; every other item
+    clauses can hop from it or read its properties, through the scan
+    columns :func:`_apply_projection` forwarded; every other item
     becomes an opaque value column)."""
     new_kinds = {}
     for it, name in zip(proj.items, names):
@@ -3198,10 +3280,27 @@ def _rebind_after_with(c: _Compile, proj: Projection, out: DataFrame, names: lis
             new_kinds[name] = c.kinds[it.expr[1]]
         else:
             new_kinds[name] = "value"
+    c.prop_cols = {
+        (name, p): f"__p_{name}_{p}" for name, p in _with_carry(c, proj, names)
+    }
     c.kinds = new_kinds
-    c.prop_cols = {}
     c.rel_cols = []
     c.cur = out
+
+
+def _with_carry(c: _Compile, proj: Projection, names: list) -> dict:
+    """{(item name, prop): current column} for the scan columns a WITH
+    forwards: those of every node/relationship variable it passes on,
+    bare or renamed."""
+    if proj.is_return:
+        return {}
+    return {
+        (name, p): col
+        for it, name in zip(proj.items, names)
+        if it.expr[0] == "var" and c.kinds.get(it.expr[1]) in ("node", "rel")
+        for (v, p), col in c.prop_cols.items()
+        if v == it.expr[1]
+    }
 
 
 def _split_exists(expr: tuple) -> tuple:
@@ -3296,10 +3395,7 @@ def _sub_compile(
     """Compile a subquery block against the DISTINCT values of its
     shared variables (never the full outer row set — the correlated
     work is bounded by distinct keys, not outer cardinality)."""
-    c2 = _Compile(c.graph, allow_cartesian=True, params=c.params)
-    c2.anon = c.anon
-    c2.kinds = {v: c.kinds[v] for v in shared}
-    c2.cur = c.cur.select(*shared).dropDuplicates() if shared else None
+    c2 = _keyed_compile(c, shared, True)
     _compile_match(c2, pats, where)
     c.anon = c2.anon
     return c2
@@ -3505,10 +3601,7 @@ def _bind_mid_subquery(c: _Compile, sub: "CypherQuery") -> None:
             out if c.cur is None else c.cur.crossJoin(out)
         )
         return
-    c2 = _Compile(c.graph, allow_cartesian=True, params=c.params)
-    c2.anon = c.anon
-    c2.kinds = {v: c.kinds[v] for v in imports}
-    c2.cur = c.cur.select(*imports).dropDuplicates()
+    c2 = _keyed_compile(c, imports, True)
     *mid, last = clauses
     for cl2 in mid:
         if cl2[0] == "project":
@@ -3997,7 +4090,10 @@ def _compile_query(
             "graph — execute them with cypher_write(), which returns "
             "the new PropertyGraph"
         )
-    c = _Compile(graph, allow_cartesian=allow_cartesian, params=params)
+    c = _Compile(
+        graph, allow_cartesian=allow_cartesian, params=params,
+        reads=_query_reads(q),
+    )
     out = None
     for cl in q.clauses:
         res = apply_read_clause(c, cl)

@@ -71,6 +71,7 @@ from pidb_rdf_spark.cypher import (
     _collect_props,
     _materialize_props,
     _pat_value,
+    _query_reads,
     _to_col,
     apply_read_clause,
 )
@@ -606,7 +607,10 @@ def cypher_write(
         raise CypherSyntaxError(
             "no write clause found — use cypher() for read queries"
         )
-    c = _Compile(graph, allow_cartesian=allow_cartesian, params=params)
+    c = _Compile(
+        graph, allow_cartesian=allow_cartesian, params=params,
+        reads=_query_reads(q),
+    )
     g = graph
     for cl in q.clauses:
         if cl[0] not in _WRITE_KINDS:

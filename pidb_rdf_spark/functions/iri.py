@@ -47,7 +47,7 @@ def shorten_iri(col: Column, namespaces: dict[str, str]) -> Column:
     ns_map = F.create_map(*pairs)
     ns = iri_namespace(col)
     local = iri_local_name(col)
-    prefix = ns_map.getItem(ns)
+    prefix = ns_map[ns]
     return F.when(
         prefix.isNotNull(), F.concat(prefix, F.lit("__"), local)
     ).otherwise(col)
@@ -71,7 +71,7 @@ def build_uri(col: Column, namespaces: dict[str, str], default_ns: str = "urn:de
     for ns, pfx in namespaces.items():
         pairs.extend([F.lit(pfx), F.lit(ns)])
     if pairs:
-        expanded = F.concat(F.create_map(*pairs).getItem(prefix), local)
+        expanded = F.concat(F.create_map(*pairs)[prefix], local)
     else:
         # no registered namespaces: nothing can expand (an argless
         # create_map() is VOID-typed and cannot be indexed by string)

@@ -396,7 +396,7 @@ def remove_triples(graph: PropertyGraph, triples: DataFrame) -> PropertyGraph:
             F.map_filter(
                 F.col("props"),
                 lambda k, v: ~F.coalesce(
-                    F.array_contains(F.col("__rm_props").getItem(k), v),
+                    F.array_contains(F.col("__rm_props")[k], v),
                     F.lit(False),
                 ),
             ),

@@ -61,7 +61,7 @@ def graph_to_triples(
     if hot:
         entries = entries.filter(~F.col("key").isin(hot))
     family = (
-        F.coalesce(F.col("__prop_types").getItem(F.col("key")), F.lit("string"))
+        F.coalesce(F.col("__prop_types")[F.col("key")], F.lit("string"))
         if has_types
         else F.lit("string")
     )

@@ -554,3 +554,77 @@ def test_pack_manifest_one_data_exchange(spark):
     # data side; the n_shards-row offset cumsum on the tiny side)
     assert plan.count("Window [") == 3
     assert "partial_sum" in plan
+
+
+def _final_plan(df) -> str:
+    """The executed plan after ``df`` ran: AQE's final plan only (the
+    AdaptiveSparkPlan string also lists the initial plan)."""
+    p = df._jdf.queryExecution().executedPlan()
+    if p.nodeName() == "AdaptiveSparkPlan":
+        p = p.executedPlan()
+    return p.toString()
+
+
+def _uncached_graph(spark, tmp_path):
+    """A graph over the test tables that no fixture has cached: the
+    files are reached through symlinks, so the scans are new relations
+    and the executed plan shows the parquet scans themselves."""
+    import os
+
+    from conftest import SF_DIR
+
+    from pidb_rdf_spark.graph import graphify
+
+    for name in os.listdir(SF_DIR):
+        os.symlink(os.path.join(SF_DIR, name), tmp_path / name)
+    return graphify(spark, str(tmp_path))
+
+
+def test_cypher_props_read_in_binding_scan(spark, tmp_path):
+    """Each pattern variable's properties come from the label-filtered
+    scan that binds it, never from a join back to the whole node
+    table: the Customer scan reads c_name/c_acctbal, the Nation scan
+    n_name, and no other node table (lineitem, orders, ...) is read.
+    customer.parquet appears twice — the c scan and the customer
+    branch of the IN_NATION edges, which never reads c_name."""
+    import re
+
+    from pidb_rdf_spark.cypher import cypher
+
+    df = cypher(
+        _uncached_graph(spark, tmp_path),
+        "MATCH (c:Customer)-[:IN_NATION]->(n:Nation) "
+        "WHERE c.c_acctbal > 0 RETURN c.c_name, n.n_name",
+    )
+    assert len(df.collect()) > 0
+    plan = _final_plan(df)
+    # the TPC-H column prefix names each scan's table (Location
+    # strings are truncated in plan text)
+    tables = {"c": "customer", "n": "nation", "s": "supplier", "o": "orders",
+              "l": "lineitem", "p": "part", "r": "region"}
+    by_table: dict = {}
+    for schema in re.findall(r"ReadSchema: struct<([^>]*)>", plan):
+        table = tables.get(schema.split("_", 1)[0], schema)
+        by_table.setdefault(table, []).append(schema)
+    assert sorted(by_table) == ["customer", "nation", "supplier"]
+    assert len(by_table["nation"]) == 1 and "n_name" in by_table["nation"][0]
+    assert sorted("c_name" in s for s in by_table["customer"]) == [False, True]
+    assert plan.count("Exchange") == plan.count("BroadcastExchange")
+
+
+def test_cypher_read_your_write_lookup_is_one_scan(spark, tmp_path):
+    """The read-your-write check after MERGE+SET is a point lookup:
+    the Tag scan projects t.weight itself, so the plan has no Exchange
+    (no shuffle or broadcast of the node table to attach one
+    property)."""
+    from pidb_rdf_spark.cypher import cypher
+    from pidb_rdf_spark.cypher_write import cypher_write
+
+    g = cypher_write(
+        _uncached_graph(spark, tmp_path),
+        "MERGE (t:Tag {name: 'pin'}) "
+        "ON CREATE SET t.weight = 7 ON MATCH SET t.weight = 7",
+    )
+    df = cypher(g, "MATCH (t:Tag {name: 'pin'}) RETURN t.weight AS w")
+    assert [tuple(r) for r in df.collect()] == [("7",)]
+    assert "Exchange" not in _final_plan(df)

@@ -1,6 +1,7 @@
 """Property-based tests (hypothesis): transitive closure and the
 other frontier loops (BFS hops, sssp, closeness, betweenness) vs pure-
-Python oracles on random graphs, and RDF import→export→parse
+Python oracles on random graphs, Cypher property reads vs a Python
+twin on random labelled graphs, and RDF import→export→parse
 round-trips on random triple sets (SURVEY.md §5.4-5.5).
 
 Example counts are small — every example runs Spark jobs — but the
@@ -332,6 +333,108 @@ def test_betweenness_matches_brute_force(spark, pairs, directed):
     assert got.keys() == want.keys()
     for n, v in want.items():
         assert got[n] == pytest.approx(v)
+
+
+_nodes_strategy = st.lists(
+    st.tuples(
+        st.sets(st.sampled_from("AB")),  # labels
+        st.one_of(st.none(), st.integers(-5, 5)),  # score: typed column
+        st.one_of(st.none(), st.sampled_from(["t0", "t1"])),  # tag: map key
+    ),
+    min_size=1,
+    max_size=7,
+)
+_rels_strategy = st.lists(
+    st.tuples(
+        st.integers(0, 6),
+        st.integers(0, 6),
+        st.sampled_from("RS"),
+        st.one_of(st.none(), st.integers(0, 9)),  # w: edge prop
+    ),
+    max_size=12,
+)
+
+
+@SLOW
+@given(nodes=_nodes_strategy, rels=_rels_strategy)
+def test_cypher_property_reads_match_python_twin(spark, nodes, rels):
+    """Cypher property reads vs a Python twin on random labelled
+    graphs: properties bound in the MATCH scan, null through OPTIONAL
+    MATCH, forwarded through WITH (grouped and renamed), after a
+    re-MATCH that adds inline props, on relationships, and on a
+    variable a CALL subquery returns (the join-back path)."""
+    from pidb_rdf_spark.cypher import cypher
+    from pidb_rdf_spark.graph import PropertyGraph
+
+    n = len(nodes)
+    labels = {i: labs for i, (labs, _, _) in enumerate(nodes)}
+    score = {i: sc for i, (_, sc, _) in enumerate(nodes)}
+    tag = {i: tg for i, (_, _, tg) in enumerate(nodes)}
+    edges = [(10 + k, s % n, d % n, t, w) for k, (s, d, t, w) in enumerate(rels)]
+    g = PropertyGraph(
+        spark,
+        spark.createDataFrame(
+            [
+                (i, f"urn:n{i}", sorted(labs), {} if tg is None else {"tag": tg}, sc)
+                for i, (labs, sc, tg) in enumerate(nodes)
+            ],
+            "id long, uri string, labels array<string>, "
+            "props map<string,string>, score long",
+        ),
+        spark.createDataFrame(
+            [
+                (k, s, d, t, {} if w is None else {"w": str(w)})
+                for k, s, d, t, w in edges
+            ],
+            "id long, src long, dst long, predicate string, "
+            "props map<string,string>",
+        ),
+    )
+
+    def run(q):
+        return sorted((tuple(r) for r in cypher(g, q).collect()), key=repr)
+
+    def want(rows):
+        return sorted(rows, key=repr)
+
+    r_out = {a: [d for _, s, d, t, _ in edges if s == a and t == "R"] for a in labels}
+    a_nodes = [i for i in labels if "A" in labels[i]]
+
+    # plain MATCH: both ends' props from their scans
+    assert run(
+        "MATCH (a:A)-[:R]->(b) RETURN id(a), a.score, b.tag, b.score"
+    ) == want((a, score[a], tag[b], score[b]) for a in a_nodes for b in r_out[a])
+    # OPTIONAL MATCH: an unmatched row reads null props
+    opt = []
+    for a in a_nodes:
+        bs = [b for b in r_out[a] if "B" in labels[b]]
+        opt += [(a, b, score[b]) for b in bs] or [(a, None, None)]
+    assert run(
+        "MATCH (a:A) OPTIONAL MATCH (a)-[:R]->(b:B) RETURN id(a), id(b), b.score"
+    ) == want(opt)
+    # WITH: grouped, then renamed — the scan columns ride along
+    dsts = [d for _, _, d, t, _ in edges if t == "R"]
+    assert run(
+        "MATCH ()-[:R]->(b) WITH b, count(*) AS k "
+        "WITH b AS x, k RETURN id(x), x.score, x.tag, k"
+    ) == want((b, score[b], tag[b], dsts.count(b)) for b in set(dsts))
+    # re-MATCH of a bound variable adding inline props
+    assert run(
+        "MATCH (a:A) MATCH (a:B {tag: 't1'}) RETURN id(a), a.score"
+    ) == want((a, score[a]) for a in a_nodes if "B" in labels[a] and tag[a] == "t1")
+    # relationship props and pseudo-props
+    assert run(
+        "MATCH (a)-[r:S]->(b:A) RETURN id(r), r.w, type(r), id(a), b.tag"
+    ) == want(
+        (k, None if w is None else str(w), "S", s, tag[d])
+        for k, s, d, t, w in edges
+        if t == "S" and "A" in labels[d]
+    )
+    # a variable returned by a CALL subquery carries no scan
+    assert run(
+        "MATCH (a:A) CALL { WITH a MATCH (a)-[:R]->(b) RETURN b } "
+        "RETURN id(a), id(b), b.score, b.tag"
+    ) == want((a, b, score[b], tag[b]) for a in a_nodes for b in r_out[a])
 
 
 def _py_ktruss(pairs, k):
