@@ -1,12 +1,19 @@
-"""IRI / XSD scalar functions (SURVEY.md §2.9 F1-F7) as Column
-expressions — pure ``pyspark.sql.functions`` compositions, so they
-run JVM-side inside whole-stage codegen (no Python UDFs in the
+"""IRI / XSD scalar functions (SURVEY.md §2.9 F1-F7) — pure Spark SQL,
+so they run JVM-side inside whole-stage codegen (no Python UDFs in the
 import/export hot path).
+
+The IRI term forms are compiled to SQL text: each Column helper ``f``
+has an ``f_sql`` twin that takes the SQL text of its input and
+returns the SQL text of the result, and ``f`` is ``F.expr`` over it.
+A caller projecting many terms applies them all with one
+``selectExpr`` — one py4j call per projection instead of one per
+Column node — and a namespace map is one ``map(...)`` literal however
+many namespaces it holds.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
 XSD = "http://www.w3.org/2001/XMLSchema#"
@@ -19,18 +26,57 @@ XSD_LONG = [XSD + t for t in ("int", "integer", "long", "short", "byte",
 XSD_DOUBLE = [XSD + t for t in ("decimal", "double", "float")]
 XSD_BOOL = [XSD + "boolean"]
 
+_PREFIXED_RE = r"^(\w+?)__(.*)$"
+_ABSOLUTE_RE = r"^[a-zA-Z][a-zA-Z0-9+.-]*://.*|^urn:.*|^_:.*"
+
+
+def sql_string(v: str) -> str:
+    """``v`` as a Spark SQL string literal."""
+    return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def map_sql(entries) -> str:
+    """A ``map<string,string>`` literal of ``(key, value)`` pairs: one
+    expression however many entries (an argless ``map()`` is
+    VOID-typed, hence the cast)."""
+    kv = ", ".join(f"{sql_string(k)}, {sql_string(v)}" for k, v in entries)
+    return f"map({kv})" if kv else "CAST(map() AS MAP<STRING, STRING>)"
+
+
+def column_sql(col: Column) -> str:
+    """SQL text of a column expression, for the ``*_sql`` builders."""
+    return SparkSession.active()._jsparkSession.expression(col._jc).sql()
+
+
+def iri_local_name_sql(iri: str) -> str:
+    """SQL text of ``iri_local_name`` over the SQL expression ``iri``."""
+    return f"regexp_extract({iri}, '([^/#:]*)$', 1)"
+
 
 def iri_local_name(col: Column) -> Column:
     """Substring after the last '/', '#' or ':' — reference
     ``getIRILocalName`` (``semantics/RDFImport.java:188-191``, RDF4J
     URIUtil semantics)."""
-    return F.regexp_extract(col, r"([^/#:]*)$", 1)
+    return F.expr(iri_local_name_sql(column_sql(col)))
+
+
+def iri_namespace_sql(iri: str) -> str:
+    """SQL text of ``iri_namespace`` over the SQL expression ``iri``."""
+    return f"regexp_extract({iri}, '^(.*[/#:])', 1)"
 
 
 def iri_namespace(col: Column) -> Column:
     """Complementary prefix — reference ``getIRINamespace``
     (``RDFImport.java:193-196``)."""
-    return F.regexp_extract(col, r"^(.*[/#:])", 1)
+    return F.expr(iri_namespace_sql(column_sql(col)))
+
+
+def shorten_iri_sql(iri: str, namespaces: dict[str, str]) -> str:
+    """SQL text of ``shorten_iri`` over the SQL expression ``iri``."""
+    if not namespaces:
+        return iri
+    prefix = f"{map_sql(namespaces.items())}[{iri_namespace_sql(iri)}]"
+    return f"coalesce(concat({prefix}, '__', {iri_local_name_sql(iri)}), {iri})"
 
 
 def shorten_iri(col: Column, namespaces: dict[str, str]) -> Column:
@@ -41,16 +87,24 @@ def shorten_iri(col: Column, namespaces: dict[str, str]) -> Column:
     unknown namespaces pass through unshortened."""
     if not namespaces:
         return col
-    pairs = []
-    for ns, pfx in namespaces.items():
-        pairs.extend([F.lit(ns), F.lit(pfx)])
-    ns_map = F.create_map(*pairs)
-    ns = iri_namespace(col)
-    local = iri_local_name(col)
-    prefix = ns_map[ns]
-    return F.when(
-        prefix.isNotNull(), F.concat(prefix, F.lit("__"), local)
-    ).otherwise(col)
+    return F.expr(shorten_iri_sql(column_sql(col), namespaces))
+
+
+def build_uri_sql(
+    name: str, namespaces: dict[str, str], default_ns: str = "urn:default#"
+) -> str:
+    """SQL text of ``build_uri`` over the SQL expression ``name``."""
+    prefixed = sql_string(_PREFIXED_RE)
+    prefix = f"regexp_extract({name}, {prefixed}, 1)"
+    expanded = (
+        f"concat({map_sql((p, ns) for ns, p in namespaces.items())}[{prefix}], "
+        f"regexp_extract({name}, {prefixed}, 2))"
+    )
+    return (
+        f"coalesce(IF({prefix} != '', {expanded}, NULL), "
+        f"IF({name} rlike {sql_string(_ABSOLUTE_RE)}, {name}, "
+        f"concat({sql_string(default_ns)}, {name})))"
+    )
 
 
 def build_uri(col: Column, namespaces: dict[str, str], default_ns: str = "urn:default#") -> Column:
@@ -65,22 +119,7 @@ def build_uri(col: Column, namespaces: dict[str, str], default_ns: str = "urn:de
     rebinds under the default namespace. Registered prefixes are
     validated to contain no ``__`` (mapping.add_schema), so the
     first-split is unambiguous."""
-    prefix = F.regexp_extract(col, r"^(\w+?)__(.*)$", 1)
-    local = F.regexp_extract(col, r"^(\w+?)__(.*)$", 2)
-    pairs = []
-    for ns, pfx in namespaces.items():
-        pairs.extend([F.lit(pfx), F.lit(ns)])
-    if pairs:
-        expanded = F.concat(F.create_map(*pairs)[prefix], local)
-    else:
-        # no registered namespaces: nothing can expand (an argless
-        # create_map() is VOID-typed and cannot be indexed by string)
-        expanded = F.lit(None).cast("string")
-    return (
-        F.when((prefix != "") & expanded.isNotNull(), expanded)
-        .when(col.rlike(r"^[a-zA-Z][a-zA-Z0-9+.-]*://.*|^urn:.*|^_:.*"), col)
-        .otherwise(F.concat(F.lit(default_ns), col))
-    )
+    return F.expr(build_uri_sql(column_sql(col), namespaces, default_ns))
 
 
 def typed_literal(value: Column, datatype: Column) -> dict[str, Column]:
@@ -105,29 +144,16 @@ def xsd_typed_columns(df, value: str = "object", datatype: str = "datatype"):
     return df
 
 
-def literal_to_rdf(value: Column, dtype_name: str) -> Column:
-    """Typed value -> N-Triples literal lexical form with XSD datatype
-    (F6, reference ``RDFEndpoint.java:566-586``)."""
-    if dtype_name in ("long", "bigint", "int"):
-        return F.concat(F.lit('"'), value.cast("string"), F.lit(f'"^^<{XSD}long>'))
-    if dtype_name in ("double", "float"):
-        return F.concat(F.lit('"'), value.cast("string"), F.lit(f'"^^<{XSD}double>'))
-    if dtype_name == "boolean":
-        return F.concat(F.lit('"'), value.cast("string"), F.lit(f'"^^<{XSD}boolean>'))
-    # string: escape backslash + quote + control chars per N-Triples
-    escaped = F.regexp_replace(value.cast("string"), r"\\", r"\\\\")
-    escaped = F.regexp_replace(escaped, '"', '\\\\"')
-    escaped = F.regexp_replace(escaped, "\n", "\\\\n")
-    escaped = F.regexp_replace(escaped, "\r", "\\\\r")
-    escaped = F.regexp_replace(escaped, "\t", "\\\\t")
-    return F.concat(F.lit('"'), escaped, F.lit('"'))
+def subject_term_sql(value: str) -> str:
+    """SQL text of ``subject_term`` over the SQL expression ``value``."""
+    return (
+        f"CASE WHEN startswith({value}, '_:') THEN {value} "
+        f"WHEN contains({value}, ':') THEN concat('<', {value}, '>') "
+        f"ELSE concat('_:', {value}) END"
+    )
 
 
 def subject_term(col: Column) -> Column:
     """IRI-vs-blank-node discrimination on export: ':' presence
     heuristic (F7, reference ``RDFEndpoint.java:293-301``)."""
-    return F.when(
-        col.startswith("_:"), col
-    ).when(
-        col.contains(":"), F.concat(F.lit("<"), col, F.lit(">"))
-    ).otherwise(F.concat(F.lit("_:"), col))
+    return F.expr(subject_term_sql(column_sql(col)))

@@ -34,8 +34,9 @@ from pidb_rdf_spark.functions.iri import (
     XSD_BOOL,
     XSD_DOUBLE,
     XSD_LONG,
-    iri_namespace,
-    shorten_iri,
+    iri_namespace_sql,
+    shorten_iri_sql,
+    sql_string,
 )
 from pidb_rdf_spark.graph import PropertyGraph
 
@@ -52,6 +53,39 @@ DEFAULT_NAMESPACES = {
     "http://www.w3.org/1999/02/22-rdf-syntax-ns#": "rdf",
 }
 
+# statement kinds, as SQL predicates over a triples row
+_IS_TYPE = f"predicate = {sql_string(RDF_TYPE)}"
+_IS_LABEL = f"{_IS_TYPE} AND NOT is_literal AND NOT startswith(object, '_:')"
+# literal datatype -> stored property family (F5)
+_FAMILY = (
+    "CASE "
+    + "".join(
+        f"WHEN datatype IN ({', '.join(map(sql_string, dts))}) THEN '{family}' "
+        for family, dts in (("long", XSD_LONG), ("double", XSD_DOUBLE), ("boolean", XSD_BOOL))
+    )
+    + "ELSE 'string' END"
+)
+_EMPTY_PROPS = "from_json('{}', 'map<string,string>')"
+
+
+def _statements(
+    triples: DataFrame, types_to_labels: bool = True, language_filter: str | None = None
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Split triples into (literal, label, resource) statements: literal
+    objects become properties, ``rdf:type`` with an IRI object a label
+    (bnode type objects are NOT labels, ``DirectStatementLoader.java
+    :166-168``), every other resource object an edge."""
+    lit = "is_literal"
+    if language_filter is not None:
+        lit += f" AND (lang IS NULL OR lang = {sql_string(language_filter)})"
+    if not types_to_labels:
+        return triples.filter(lit), triples.limit(0), triples.filter("NOT is_literal")
+    return (
+        triples.filter(lit),
+        triples.filter(_IS_LABEL),
+        triples.filter(f"NOT is_literal AND NOT {_IS_TYPE}"),
+    )
+
 
 def discover_namespaces(
     triples: DataFrame, known: dict[str, str] | None = None
@@ -67,15 +101,11 @@ def discover_namespaces(
 
     ns_map = dict(known if known is not None else DEFAULT_NAMESPACES)
     ns_col = (
-        triples.select(iri_namespace(F.col("predicate")).alias("ns"))
+        triples.selectExpr(f"{iri_namespace_sql('predicate')} AS ns")
         .unionAll(
-            triples.filter(
-                (F.col("predicate") == RDF_TYPE)
-                & ~F.col("is_literal")
-                & ~F.col("object").startswith("_:")
-            ).select(iri_namespace(F.col("object")).alias("ns"))
+            triples.filter(_IS_LABEL).selectExpr(f"{iri_namespace_sql('object')} AS ns")
         )
-        .filter(F.col("ns") != "")
+        .filter("ns != ''")
     )
     # fast path: one distinct aggregate, no count/orderBy. Only when
     # the vocabulary overflows the cap (pathological corpus) do we pay
@@ -102,12 +132,6 @@ def discover_namespaces(
     return ns_map
 
 
-def _lang_ok(lang_col, language_filter: str | None):
-    if language_filter is None:
-        return F.lit(True)
-    return lang_col.isNull() | (lang_col == language_filter)
-
-
 def import_triples(
     spark: SparkSession,
     triples: DataFrame,
@@ -118,103 +142,84 @@ def import_triples(
 ) -> PropertyGraph:
     """Build a PropertyGraph from a triples DataFrame (the batch
     equivalent of importRDF; flags mirror ``RDFImport.java:34-38``:
-    shortenUrls, typesToLabels, languageFilter)."""
+    shortenUrls, typesToLabels, languageFilter).
+
+    The input is materialized once, with an eager ``localCheckpoint``,
+    before namespace discovery: discovery and every branch of
+    ``nodes`` and ``edges`` then read the parsed rows, so a lazy parse
+    (the Turtle ``flatMap``, the N-Triples regex projection) runs once
+    per import, as the reference streams each statement through its
+    parser once."""
+    triples = triples.localCheckpoint()
     ns_map = discover_namespaces(triples, namespaces) if shorten else {}
 
-    def short(col):
-        return shorten_iri(col, ns_map) if shorten else col
-
-    lit = triples.filter(F.col("is_literal") & _lang_ok(F.col("lang"), language_filter))
-    typ = triples.filter(
-        (F.col("predicate") == RDF_TYPE)
-        & ~F.col("is_literal")
-        & ~F.col("object").startswith("_:")
-    ) if types_to_labels else triples.limit(0)
-    res = triples.filter(
-        ~F.col("is_literal")
-        & ((F.col("predicate") != RDF_TYPE) if types_to_labels else F.lit(True))
-    )
+    lit, typ, res = _statements(triples, types_to_labels, language_filter)
 
     # --- resources: subjects of any triple + objects of resource triples
     uris = (
-        triples.select(F.col("subject").alias("uri"))
-        .unionAll(res.select(F.col("object").alias("uri")))
+        triples.selectExpr("subject AS uri")
+        .unionAll(res.selectExpr("object AS uri"))
         .distinct()
     )
 
     # --- typed property values (3 families + string, F5) --------------
-    is_long = F.col("datatype").isin(XSD_LONG)
-    is_double = F.col("datatype").isin(XSD_DOUBLE)
-    is_bool = F.col("datatype").isin(XSD_BOOL)
-    props = lit.select(
-        F.col("subject").alias("uri"),
-        short(F.col("predicate")).alias("key"),
-        F.col("object").alias("value"),
-        F.when(is_long, "long")
-        .when(is_double, "double")
-        .when(is_bool, "boolean")
-        .otherwise("string")
-        .alias("family"),
-    )
     # single-cardinality semantics: the reference's setProp keeps one
     # value per key (last writer wins in parse order). Parse order
     # doesn't exist in a set-oriented import, so pick the max value —
     # deterministic across partitionings, which matters more at scale
     # than which of two conflicting literals survives.
     props = (
-        props.groupBy("uri", "key")
-        .agg(F.max(F.struct("value", "family")).alias("vf"))
-        .select("uri", "key", F.col("vf.value").alias("value"), F.col("vf.family").alias("family"))
+        lit.selectExpr(
+            "subject AS uri",
+            f"{shorten_iri_sql('predicate', ns_map)} AS key",
+            f"struct(object AS value, {_FAMILY} AS family) AS vf",
+        )
+        .groupBy("uri", "key")
+        .agg(F.expr("max(vf) AS vf"))
     )
     props_map = props.groupBy("uri").agg(
-        F.map_from_entries(
-            F.collect_list(F.struct(F.col("key"), F.col("value")))
-        ).alias("props"),
-        F.map_from_entries(
-            F.collect_list(F.struct(F.col("key"), F.col("family")))
-        ).alias("__prop_types"),
+        F.expr("map_from_entries(collect_list(struct(key, vf.value))) AS props"),
+        F.expr("map_from_entries(collect_list(struct(key, vf.family))) AS __prop_types"),
     )
 
-    labels = typ.select(
-        F.col("subject").alias("uri"), short(F.col("object")).alias("label")
-    ).groupBy("uri").agg(F.array_sort(F.collect_set("label")).alias("__typelabels"))
+    labels = (
+        typ.selectExpr("subject AS uri", f"{shorten_iri_sql('object', ns_map)} AS label")
+        .groupBy("uri")
+        .agg(F.expr("array_sort(collect_set(label)) AS __typelabels"))
+    )
 
     nodes = (
         uris.join(props_map, on="uri", how="left")
         .join(labels, on="uri", how="left")
-        .select(
-            F.xxhash64(F.col("uri")).alias("id"),
-            F.col("uri"),
-            F.concat(
-                F.array(F.lit("Resource")),
-                F.coalesce(F.col("__typelabels"), F.array().cast("array<string>")),
-            ).alias("labels"),
-            F.coalesce(
-                F.col("props"), F.from_json(F.lit("{}"), "map<string,string>")
-            ).alias("props"),
-            F.col("__prop_types"),
+        .selectExpr(
+            "xxhash64(uri) AS id",
+            "uri",
+            "concat(array('Resource'), "
+            "coalesce(__typelabels, CAST(array() AS ARRAY<STRING>))) AS labels",
+            f"coalesce(props, {_EMPTY_PROPS}) AS props",
+            "__prop_types",
         )
     )
 
     # --- edges: resource-object statements, deduped (M10) -------------
     edges = (
-        res.select(
-            F.col("subject").alias("s_uri"),
-            short(F.col("predicate")).alias("predicate"),
-            F.col("object").alias("o_uri"),
+        res.selectExpr(
+            "subject AS s_uri",
+            f"{shorten_iri_sql('predicate', ns_map)} AS predicate",
+            "object AS o_uri",
         )
         .distinct()  # (src, type, dst) dedup, DirectStatementLoader.java:281-305
-        .select(
-            # canonical edge-id scheme: multi-arg xxhash64 over
-            # (src uri, dst uri, predicate) — field boundaries are
-            # structural (no separator to collide on), and the SAME
-            # logical edge gets the SAME id from import, add_edges,
-            # Neo4j-CSV, GraphSON and GraphML paths
-            F.xxhash64("s_uri", "o_uri", "predicate").alias("id"),
-            F.xxhash64(F.col("s_uri")).alias("src"),
-            F.xxhash64(F.col("o_uri")).alias("dst"),
-            F.col("predicate"),
-            F.from_json(F.lit("{}"), "map<string,string>").alias("props"),
+        # canonical edge-id scheme: multi-arg xxhash64 over (src uri,
+        # dst uri, predicate) — field boundaries are structural (no
+        # separator to collide on), and the SAME logical edge gets the
+        # SAME id from import, add_edges, Neo4j-CSV, GraphSON and
+        # GraphML paths
+        .selectExpr(
+            "xxhash64(s_uri, o_uri, predicate) AS id",
+            "xxhash64(s_uri) AS src",
+            "xxhash64(o_uri) AS dst",
+            "predicate",
+            f"{_EMPTY_PROPS} AS props",
         )
     )
 
@@ -330,24 +335,13 @@ def remove_triples(graph: PropertyGraph, triples: DataFrame) -> PropertyGraph:
         if r["namespace"]
     }
 
-    def short(col):
-        return shorten_iri(col, ns_map) if ns_map else col
-
-    lit = triples.filter(F.col("is_literal"))
-    typ = triples.filter(
-        (F.col("predicate") == RDF_TYPE)
-        & ~F.col("is_literal")
-        & ~F.col("object").startswith("_:")
-    )
-    res = triples.filter(
-        ~F.col("is_literal") & (F.col("predicate") != RDF_TYPE)
-    )
+    lit, typ, res = _statements(triples)
 
     # --- edges: anti-join on (src, predicate, dst) --------------------
-    del_edges = res.select(
-        F.xxhash64(F.col("subject")).alias("src"),
-        short(F.col("predicate")).alias("predicate"),
-        F.xxhash64(F.col("object")).alias("dst"),
+    del_edges = res.selectExpr(
+        "xxhash64(subject) AS src",
+        f"{shorten_iri_sql('predicate', ns_map)} AS predicate",
+        "xxhash64(object) AS dst",
     ).dropDuplicates()
     edges = graph.edges.join(
         del_edges, on=["src", "predicate", "dst"], how="leftanti"
@@ -355,9 +349,7 @@ def remove_triples(graph: PropertyGraph, triples: DataFrame) -> PropertyGraph:
 
     # --- labels -------------------------------------------------------
     del_labels = (
-        typ.select(
-            F.col("subject").alias("uri"), short(F.col("object")).alias("label")
-        )
+        typ.selectExpr("subject AS uri", f"{shorten_iri_sql('object', ns_map)} AS label")
         .groupBy("uri")
         .agg(F.collect_set("label").alias("__rm_labels"))
     )
@@ -367,10 +359,10 @@ def remove_triples(graph: PropertyGraph, triples: DataFrame) -> PropertyGraph:
     # a per-key dropDuplicates would be partitioning-dependent — the
     # stored value must be tested against every stated value
     del_props = (
-        lit.select(
-            F.col("subject").alias("uri"),
-            short(F.col("predicate")).alias("key"),
-            F.col("object").alias("value"),
+        lit.selectExpr(
+            "subject AS uri",
+            f"{shorten_iri_sql('predicate', ns_map)} AS key",
+            "object AS value",
         )
         .groupBy("uri", "key")
         .agg(F.collect_set("value").alias("__vals"))

@@ -7,10 +7,14 @@ predicate, object, is_literal, datatype, lang.
 
 Two parse paths:
 
-- **N-Triples** (the scale path): line-oriented, so it parallelizes
-  perfectly — ``spark.read.text`` + JVM-side regex extraction. No
-  Python in the loop; a 100 TB N-Triples dump parses at full cluster
-  width with predicate/projection pushdown downstream.
+- **N-Triples / N-Quads** (the scale path): line-oriented, so it
+  parallelizes perfectly — ``spark.read.text`` + JVM-side regex
+  extraction. No Python in the loop; a 100 TB N-Triples dump parses
+  at full cluster width with predicate/projection pushdown downstream.
+  The two formats share one term projection compiled to SQL text
+  (they differ only in the line regex), and every term decodes its
+  escapes — UCHAR and the full ECHAR set ``\\t \\b \\n \\r \\f \\"
+  \\' \\\\`` — in a single pass (``_decode_sql``).
 - **Turtle subset** (ontology-sized files): Turtle is stateful
   (@prefix declarations, ';'/',' continuation), so a partition-
   parallel parse is incorrect in general. Files are parsed per-file
@@ -32,8 +36,9 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from pidb_rdf_spark.functions.iri import sql_string
 
 TRIPLES_SCHEMA = T.StructType(
     [
@@ -47,78 +52,84 @@ TRIPLES_SCHEMA = T.StructType(
 )
 
 # one N-Triples statement: subject (IRI | bnode), predicate (IRI),
-# object (IRI | bnode | literal with optional @lang / ^^<dt>)
+# object (IRI | bnode | literal with optional @lang / ^^<dt>). DOTALL:
+# a raw U+0085 / U+2028 inside a literal is legal N-Triples.
 _NT_LINE = (
-    r"^\s*(<[^>]*>|_:\S+)\s+"  # 1 subject
+    r"(?s)^\s*(<[^>]*>|_:\S+)\s+"  # 1 subject
     r"<([^>]*)>\s+"  # 2 predicate
     r"(.*?)\s*\.\s*$"  # 3 object term
 )
-_NT_LITERAL = r'^"((?:[^"\\]|\\.)*)"(?:@([A-Za-z][A-Za-z0-9-]*)|\^\^<([^>]*)>)?$'
+# N-Quads: explicit object-term alternation (literal | IRI | bnode)
+# so a literal containing "<...>" text can never be mistaken for the
+# optional trailing graph term.
+_NQ_LINE = (
+    r"(?s)^\s*(<[^>]*>|_:\S+)\s+"  # 1 subject
+    r"<([^>]*)>\s+"  # 2 predicate
+    r'("(?:[^"\\]|\\.)*"(?:@[A-Za-z][A-Za-z0-9-]*|\^\^<[^>]*>)?|<[^>]*>|_:\S+)'  # 3 object
+    r"(?:\s+(?:<[^>]*>|_:\S+))?\s*\.\s*$"  # optional graph (dropped)
+)
+_NT_LITERAL = r'(?s)^"((?:[^"\\]|\\.)*)"(?:@([A-Za-z][A-Za-z0-9-]*)|\^\^<([^>]*)>)?$'
+
+# every escape N-Triples defines: UCHAR and the full ECHAR set
+_ESCAPE = sql_string(r"""\\(u[0-9A-Fa-f]{4}|U[0-9A-Fa-f]{8}|[tbnrf"'\\])""")
+# one escape token (the text after the backslash) -> its character
+_DECODE_TOKEN = (
+    "IF(length(t) = 1, translate(t, 'tbnrf', " + sql_string("\t\b\n\r\f") + "), "
+    "decode(unhex(lpad(substr(t, 2), 8, '0')), 'UTF-32'))"
+)
 
 
-_UCHAR = r"\\(?:u[0-9A-Fa-f]{4}|U[0-9A-Fa-f]{8})"
-_UCHAR_G = r"\\(u[0-9A-Fa-f]{4}|U[0-9A-Fa-f]{8})"
-
-
-def _uchar_rebuild(out, post):
-    """Decode ``\\uXXXX`` / ``\\UXXXXXXXX`` numeric escapes entirely
-    JVM-side: split the string on UCHAR tokens, decode each token's
-    hex as a big-endian UTF-32 code point (``decode(unhex(...),
-    'UTF-32')`` — full astral-plane support, no Python), and
-    interleave. ``post`` runs on the ORIGINAL-text parts only, so a
-    decoded character can never be re-interpreted by a later escape
-    pass (e.g. ``\\u005C`` yields a literal backslash that stays
-    literal, per spec's single-pass escape processing). The rlike
-    guard keeps escape-free rows (the overwhelming hot path) on one
-    regex probe."""
-    toks = F.regexp_extract_all(out, F.lit(_UCHAR_G), 1)
-    parts = F.transform(F.split(out, _UCHAR), post)
-    decoded = F.transform(
-        toks,
-        lambda t: F.decode(
-            F.unhex(F.lpad(t.substr(F.lit(2), F.lit(8)), 8, "0")), "UTF-32"
-        ),
+def _decode_sql(col: str) -> str:
+    """SQL text decoding the N-Triples escapes in ``col`` in one pass:
+    split the string on escape tokens, decode every token in one
+    ``transform`` (an ECHAR through ``translate``, a UCHAR's hex as a
+    big-endian UTF-32 code point — full astral-plane support) and
+    interleave the decoded tokens with the text between them. Tokens
+    match left to right without overlap, so the backslash of ``\\\\``
+    never pairs with the character after it, and a decoded character
+    (``\\u005C`` is a backslash) is never re-read as an escape. No
+    sentinel is involved, so a raw U+0000 survives as itself.
+    Escape-free rows (the hot path) cost one ``contains`` probe."""
+    return (
+        f"IF(contains({col}, '\\\\'), array_join(zip_with(split({col}, {_ESCAPE}), "
+        f"concat(array(''), transform(regexp_extract_all({col}, {_ESCAPE}, 1), "
+        f"t -> {_DECODE_TOKEN})), (part, tok) -> concat(tok, part)), ''), {col})"
     )
-    rebuilt = F.concat(
-        F.element_at(parts, 1),
-        F.aggregate(
-            F.sequence(F.lit(1), F.size(toks)),
-            F.lit(""),
-            lambda acc, i: F.concat(
-                acc, F.element_at(decoded, i), F.element_at(parts, i + 1)
-            ),
-        ),
-    )
-    return F.when(out.rlike(_UCHAR), rebuilt).otherwise(post(out))
 
 
-def _unescape_iri(col):
-    """IRIREF unescape: UCHAR only (the sole escape the N-Triples
-    grammar permits inside ``<...>``)."""
-    return _uchar_rebuild(col, lambda p: p)
+_UNBRACKET = "IF(startswith({0}, '<'), substr({0}, 2, length({0}) - 2), {0})"
+# the term projection shared by both line formats: split the object
+# term, then decode the three terms
+_TERMS = [
+    _UNBRACKET.format("s") + " AS s",
+    "p",
+    "IF(startswith(o, '\"'), "
+    f"regexp_extract(o, {sql_string(_NT_LITERAL)}, 1), {_UNBRACKET.format('o')}) AS o",
+    "startswith(o, '\"') AS is_literal",
+    f"nullif(regexp_extract(o, {sql_string(_NT_LITERAL)}, 3), '') AS datatype",
+    f"nullif(regexp_extract(o, {sql_string(_NT_LITERAL)}, 2), '') AS lang",
+]
+_DECODED = [
+    _decode_sql("s") + " AS subject",
+    _decode_sql("p") + " AS predicate",
+    _decode_sql("o") + " AS object",
+    "is_literal",
+    "datatype",
+    "lang",
+]
 
 
-def _unescape(col):
-    """N-Triples string unescape: \\" \\\\ \\n \\t \\r and the
-    numeric ``\\uXXXX`` / ``\\UXXXXXXXX`` forms (canonical N-Triples
-    emits EVERY non-ASCII character that way, so skipping them would
-    corrupt any real-world dump).
-
-    ``\\\\`` must be consumed FIRST (via a sentinel) so the backslash
-    of an escaped backslash can't pair with a following ``n``/``t``/
-    ``r`` — otherwise the valid literal ``C:\\\\new`` (meaning
-    ``C:\\new``) would decode as ``C:\\`` + newline + ``ew``. The
-    sentinel restores INSIDE the UCHAR rebuild's part lambda, so a
-    UCHAR that decodes to a backslash (or to the sentinel byte) can
-    neither fake an escape nor collide with the restore."""
-    sentinel = "\x00"
-    out = F.regexp_replace(col, r"\\\\", sentinel)
-    out = F.regexp_replace(out, r'\\"', '"')
-    out = F.regexp_replace(out, r"\\n", "\n")
-    out = F.regexp_replace(out, r"\\t", "\t")
-    out = F.regexp_replace(out, r"\\r", "\r")
-    return _uchar_rebuild(
-        out, lambda p: F.regexp_replace(p, sentinel, r"\\")
+def _parse_lines(lines: DataFrame, line_re: str) -> DataFrame:
+    """Lines (column ``value``) -> triples, JVM-side. Comment and blank
+    lines do not match ``line_re`` and drop with the malformed ones."""
+    line = sql_string(line_re)
+    return (
+        lines.selectExpr(
+            *(f"regexp_extract(value, {line}, {i}) AS {c}" for i, c in enumerate("spo", 1))
+        )
+        .filter("p != ''")
+        .selectExpr(*_TERMS)
+        .selectExpr(*_DECODED)
     )
 
 
@@ -152,20 +163,6 @@ def read_ntriples(spark: SparkSession, path: str) -> DataFrame:
     return parse_ntriples_lines(lines)
 
 
-# N-Quads: explicit object-term alternation (literal | IRI | bnode)
-# so a literal containing "<...>" text can never be mistaken for the
-# optional trailing graph term.
-_NQ_OBJ = (
-    r'("(?:[^"\\]|\\.)*"(?:@[A-Za-z][A-Za-z0-9-]*|\^\^<[^>]*>)?|<[^>]*>|_:\S+)'
-)
-_NQ_LINE = (
-    r"^\s*(<[^>]*>|_:\S+)\s+"  # 1 subject
-    r"<([^>]*)>\s+"  # 2 predicate
-    + _NQ_OBJ  # 3 object
-    + r"(?:\s+(<[^>]*>|_:\S+))?\s*\.\s*$"  # 4 optional graph (dropped)
-)
-
-
 def read_nquads(spark: SparkSession, path: str) -> DataFrame:
     """N-Quads file(s) -> triples DataFrame (line-parallel like
     N-Triples). The graph term is dropped on import — the LPG mapping
@@ -175,72 +172,12 @@ def read_nquads(spark: SparkSession, path: str) -> DataFrame:
 
 def parse_nquads_lines(lines: DataFrame) -> DataFrame:
     """Parse a DataFrame of N-Quads lines (column ``value``)."""
-    stmt = lines.filter(
-        ~F.col("value").rlike(r"^\s*(#.*)?$")
-    ).select(
-        F.regexp_extract("value", _NQ_LINE, 1).alias("s_raw"),
-        F.regexp_extract("value", _NQ_LINE, 2).alias("predicate"),
-        F.regexp_extract("value", _NQ_LINE, 3).alias("o_raw"),
-    ).filter(F.col("predicate") != "")
-
-    s = F.when(
-        F.col("s_raw").startswith("<"),
-        F.expr("substring(s_raw, 2, length(s_raw) - 2)"),
-    ).otherwise(F.col("s_raw"))
-    is_literal = F.col("o_raw").startswith('"')
-    lex = F.regexp_extract("o_raw", _NT_LITERAL, 1)
-    lang = F.regexp_extract("o_raw", _NT_LITERAL, 2)
-    dtype = F.regexp_extract("o_raw", _NT_LITERAL, 3)
-    obj_iri = F.when(
-        F.col("o_raw").startswith("<"),
-        F.expr("substring(o_raw, 2, length(o_raw) - 2)"),
-    ).otherwise(F.col("o_raw"))
-    return stmt.select(
-        _unescape_iri(s).alias("subject"),
-        _unescape_iri(F.col("predicate")).alias("predicate"),
-        F.when(is_literal, _unescape(lex))
-        .otherwise(_unescape_iri(obj_iri))
-        .alias("object"),
-        is_literal.alias("is_literal"),
-        F.when(is_literal & (dtype != ""), dtype).alias("datatype"),
-        F.when(is_literal & (lang != ""), lang).alias("lang"),
-    )
+    return _parse_lines(lines, _NQ_LINE)
 
 
 def parse_ntriples_lines(lines: DataFrame) -> DataFrame:
     """Parse a DataFrame of N-Triples lines (column ``value``)."""
-    stmt = lines.filter(
-        ~F.col("value").rlike(r"^\s*(#.*)?$")  # drop comments/blank
-    ).select(
-        F.regexp_extract("value", _NT_LINE, 1).alias("s_raw"),
-        F.regexp_extract("value", _NT_LINE, 2).alias("predicate"),
-        F.regexp_extract("value", _NT_LINE, 3).alias("o_raw"),
-    ).filter(F.col("predicate") != "")
-
-    s = F.when(
-        F.col("s_raw").startswith("<"),
-        F.expr("substring(s_raw, 2, length(s_raw) - 2)"),
-    ).otherwise(F.col("s_raw"))
-
-    is_literal = F.col("o_raw").startswith('"')
-    lex = F.regexp_extract("o_raw", _NT_LITERAL, 1)
-    lang = F.regexp_extract("o_raw", _NT_LITERAL, 2)
-    dtype = F.regexp_extract("o_raw", _NT_LITERAL, 3)
-    obj_iri = F.when(
-        F.col("o_raw").startswith("<"),
-        F.expr("substring(o_raw, 2, length(o_raw) - 2)"),
-    ).otherwise(F.col("o_raw"))  # bnode
-
-    return stmt.select(
-        _unescape_iri(s).alias("subject"),
-        _unescape_iri(F.col("predicate")).alias("predicate"),
-        F.when(is_literal, _unescape(lex))
-        .otherwise(_unescape_iri(obj_iri))
-        .alias("object"),
-        is_literal.alias("is_literal"),
-        F.when(is_literal & (dtype != ""), dtype).alias("datatype"),
-        F.when(is_literal & (lang != ""), lang).alias("lang"),
-    )
+    return _parse_lines(lines, _NT_LINE)
 
 
 # ---------------------------------------------------------------------------

@@ -17,10 +17,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pidb_rdf_spark.functions.iri import XSD, build_uri, subject_term
+from pidb_rdf_spark.functions.iri import (
+    XSD,
+    build_uri_sql,
+    sql_string,
+    subject_term_sql,
+)
 from pidb_rdf_spark.graph import NODE_CORE, SIDECAR_COLS, PropertyGraph
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
+# the local names a Turtle prefixed name may carry here
+_PN_LOCAL = sql_string(r"^[A-Za-z0-9_](?:[A-Za-z0-9_.-]*[A-Za-z0-9_-])?$")
 
 
 def _ns_dict(graph: PropertyGraph) -> dict[str, str]:
@@ -31,6 +38,31 @@ def _ns_dict(graph: PropertyGraph) -> dict[str, str]:
         for r in graph.namespaces.collect()
         if r["namespace"]
     }
+
+
+_NO_LANG = "CAST(NULL AS STRING) AS lang"
+_NO_DATATYPE = "CAST(NULL AS STRING) AS datatype"
+
+
+def _escape_sql(value: str) -> str:
+    """SQL text of the N-Triples string escape of ``value``: the
+    backslash first, so the backslashes later replacements add stay
+    single."""
+    for raw, esc in (("\\", "\\\\"), ('"', '\\"'), ("\n", "\\n"), ("\r", "\\r"), ("\t", "\\t")):
+        value = f"replace({value}, {sql_string(raw)}, {sql_string(esc)})"
+    return value
+
+
+def _literal_sql(datatype_term: str) -> str:
+    """SQL text of a triples row's literal object (``"lex"@lang``,
+    ``"lex"^^datatype`` or ``"lex"``), shared by the N-Triples and
+    Turtle line writers; ``datatype_term`` is the SQL text rendering
+    the datatype IRI."""
+    return (
+        f"concat('\"', {_escape_sql('object')}, '\"', CASE "
+        "WHEN lang IS NOT NULL THEN concat('@', lang) "
+        f"WHEN datatype IS NOT NULL THEN concat('^^', {datatype_term}) ELSE '' END)"
+    )
 
 
 def graph_to_triples(
@@ -45,6 +77,10 @@ def graph_to_triples(
     (``Resource`` excluded — it is the importer's marker label); and
     resource triples from edges."""
     ns = _ns_dict(graph)
+
+    def uri(name: str) -> str:
+        return build_uri_sql(name, ns, default_ns)
+
     n = graph.nodes
     has_types = "__prop_types" in n.columns
     hot = [c for c in n.columns if c not in NODE_CORE and c not in SIDECAR_COLS]
@@ -53,118 +89,96 @@ def graph_to_triples(
     # keys that also exist as typed hot columns are emitted from the
     # hot branch only — an RDF graph is a SET of triples, and graphify
     # mirrors every hot column into the props map
-    entries = n.select(
-        F.col("uri").alias("subject"),
-        F.explode(F.col("props")).alias("key", "value"),
-        *([F.col("__prop_types")] if has_types else []),
+    entries = n.selectExpr(
+        "uri AS subject",
+        "explode(props) AS (key, value)",
+        *(["__prop_types"] if has_types else []),
     )
     if hot:
-        entries = entries.filter(~F.col("key").isin(hot))
-    family = (
-        F.coalesce(F.col("__prop_types")[F.col("key")], F.lit("string"))
-        if has_types
-        else F.lit("string")
-    )
-    lit_triples = entries.select(
-        F.col("subject"),
-        build_uri(F.col("key"), ns, default_ns).alias("predicate"),
-        F.col("value").alias("object"),
-        F.lit(True).alias("is_literal"),
-        F.when(family == "long", XSD + "long")
-        .when(family == "double", XSD + "double")
-        .when(family == "boolean", XSD + "boolean")
-        .alias("datatype"),
-        F.lit(None).cast("string").alias("lang"),
+        entries = entries.filter(f"key NOT IN ({', '.join(map(sql_string, hot))})")
+    # stored family -> XSD datatype of the literal (F6); strings untyped
+    datatype = _NO_DATATYPE
+    if has_types:
+        families = "".join(
+            f"WHEN '{f}' THEN {sql_string(XSD + f)} " for f in ("long", "double", "boolean")
+        )
+        datatype = f"CASE __prop_types[key] {families}END AS datatype"
+    lit_triples = entries.selectExpr(
+        "subject",
+        f"{uri('key')} AS predicate",
+        "value AS object",
+        "true AS is_literal",
+        datatype,
+        _NO_LANG,
     )
 
     # --- typed hot columns (graphified tables) ------------------------
+    dtypes = dict(n.dtypes)
     hot_frames = []
     for c in hot:
-        dt = dict(n.dtypes)[c]
+        dt = dtypes[c]
         datatype = (
             XSD + "long" if dt in ("bigint", "int", "smallint", "tinyint")
             else XSD + "double" if dt in ("double", "float")
             else XSD + "boolean" if dt == "boolean"
             else None
         )
+        col = "`" + c.replace("`", "``") + "`"
         hot_frames.append(
-            n.filter(F.col(c).isNotNull()).select(
-                F.col("uri").alias("subject"),
-                build_uri(F.lit(c), ns, default_ns).alias("predicate"),
-                F.col(c).cast("string").alias("object"),
-                F.lit(True).alias("is_literal"),
-                F.lit(datatype).cast("string").alias("datatype"),
-                F.lit(None).cast("string").alias("lang"),
+            n.filter(f"{col} IS NOT NULL").selectExpr(
+                "uri AS subject",
+                f"{uri(sql_string(c))} AS predicate",
+                f"CAST({col} AS STRING) AS object",
+                "true AS is_literal",
+                f"{sql_string(datatype)} AS datatype" if datatype else _NO_DATATYPE,
+                _NO_LANG,
             )
         )
 
     # --- labels -> rdf:type -------------------------------------------
     label_triples = (
-        n.select(F.col("uri").alias("subject"), F.explode("labels").alias("label"))
-        .filter(F.col("label") != "Resource")
-        .select(
+        n.selectExpr("uri AS subject", "explode(labels) AS label")
+        .filter("label != 'Resource'")
+        .selectExpr(
             "subject",
-            F.lit(RDF_TYPE).alias("predicate"),
-            build_uri(F.col("label"), ns, default_ns).alias("object"),
-            F.lit(False).alias("is_literal"),
-            F.lit(None).cast("string").alias("datatype"),
-            F.lit(None).cast("string").alias("lang"),
+            f"{sql_string(RDF_TYPE)} AS predicate",
+            f"{uri('label')} AS object",
+            "false AS is_literal",
+            _NO_DATATYPE,
+            _NO_LANG,
         )
     )
 
     # --- edges --------------------------------------------------------
-    src_uri = n.select(F.col("id").alias("src"), F.col("uri").alias("subject"))
-    dst_uri = n.select(F.col("id").alias("dst"), F.col("uri").alias("object"))
-    edge_triples = (
-        graph.edges.join(src_uri, on="src")
-        .join(dst_uri, on="dst")
-        .select(
-            "subject",
-            build_uri(F.col("predicate"), ns, default_ns).alias("predicate"),
-            "object",
-            F.lit(False).alias("is_literal"),
-            F.lit(None).cast("string").alias("datatype"),
-            F.lit(None).cast("string").alias("lang"),
-        )
-    )
-
     out = lit_triples
     for fr in hot_frames:
         out = out.unionByName(fr)
-    return out.unionByName(label_triples).unionByName(edge_triples)
+    return out.unionByName(label_triples).unionByName(
+        _edge_triples(n, graph.edges, uri)
+    )
+
+
+def _edge_triples(nodes: DataFrame, edges: DataFrame, uri) -> DataFrame:
+    """Resource triples of ``edges``, their ends looked up in ``nodes``
+    and the predicate expanded by the SQL-text builder ``uri``."""
+    src_uri = nodes.selectExpr("id AS src", "uri AS subject")
+    dst_uri = nodes.selectExpr("id AS dst", "uri AS object")
+    return edges.join(src_uri, on="src").join(dst_uri, on="dst").selectExpr(
+        "subject",
+        f"{uri('predicate')} AS predicate",
+        "object",
+        "false AS is_literal",
+        _NO_DATATYPE,
+        _NO_LANG,
+    )
 
 
 def triples_to_ntriples_lines(triples: DataFrame) -> DataFrame:
     """triples rows -> one N-Triples line per row (column ``value``)."""
-    esc = F.regexp_replace(F.col("object"), r"\\", r"\\\\")
-    esc = F.regexp_replace(esc, '"', '\\\\"')
-    esc = F.regexp_replace(esc, "\n", "\\\\n")
-    esc = F.regexp_replace(esc, "\r", "\\\\r")
-    esc = F.regexp_replace(esc, "\t", "\\\\t")
-    obj = (
-        F.when(
-            ~F.col("is_literal"),
-            subject_term(F.col("object")),
-        )
-        .when(
-            F.col("lang").isNotNull(),
-            F.concat(F.lit('"'), esc, F.lit('"@'), F.col("lang")),
-        )
-        .when(
-            F.col("datatype").isNotNull(),
-            F.concat(F.lit('"'), esc, F.lit('"^^<'), F.col("datatype"), F.lit(">")),
-        )
-        .otherwise(F.concat(F.lit('"'), esc, F.lit('"')))
-    )
-    return triples.select(
-        F.concat(
-            subject_term(F.col("subject")),
-            F.lit(" <"),
-            F.col("predicate"),
-            F.lit("> "),
-            obj,
-            F.lit(" ."),
-        ).alias("value")
+    literal = _literal_sql("concat('<', datatype, '>')")
+    obj = f"IF(is_literal, {literal}, {subject_term_sql('object')})"
+    return triples.selectExpr(
+        f"concat({subject_term_sql('subject')}, ' <', predicate, '> ', {obj}, ' .') AS value"
     )
 
 
@@ -223,20 +237,7 @@ def describe_nodes(
         .dropDuplicates(["id"])
     )
     ns = _ns_dict(graph)
-    src_uri = n.select(F.col("id").alias("src"), F.col("uri").alias("subject"))
-    dst_uri = n.select(F.col("id").alias("dst"), F.col("uri").alias("object"))
-    ctx = (
-        touching.join(src_uri, on="src")
-        .join(dst_uri, on="dst")
-        .select(
-            "subject",
-            build_uri(F.col("predicate"), ns).alias("predicate"),
-            "object",
-            F.lit(False).alias("is_literal"),
-            F.lit(None).cast("string").alias("datatype"),
-            F.lit(None).cast("string").alias("lang"),
-        )
-    )
+    ctx = _edge_triples(n, touching, lambda name: build_uri_sql(name, ns))
     return own.unionByName(ctx)
 
 
@@ -251,8 +252,7 @@ def triples_to_turtle_lines(
     """
     namespaces = namespaces or {}
 
-    def term(col):
-        out = None
+    def term(col: str) -> str:
         # longest-namespace-first so nested namespaces prefix correctly;
         # only a conservative PN_LOCAL subset may be prefixed (word
         # chars, digits, '-', '.', not starting/ending with '.') —
@@ -260,44 +260,20 @@ def triples_to_turtle_lines(
         # through (dbr:Paris_(France), names ending in '.') and every
         # standard Turtle parser rejects the file; everything else
         # falls back to the always-valid <full IRI> form
+        cases = []
         for ns, pfx in sorted(namespaces.items(), key=lambda kv: -len(kv[0])):
-            local = col.substr(F.lit(len(ns) + 1), F.length(col))
-            cond = col.startswith(ns) & local.rlike(
-                r"^[A-Za-z0-9_](?:[A-Za-z0-9_.-]*[A-Za-z0-9_-])?$"
+            local = f"substr({col}, {len(ns) + 1})"
+            cases.append(
+                f"WHEN startswith({col}, {sql_string(ns)}) AND {local} rlike {_PN_LOCAL} "
+                f"THEN concat({sql_string(pfx + ':')}, {local}) "
             )
-            pname = F.concat(F.lit(pfx), F.lit(":"), local)
-            out = F.when(cond, pname) if out is None else out.when(cond, pname)
-        fallback = subject_term(col)
-        return out.otherwise(fallback) if out is not None else fallback
+        fallback = subject_term_sql(col)
+        return f"CASE {''.join(cases)}ELSE {fallback} END" if cases else fallback
 
-    esc = F.regexp_replace(F.col("object"), r"\\", r"\\\\")
-    esc = F.regexp_replace(esc, '"', '\\\\"')
-    esc = F.regexp_replace(esc, "\n", "\\\\n")
-    esc = F.regexp_replace(esc, "\r", "\\\\r")
-    esc = F.regexp_replace(esc, "\t", "\\\\t")
-    obj = (
-        F.when(~F.col("is_literal"), term(F.col("object")))
-        .when(
-            F.col("lang").isNotNull(),
-            F.concat(F.lit('"'), esc, F.lit('"@'), F.col("lang")),
-        )
-        .when(
-            F.col("datatype").isNotNull(),
-            F.concat(F.lit('"'), esc, F.lit('"^^'), term(F.col("datatype"))),
-        )
-        .otherwise(F.concat(F.lit('"'), esc, F.lit('"')))
-    )
-    body = triples.select(
-        F.concat(
-            term(F.col("subject")),
-            F.lit(" "),
-            F.when(F.col("predicate") == RDF_TYPE, F.lit("a")).otherwise(
-                term(F.col("predicate"))
-            ),
-            F.lit(" "),
-            obj,
-            F.lit(" ."),
-        ).alias("value")
+    obj = f"IF(is_literal, {_literal_sql(term('datatype'))}, {term('object')})"
+    pred = f"IF(predicate = {sql_string(RDF_TYPE)}, 'a', {term('predicate')})"
+    body = triples.selectExpr(
+        f"concat({term('subject')}, ' ', {pred}, ' ', {obj}, ' .') AS value"
     )
     # Turtle prefix declarations are per-document state, and the
     # parallel writer emits one file per partition — so EVERY
@@ -335,12 +311,8 @@ def triples_to_nquads_lines(
     if graph_iri is None:
         return nt
     # splice the graph term before the closing ' .'
-    return nt.select(
-        F.concat(
-            F.expr("substring(value, 1, length(value) - 2)"),
-            F.lit(f" <{graph_iri}> ."),
-        ).alias("value")
-    )
+    graph_term = sql_string(f" <{graph_iri}> .")
+    return nt.selectExpr(f"concat(substring(value, 1, length(value) - 2), {graph_term}) AS value")
 
 
 def export_nquads(

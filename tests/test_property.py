@@ -139,6 +139,95 @@ def test_rdf_literal_roundtrip(spark, data):
     assert back == orig
 
 
+_NON_SURROGATE = st.characters(blacklist_categories=("Cs",))
+
+
+def _uchar(c: str, wide: bool, upper: bool) -> str:
+    """``c`` as a UCHAR: ``\\uXXXX`` or ``\\UXXXXXXXX``, hex in either case."""
+    esc = f"U{ord(c):08x}" if wide or ord(c) > 0xFFFF else f"u{ord(c):04x}"
+    return "\\" + esc[0] + (esc[1:].upper() if upper else esc[1:])
+
+
+_uchar_strategy = st.builds(_uchar, _NON_SURROGATE, st.booleans(), st.booleans())
+_echar_strategy = st.sampled_from(["\\\\", '\\"', "\\'", "\\t", "\\b", "\\n", "\\r", "\\f"])
+# lexical forms of N-Triples string literals: escapes of every kind
+# (\u0000 and \u005C included) between runs of raw text (raw NUL
+# included; raw '"', '\\', LF and CR must be escaped in the grammar)
+_lexical_strategy = st.lists(
+    st.one_of(
+        _echar_strategy,
+        _uchar_strategy,
+        st.sampled_from(["\\u0000", "\\u005C", "\\u005c", "\x00"]),
+        st.text(
+            alphabet=st.characters(
+                blacklist_categories=("Cs",), blacklist_characters='"\\\n\r'
+            ),
+            max_size=4,
+        ),
+    ),
+    max_size=8,
+).map("".join)
+# IRIREF bodies: UCHAR escapes between runs of raw IRI characters
+_iri_strategy = st.lists(
+    st.one_of(
+        _uchar_strategy,
+        st.text(alphabet="abcXYZ019/#:.-_~%", min_size=1, max_size=4),
+    ),
+    max_size=6,
+).map(lambda parts: "http://ex.org/" + "".join(parts))
+
+
+@SLOW
+@given(
+    terms=st.lists(st.tuples(_iri_strategy, _lexical_strategy), min_size=1, max_size=20)
+)
+def test_line_parse_decodes_like_python_twin(spark, terms):
+    """The SQL-text N-Triples and N-Quads term decoder matches the
+    pure-Python ``unescape_string`` on escape-heavy literal lexical
+    forms and UCHAR-bearing IRIs, statement by statement."""
+    from pidb_rdf_spark.sources.rdf_reader import (
+        parse_nquads_lines,
+        parse_ntriples_lines,
+        unescape_string,
+    )
+
+    want = sorted(
+        (i, unescape_string(iri), unescape_string(lex))
+        for i, (iri, lex) in enumerate(terms)
+    )
+    for parse, graph in ((parse_ntriples_lines, ""), (parse_nquads_lines, " <urn:g>")):
+        lines = spark.createDataFrame(
+            [(f'<{iri}> <urn:p{i}> "{lex}"{graph} .',) for i, (iri, lex) in enumerate(terms)],
+            ["value"],
+        )
+        got = sorted(
+            (int(r.predicate[5:]), r.subject, r.object) for r in parse(lines).collect()
+        )
+        assert got == want
+
+
+@SLOW
+@given(
+    texts=st.lists(st.text(alphabet=_NON_SURROGATE, max_size=12), min_size=1, max_size=20),
+    lang=st.sampled_from([None, "en"]),
+)
+def test_ntriples_write_parse_roundtrip_full_unicode(spark, texts, lang):
+    """Any Unicode text (control characters, raw NUL, quotes,
+    backslashes, line separators, astral planes) survives
+    ``triples_to_ntriples_lines`` and the line parse unchanged."""
+    from pidb_rdf_spark.sources.rdf_reader import TRIPLES_SCHEMA, parse_ntriples_lines
+    from pidb_rdf_spark.sources.rdf_writer import triples_to_ntriples_lines
+
+    triples = spark.createDataFrame(
+        [("urn:s", f"urn:p{i}", t, True, None, lang) for i, t in enumerate(texts)],
+        TRIPLES_SCHEMA,
+    )
+    back = parse_ntriples_lines(triples_to_ntriples_lines(triples)).collect()
+    assert sorted((r.predicate, r.object, r.lang) for r in back) == sorted(
+        (f"urn:p{i}", t, lang) for i, t in enumerate(texts)
+    )
+
+
 @SLOW
 @given(
     vectors=st.lists(

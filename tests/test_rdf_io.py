@@ -1411,6 +1411,46 @@ def test_ntriples_uchar_escapes(spark, tmp_path):
     ]
 
 
+def test_ntriples_every_echar_and_raw_nul(spark, tmp_path):
+    """The line parse decodes every ECHAR N-Triples 1.1 defines —
+    \\b, \\f and \\' as well as \\t \\n \\r \\" \\\\ — and a raw
+    U+0000 inside a literal (legal N-Triples) stays U+0000, in both
+    line formats and through the file reader."""
+    from pidb_rdf_spark.sources.rdf_reader import read_ntriples
+
+    nt = (
+        '<urn:a> <urn:p> "a\\bb\\fc\\\'d" .\n'
+        '<urn:a> <urn:q> "a\x00b" .\n'
+        '<urn:a> <urn:r> "\\t\\n\\r\\"\\\\" .\n'
+    )
+    want = {"urn:p": "a\bb\fc'd", "urn:q": "a\x00b", "urn:r": '\t\n\r"\\'}
+    for fmt in ("N-Triples", "N-Quads"):
+        rows = parse_rdf_snippet(spark, nt, fmt).collect()
+        assert {r.predicate: r.object for r in rows} == want, fmt
+    p = tmp_path / "echar.nt"
+    p.write_text(nt)
+    rows = read_ntriples(spark, str(p)).collect()
+    assert {r.predicate: r.object for r in rows} == want
+
+
+def test_import_parses_its_input_once(spark):
+    """import_triples reads its (lazy) input once: namespace discovery
+    and every nodes/edges branch share one materialized parse."""
+    from pidb_rdf_spark.sources.rdf_reader import TRIPLES_SCHEMA
+
+    parses = spark.sparkContext.accumulator(0)
+
+    def parse(doc):
+        parses.add(1)
+        return parse_turtle_text(doc)
+
+    triples = spark.sparkContext.parallelize([TTL], 1).flatMap(parse).toDF(TRIPLES_SCHEMA)
+    g = import_triples(spark, triples)
+    nodes, edges = g.nodes.localCheckpoint(), g.edges.localCheckpoint()
+    assert (nodes.count(), edges.count()) == (3, 2)
+    assert parses.value == 1
+
+
 def test_graphson_roundtrip(spark, tmp_path):
     """GraphSON adjacency export → import preserves the graph:
     uris, multi-labels (``::`` join), node/edge props, endpoints —
