@@ -24,61 +24,24 @@ Scale shape shared by every loop below:
 The frontier-shaped loops (BFS, Bellman-Ford, Brandes' forward pass)
 run on :mod:`pidb_rdf_spark.frontier`, whose module docstring states
 the convergence policy every loop here follows: a round budget that
-runs out raises; only an explicit bound returns a bounded answer.
+runs out raises; only an explicit bound returns a bounded answer. The
+vertex-program loops (PageRank, HITS, eigenvector, label propagation,
+min-label components, SCC) run their SQL-text rounds through
+``frontier.rounds``; the loops with their own bodies (star
+components, betweenness, Louvain, the neighborhood function) run in a
+``frontier.pinned`` loop session. Either way a loop's layout conf is
+set on its own session: loops never change the caller's conf.
 """
 
 from __future__ import annotations
 
-import itertools
 import os
-import threading
-from contextlib import contextmanager
+from functools import reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pidb_rdf_spark import frontier
-
-# Below this state size, whole-stage codegen is disabled inside
-# fixpoint loops: Janino compilation of each round's stages costs more
-# than interpreting a few-MB state ever could (measured ~1.3 s of the
-# 4.7 s pagerank wall at sf0.1). Above it, codegen pays for itself and
-# stays on. Env-overridable for cluster tuning.
-_LOOP_CODEGEN_OFF_MAX_ROWS = int(
-    os.environ.get("SPARK_GRAFT_LOOP_CODEGEN_OFF_MAX_ROWS", "5000000")
-)
-
-# Target rows per partition for the pinned loop layout; N =
-# clamp(state_rows // this + 1, 1, session shuffle partitions), so the
-# local bench gets 1 partition (no scheduling waste on KB-sized state)
-# and a cluster session (whose shuffle.partitions is sized for the
-# cluster) keeps its full configured parallelism once the state is
-# big enough to use it.
-_LOOP_ROWS_PER_PARTITION = int(
-    os.environ.get("SPARK_GRAFT_LOOP_ROWS_PER_PARTITION", "100000")
-)
-
-# State-size gate for connected_components' pinned-layout loop. Below
-# this many state rows the `_fixpoint_conf` form would run the whole
-# loop on ONE partition with AQE and broadcasts off, plus fixed setup
-# jobs (node count + two repartition+checkpoints) that never amortize;
-# the AQE form with the planner's broadcast-friendly defaults wins
-# there. Equal to _LOOP_ROWS_PER_PARTITION — the first state size at
-# which the sizer allocates a second partition, i.e. the point where
-# the pinned layout starts to mean something.
-_FIXPOINT_MIN_STATE_ROWS = _LOOP_ROWS_PER_PARTITION
-
-# _fixpoint_conf mutates SESSION-GLOBAL SQL conf for the duration of a
-# loop. Concurrent loops on one session (threads submitting queries in
-# parallel, guide §2.6) would otherwise clobber each other's settings
-# and restore the wrong saved values; this lock serializes the loops
-# themselves (reentrant, so a loop that calls another loop nests
-# correctly: the inner restores the outer's values, the outer restores
-# the originals). Non-loop queries submitted concurrently from other
-# threads still observe the loop's conf while it runs — inherent to
-# session-global conf; isolate with a separate SparkSession
-# (`spark.newSession()`) when that matters.
-_FIXPOINT_LOCK = threading.RLock()
 
 # negative_samples broadcasts its ranked-vocabulary draw join only
 # when the exact vocab count (from ranked_vocabulary's bounded count
@@ -89,85 +52,6 @@ _FIXPOINT_LOCK = threading.RLock()
 _NEG_BROADCAST_MAX_VOCAB = int(
     os.environ.get("SPARK_GRAFT_NEG_BROADCAST_MAX_VOCAB", "250000")
 )
-
-_VIEW_SEQ = itertools.count()
-
-
-@contextmanager
-def _fixpoint_conf(spark, n_state_rows: int):
-    """Pin a STATIC layout for a fixpoint loop and yield the partition
-    count N to lay the loop frames out with (guide §2.4: remove
-    shuffles outright; §1.2: fix the distributed algorithm first).
-
-    Inside the block:
-
-    - ``spark.sql.adaptive.enabled=false``: two reasons. (a) AQE
-      materializes every Exchange as its OWN job — a 10-round loop
-      with ~5 exchanges/round schedules ~50+ jobs whose fixed overhead
-      dominates at small state (measured 123 jobs / 10 rounds for
-      pagerank at sf0.1; 28 after this change). (b) PySpark's
-      ``localCheckpoint`` under AQE erases the output partitioning
-      (``UnknownPartitioning``), so round r+1 cannot reuse round r's
-      layout and every round re-shuffles BOTH join sides. With AQE
-      off, checkpoints preserve ``HashPartitioning`` and the loop
-      below runs each round with exactly ONE data shuffle (the
-      aggregation) — which is also the right plan at 100 TB: the edge
-      frame is shuffled once before the loop, never per round. The
-      loop body's shapes are fully known after round one; there is
-      nothing left for AQE to adapt.
-    - ``spark.sql.shuffle.partitions=N``: aggregations inside the loop
-      land on the same N the loop frames were repartitioned to, so
-      state⋈contrib joins need no exchange. N is size-derived (never a
-      constant): small state → 1 partition locally, large state → the
-      session's configured parallelism.
-    - ``spark.sql.autoBroadcastJoinThreshold=-1``: keeps the planner
-      from broadcasting the state side each round (a per-round
-      broadcast-build job); the co-partitioned sort-merge join is
-      exchange-free and cheaper every round after the first.
-    - whole-stage codegen off for small states only (see
-      ``_LOOP_CODEGEN_OFF_MAX_ROWS``).
-
-    Everything is restored on exit, including on error. The whole
-    block runs under ``_FIXPOINT_LOCK`` (see its comment): interleaved
-    loops on one session serialize instead of corrupting each other's
-    saved conf."""
-    keys = (
-        "spark.sql.adaptive.enabled",
-        "spark.sql.shuffle.partitions",
-        "spark.sql.autoBroadcastJoinThreshold",
-        "spark.sql.codegen.wholeStage",
-    )
-    with _FIXPOINT_LOCK:
-        saved = {k: spark.conf.get(k) for k in keys}
-        n_parts = max(
-            1,
-            min(
-                int(saved["spark.sql.shuffle.partitions"]),
-                int(n_state_rows) // _LOOP_ROWS_PER_PARTITION + 1,
-            ),
-        )
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        if n_state_rows <= _LOOP_CODEGEN_OFF_MAX_ROWS:
-            spark.conf.set("spark.sql.codegen.wholeStage", "false")
-        try:
-            yield n_parts
-        finally:
-            for k, v in saved.items():
-                spark.conf.set(k, v)
-
-
-def _loop_view(df: DataFrame, prefix: str) -> str:
-    """Register ``df`` under a fresh unique temp-view name and return
-    it. Fixpoint loops re-register the per-round state under the SAME
-    name (``createOrReplaceTempView``), so the round's SQL text is
-    built once and re-parsed per round — ~3 py4j calls per round
-    instead of ~25 DataFrame-API calls (measured 180-240 ms/round of
-    pure Python driver time at sf0.1, the largest single line item)."""
-    name = f"__{prefix}_{next(_VIEW_SEQ)}"
-    df.createOrReplaceTempView(name)
-    return name
 
 
 def _components_driver_side(spark, edge_rows, id_dtype) -> DataFrame:
@@ -246,95 +130,52 @@ def connected_components(
                 pairs.sparkSession, probe, edges.schema["src"].dataType
             )
     edges = edges.localCheckpoint(eager=True)
-    spark = pairs.sparkSession
     nodes = (
         edges.select(F.col("src").alias("node"))
         .dropDuplicates()
         .localCheckpoint(eager=True)
     )
     n = nodes.count()
-    # State-size gate (see _FIXPOINT_MIN_STATE_ROWS): small graphs run
-    # the AQE loop — same min-label math, identical output. The nodes
-    # frame is shared: the small path seeds its labels from the same
-    # checkpoint.
-    if n < _FIXPOINT_MIN_STATE_ROWS:
-        return _connected_components_small(edges, nodes, max_iter)
-    # Pinned-layout loop (_fixpoint_conf): edges laid out by dst (the
-    # per-round join key) once, labels by node. Per round: the
-    # neighbor-min aggregate is the ONE exchange (GROUP BY src over
-    # the co-partitioned join ∪ own label), and the convergence test
-    # rides the same statement as a layout-preserving self-join flag
-    # (__chg) instead of a separate join job. min() over ids is
-    # order-independent, so values are identical to the
-    # union+groupBy-min form this replaces.
-    with _fixpoint_conf(spark, n) as n_parts:
-        ew = edges.repartition(n_parts, "dst").localCheckpoint(eager=True)
-        labels = (
-            nodes.select("node", F.col("node").alias("component"))
-            .repartition(n_parts, "node")
-            .localCheckpoint(eager=True)
-        )
-        vl = _loop_view(labels, "cc_labels")
-        ve = _loop_view(ew, "cc_edges")
-        round_sql = f"""
-            SELECT m.node, m.component,
-                   (m.component != l.component) AS __chg
-            FROM (
-              SELECT node, min(component) AS component
-              FROM (
-                SELECT e.src AS node, nl.component
-                FROM {ve} e JOIN {vl} nl ON e.dst = nl.node
-                UNION ALL
-                SELECT node, component FROM {vl}
-              )
-              GROUP BY node
-            ) m JOIN {vl} l ON m.node = l.node
-        """
-        try:
-            for _ in range(max_iter):
-                labels.createOrReplaceTempView(vl)
-                labels = spark.sql(round_sql).localCheckpoint(eager=True)
-                if labels.filter("__chg").isEmpty():
-                    break
-            else:
-                raise frontier.exhausted("connected_components", max_iter)
-        finally:
-            spark.catalog.dropTempView(vl)
-            spark.catalog.dropTempView(ve)
-    return labels.select("node", "component")
+    # State-size gate: below frontier._FIXPOINT_MIN_STATE_ROWS the same
+    # rounds run with the caller's planner defaults (AQE, broadcasts)
+    return _min_label(
+        edges.select("src", F.col("dst").alias("node")),
+        nodes.select("node", F.col("node").alias("label")),
+        n, max_iter, n >= frontier._FIXPOINT_MIN_STATE_ROWS,
+        "connected_components",
+    ).select("node", F.col("label").alias("component"))
 
 
-def _connected_components_small(
-    edges: DataFrame, nodes: DataFrame, max_iter: int
-) -> DataFrame:
-    """Min-label propagation below the pinned-layout gate: the AQE
-    form — per round one union+groupBy-min plus a convergence join,
-    planner defaults (broadcast, AQE) left on. ``edges`` is the
-    symmetrized, checkpointed edge set; ``nodes`` its checkpointed
-    distinct endpoints (shared with the caller's gate probe). Output
-    contract identical to the pinned path: (node, component),
-    component = min reachable id."""
-    labels = nodes.select(F.col("node"), F.col("node").alias("component"))
-    for _ in range(max_iter):
-        # each node's new label: min(own, min over neighbors' labels)
-        nbr = edges.join(
-            labels.withColumnRenamed("node", "dst"), on="dst", how="inner"
-        ).select(F.col("src").alias("node"), F.col("component"))
-        new = (
-            labels.unionAll(nbr)
-            .groupBy("node")
-            .agg(F.min("component").alias("component"))
-            .localCheckpoint(eager=True)
-        )
-        converged = (
-            new.join(labels.withColumnRenamed("component", "old"), on="node")
-            .filter(F.col("component") != F.col("old"))
-            .isEmpty()
-        )
-        labels = new
-        if converged:
-            return labels
-    raise frontier.exhausted("connected_components", max_iter)
+def _min_label(edges, labels, n, max_iter, pin, what, part=""):
+    """Min-label propagation to fixpoint: every node of ``labels``
+    (node[, part], label) repeatedly takes the min of its own label
+    and the labels of its ``edges`` (src, node[, part]) neighbors, the
+    label flowing from ``node`` to ``src`` within one ``part``. One
+    :func:`frontier.rounds` statement per round — the neighbor-min
+    aggregate is the one exchange of a pinned round (GROUP BY over
+    the co-partitioned join ∪ own label) and the convergence flag
+    ``__chg`` rides the same statement as a layout-preserving
+    self-join. min() over ids is order-independent, so the pinned and
+    the planner-default (``pin`` false) forms give identical labels."""
+    k = f", {part}" if part else ""
+    round_sql = f"""
+        SELECT node{k}, m.label, (m.label != l.label) AS __chg
+        FROM (
+          SELECT node{k}, min(label) AS label
+          FROM (
+            SELECT e.src AS node{k}, nl.label
+            FROM edges e JOIN labels nl USING (node{k})
+            UNION ALL
+            SELECT node{k}, label FROM labels
+          )
+          GROUP BY node{k}
+        ) m JOIN labels l USING (node{k})
+    """
+    key = ["node", part] if part else "node"
+    return frontier.rounds(
+        labels.sparkSession, n, {"edges": (edges, key)}, (labels, key),
+        [("labels", round_sql)], max_iter, flag="__chg", pin=pin, what=what,
+    )["labels"]
 
 
 def connected_components_star(
@@ -365,28 +206,12 @@ def connected_components_star(
             .select("src", F.least(F.col("src"), F.col("_mn")).alias("m"))
         )
 
-    cur = edges
-    n_cur = cur.count()
-    # the alternating rounds run under the pinned static layout (AQE
-    # off, size-derived partitions); the edge set is the loop state,
-    # so it is the sizer
-    with _fixpoint_conf(edges.sparkSession, n_cur):
-        cur, n_cur = _components_star_rounds(cur, n_cur, max_iter, min_nbr)
-    # at the fixpoint every non-root neighbors its component min
-    labels = min_nbr(cur).select(
-        F.col("src").alias("node"), F.col("m").alias("component")
-    )
-    # isolated-after-contraction roots keep themselves
-    roots = all_nodes.join(labels.select("node"), on="node", how="leftanti")
-    return labels.unionAll(
-        roots.select("node", F.col("node").alias("component"))
-    )
-
-
-def _components_star_rounds(cur, n_cur, max_iter, min_nbr):
-    """The large-star/small-star rounds of
-    :func:`connected_components_star`, run under the caller's pinned
-    layout; returns the fixpoint edge set and its size."""
+    spark = edges.sparkSession
+    n_cur = edges.count()
+    # the alternating rounds run in a pinned loop session; the edge
+    # set is the loop state, so it is the sizer
+    loop, _ = frontier.pinned(spark, n_cur)
+    cur = frontier.bind(edges, loop)
     for _ in range(max_iter):
         # large-star: (v, m(u)) for v ∈ Γ(u), v > u
         m = min_nbr(cur)
@@ -432,8 +257,19 @@ def _components_star_rounds(cur, n_cur, max_iter, min_nbr):
         cur = nxt
         n_cur = n_nxt
         if not changed:
-            return cur, n_cur
-    raise frontier.exhausted("connected_components_star", max_iter)
+            break
+    else:
+        raise frontier.exhausted("connected_components_star", max_iter)
+    cur = frontier.bind(cur, spark)
+    # at the fixpoint every non-root neighbors its component min
+    labels = min_nbr(cur).select(
+        F.col("src").alias("node"), F.col("m").alias("component")
+    )
+    # isolated-after-contraction roots keep themselves
+    roots = all_nodes.join(labels.select("node"), on="node", how="leftanti")
+    return labels.unionAll(
+        roots.select("node", F.col("node").alias("component"))
+    )
 
 
 def shortest_hops(
@@ -577,87 +413,67 @@ def pagerank(
         m = seeds.count()
         if m == 0:
             raise ValueError("no personalization seed exists in the graph")
-    # Pinned-layout loop (see _fixpoint_conf): the per-round join key
-    # is src on the edge side and node on the state side, so both loop
-    # invariants are hash-laid-out ONCE before the loop — per round,
-    # the only data shuffle left is the contribution aggregation
-    # (map-side partial, ≤|V| rows after it), and the dangling mass
-    # rides along as a 1-row scalar subquery, never a driver
-    # round-trip. The per-node out-degree is FOLDED INTO the edge
-    # frame (one setup join) instead of being re-joined every round,
-    # and the dangling test is a static per-node flag (sdeg NULL =
-    # no out-edges) carried in the state frame instead of a per-round
-    # LEFT ANTI join. Float semantics are expression-for-expression
-    # those of the r12 implementation (the oracle replays them); only
-    # partition layout and plan shape changed.
-    with _fixpoint_conf(spark, n) as n_parts:
-        if weight is None:
-            out_deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
-        else:
-            out_deg = edges.groupBy("src").agg(F.sum("w").alias("deg"))
-        ew_cols = ["src", "dst", "deg"] + (["w"] if weight is not None else [])
-        ew = (
-            edges.join(out_deg, on="src")
-            .select(*ew_cols)
-            .repartition(n_parts, "src")
-            .localCheckpoint(eager=True)
+    # Pinned rounds: the per-round join key is src on the edge side
+    # and node on the state side, so both are laid out ONCE before the
+    # loop — per round, the only data shuffle left is the contribution
+    # aggregation (map-side partial, ≤|V| rows after it), and the
+    # dangling mass rides along as a 1-row scalar subquery, never a
+    # driver round-trip. The per-node out-degree is FOLDED INTO the
+    # edge frame (one setup join), and the dangling test is a static
+    # per-node flag (sdeg NULL = no out-edges) carried in the state.
+    # The float expressions are the ones the oracle replays.
+    if weight is None:
+        out_deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
+    else:
+        out_deg = edges.groupBy("src").agg(F.sum("w").alias("deg"))
+    ew_cols = ["src", "dst", "deg"] + (["w"] if weight is not None else [])
+    ew = edges.join(out_deg, on="src").select(*ew_cols)
+    state = nodes.join(
+        out_deg.withColumnRenamed("src", "node"), on="node", how="left"
+    ).withColumnRenamed("deg", "sdeg")
+    if personalize is None:
+        state = state.select("node", (F.lit(1.0) / n).alias("rank"), "sdeg")
+    else:
+        state = (
+            state.join(
+                seeds.select("node", F.lit(1).alias("__s")),
+                on="node",
+                how="left",
+            )
+            .withColumn(
+                "pref",
+                F.when(F.col("__s").isNotNull(), F.lit(1.0 / m))
+                .otherwise(F.lit(0.0)),
+            )
+            .select("node", F.col("pref").alias("rank"), "sdeg", "pref")
         )
-        state = nodes.join(
-            out_deg.withColumnRenamed("src", "node"), on="node", how="left"
-        ).withColumnRenamed("deg", "sdeg")
-        if personalize is None:
-            state = state.select(
-                "node", (F.lit(1.0) / n).alias("rank"), "sdeg"
-            )
-        else:
-            state = (
-                state.join(
-                    seeds.select("node", F.lit(1).alias("__s")),
-                    on="node",
-                    how="left",
-                )
-                .withColumn(
-                    "pref",
-                    F.when(F.col("__s").isNotNull(), F.lit(1.0 / m))
-                    .otherwise(F.lit(0.0)),
-                )
-                .select(
-                    "node", F.col("pref").alias("rank"), "sdeg", "pref"
-                )
-            )
-        state = state.repartition(n_parts, "node").localCheckpoint(eager=True)
-        vs = _loop_view(state, "pr_state")
-        ve = _loop_view(ew, "pr_ew")
-        share = "st.rank / e.deg" if weight is None else "st.rank * e.w / e.deg"
-        dang = f"(SELECT coalesce(sum(rank), 0.0d) FROM {vs} WHERE sdeg IS NULL)"
-        if personalize is None:
-            rank_expr = (
-                f"{(1.0 - damping) / n!r}d + {damping!r}d * {dang} / {float(n)!r}d"
-                f" + {damping!r}d * coalesce(c.in_rank, 0.0d)"
-            )
-            keep = "s.sdeg"
-        else:
-            rank_expr = (
-                f"{1.0 - damping!r}d * s.pref + {damping!r}d * {dang} * s.pref"
-                f" + {damping!r}d * coalesce(c.in_rank, 0.0d)"
-            )
-            keep = "s.sdeg, s.pref"
-        round_sql = f"""
-            SELECT s.node, {rank_expr} AS rank, {keep}
-            FROM {vs} s
-            LEFT JOIN (
-              SELECT e.dst AS node, sum({share}) AS in_rank
-              FROM {ve} e JOIN {vs} st ON e.src = st.node
-              GROUP BY e.dst
-            ) c ON s.node = c.node
-        """
-        try:
-            for _ in range(n_iter):
-                state.createOrReplaceTempView(vs)
-                state = spark.sql(round_sql).localCheckpoint(eager=True)
-        finally:
-            spark.catalog.dropTempView(vs)
-            spark.catalog.dropTempView(ve)
+    share = "st.rank / e.deg" if weight is None else "st.rank * e.w / e.deg"
+    dang = "(SELECT coalesce(sum(rank), 0.0d) FROM state WHERE sdeg IS NULL)"
+    if personalize is None:
+        rank_expr = (
+            f"{(1.0 - damping) / n!r}d + {damping!r}d * {dang} / {float(n)!r}d"
+            f" + {damping!r}d * coalesce(c.in_rank, 0.0d)"
+        )
+        keep = "s.sdeg"
+    else:
+        rank_expr = (
+            f"{1.0 - damping!r}d * s.pref + {damping!r}d * {dang} * s.pref"
+            f" + {damping!r}d * coalesce(c.in_rank, 0.0d)"
+        )
+        keep = "s.sdeg, s.pref"
+    round_sql = f"""
+        SELECT s.node, {rank_expr} AS rank, {keep}
+        FROM state s
+        LEFT JOIN (
+          SELECT e.dst AS node, sum({share}) AS in_rank
+          FROM edges e JOIN state st ON e.src = st.node
+          GROUP BY e.dst
+        ) c ON s.node = c.node
+    """
+    state = frontier.rounds(
+        spark, n, {"edges": (ew, "src")}, (state, "node"),
+        [("state", round_sql)], n_iter,
+    )["state"]
     return state.select("node", "rank")
 
 
@@ -786,6 +602,9 @@ def local_clustering(
     )
 
 
+_PEEL_HINT = "long chains peel O(n) rounds — raise max_rounds"
+
+
 def kcore(
     pairs: DataFrame,
     k: int,
@@ -805,21 +624,24 @@ def kcore(
     endpoint); converges when a round removes nothing. Rounds equal
     the peeling depth: small on real (power-law) graphs, but O(n) in
     the adversarial chain case (k=2 peels two chain ends per round) —
-    the same long-path caveat as min-label components; raise
-    ``max_rounds`` for such graphs (the result after an exhausted
-    budget is a SUPERSET of the k-core: peeling stopped early).
-    Lineage truncated per round, convergence tested on a one-row
-    probe only."""
+    the same long-path caveat as min-label components. ``max_rounds``
+    is a budget: when it runs out while another round would still
+    peel, the call raises (the unpeeled remainder would be a superset
+    of the k-core). Lineage truncated per round, convergence tested
+    on a one-row probe only."""
     if k < 1:
         raise ValueError("k must be >= 1")
     edges = _sym(pairs, src, dst).localCheckpoint(eager=True)
-    for _ in range(max_rounds):
-        deg = edges.groupBy("src").agg(F.count("*").alias("__deg"))
-        keep = deg.filter(F.col("__deg") >= k).select("src")
+    for r in range(max_rounds + 1):
         # symmetric view: a node's degree is its out-degree here
-        dropped = deg.filter(F.col("__deg") < k).limit(1).isEmpty()
-        if dropped:
+        deg = edges.groupBy("src").agg(F.count("*").alias("__deg"))
+        if deg.filter(F.col("__deg") < k).limit(1).isEmpty():
             break
+        if r == max_rounds:
+            raise frontier.exhausted(
+                "kcore", max_rounds, _PEEL_HINT, "peeling", "max_rounds"
+            )
+        keep = deg.filter(F.col("__deg") >= k).select("src")
         keep = keep.localCheckpoint(eager=True)
         edges = (
             edges.join(keep, on="src", how="leftsemi")
@@ -884,11 +706,9 @@ def core_numbers(
                 next_k = (min_deg or k) + 1
                 break
             if rounds >= max_rounds:
-                raise RuntimeError(
-                    f"core_numbers: peel budget exhausted after "
-                    f"max_rounds={max_rounds} peeling rounds "
-                    f"(adversarial long-chain graphs peel O(n) rounds "
-                    f"— raise max_rounds)"
+                raise frontier.exhausted(
+                    "core_numbers", max_rounds, _PEEL_HINT, "peeling",
+                    "max_rounds",
                 )
             rounds += 1
             keep = deg.filter(F.col("__deg") >= k).select("src")
@@ -967,50 +787,33 @@ def label_propagation(
             .agg(F.sum("__w").alias("__w"))
         )
     edges = edges.localCheckpoint(eager=True)
-    # Pinned-layout loop (_fixpoint_conf): edges laid out by dst (the
-    # per-round join key) once, labels by node. Per round the whole
-    # most-frequent-label step is ONE statement: the (node, label)
-    # weight aggregate, a max-over-node window in place of the
-    # separate best-aggregate + re-join, and the tie-break min — two
-    # exchanges (to (src,community), then to src) instead of the
-    # join/agg/join/agg chain. Values are identical: the window max
-    # ranges over exactly the same per-(node,label) sums the old
-    # best-frame held, and the min tie-break is unchanged.
-    spark = pairs.sparkSession
+    # Pinned rounds: edges laid out by dst (the per-round join key)
+    # once, labels by node. Per round the whole most-frequent-label
+    # step is ONE statement: the (node, label) weight aggregate, a
+    # max-over-node window instead of a best-aggregate + re-join, and
+    # the tie-break min — two exchanges (to (src, community), then to
+    # src).
     nodes = (
         edges.select(F.col("src").alias("node"))
         .dropDuplicates()
         .localCheckpoint(eager=True)
     )
-    n = nodes.count()
-    with _fixpoint_conf(spark, n) as n_parts:
-        ew = edges.repartition(n_parts, "dst").localCheckpoint(eager=True)
-        labels = (
-            nodes.select("node", F.col("node").alias("community"))
-            .repartition(n_parts, "node")
-            .localCheckpoint(eager=True)
+    round_sql = """
+        SELECT node, min(community) AS community
+        FROM (
+          SELECT src AS node, community, sum(__w) AS __n,
+                 max(sum(__w)) OVER (PARTITION BY src) AS __m
+          FROM edges e JOIN labels l ON e.dst = l.node
+          GROUP BY src, community
         )
-        vl = _loop_view(labels, "lpa_labels")
-        ve = _loop_view(ew, "lpa_edges")
-        round_sql = f"""
-            SELECT node, min(community) AS community
-            FROM (
-              SELECT src AS node, community, sum(__w) AS __n,
-                     max(sum(__w)) OVER (PARTITION BY src) AS __m
-              FROM {ve} e JOIN {vl} l ON e.dst = l.node
-              GROUP BY src, community
-            )
-            WHERE __n = __m
-            GROUP BY node
-        """
-        try:
-            for _ in range(n_iter):
-                labels.createOrReplaceTempView(vl)
-                labels = spark.sql(round_sql).localCheckpoint(eager=True)
-        finally:
-            spark.catalog.dropTempView(vl)
-            spark.catalog.dropTempView(ve)
-    return labels
+        WHERE __n = __m
+        GROUP BY node
+    """
+    return frontier.rounds(
+        pairs.sparkSession, nodes.count(), {"edges": (edges, "dst")},
+        (nodes.select("node", F.col("node").alias("community")), "node"),
+        [("labels", round_sql)], n_iter,
+    )["labels"]
 
 
 def modularity(
@@ -1214,43 +1017,6 @@ def _modularity_table_weighted(
     )
 
 
-def _partition_min_propagate(
-    edges: DataFrame, nodes: DataFrame, max_iter: int
-) -> DataFrame:
-    """Directed min-label propagation WITHIN partitions: ``edges`` is
-    (src, dst, p), ``nodes`` is (node, p); returns (node, p, m) where
-    m = min id over the node itself and everything that reaches it
-    along edge direction inside its partition. Semi-naive: each round
-    one equi-join + one min-aggregate, lineage truncated."""
-    lab = nodes.select("node", "p", F.col("node").alias("m")).localCheckpoint(
-        eager=True
-    )
-    for _ in range(max_iter):
-        nbr = (
-            edges.join(
-                lab.withColumnRenamed("node", "src"), on=["src", "p"]
-            )
-            .select(F.col("dst").alias("node"), "p", "m")
-        )
-        new = (
-            lab.unionAll(nbr)
-            .groupBy("node", "p")
-            .agg(F.min("m").alias("m"))
-            .localCheckpoint(eager=True)
-        )
-        converged = (
-            new.join(
-                lab.withColumnRenamed("m", "old"), on=["node", "p"]
-            )
-            .filter(F.col("m") != F.col("old"))
-            .isEmpty()
-        )
-        lab = new
-        if converged:
-            break
-    return lab
-
-
 def strongly_connected_components(
     pairs: DataFrame,
     src: str = "src",
@@ -1305,16 +1071,20 @@ def strongly_connected_components(
             .select("src", "dst", "p")
             .localCheckpoint(eager=True)
         )
-        fwd = _partition_min_propagate(ep, node_p, max_iter)
-        bwd = _partition_min_propagate(
-            ep.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst"), "p"
-            ),
-            node_p,
-            max_iter,
+        labels = node_p.select("node", "p", F.col("node").alias("label"))
+        # the forward-min flows along the edges, the backward-min
+        # against them; planner-default rounds at every size (no
+        # workload has measured a pinned SCC)
+        fwd, bwd = (
+            _min_label(
+                ep.select(F.col(a).alias("src"), F.col(b).alias("node"), "p"),
+                labels, 0, max_iter, False, "strongly_connected_components",
+                "p",
+            )
+            for a, b in (("dst", "src"), ("src", "dst"))
         )
-        joined = fwd.join(
-            bwd.withColumnRenamed("m", "mb"), on=["node", "p"]
+        joined = fwd.select("node", "p", F.col("label").alias("m")).join(
+            bwd.select("node", "p", F.col("label").alias("mb")), on=["node", "p"]
         ).localCheckpoint(eager=True)
         settled = joined.filter(F.col("m") == F.col("mb")).select(
             "node", F.col("m").alias("component")
@@ -1322,10 +1092,7 @@ def strongly_connected_components(
         settled_parts.append(settled.localCheckpoint(eager=True))
         rest = joined.filter(F.col("m") != F.col("mb"))
         if rest.isEmpty():
-            out = settled_parts[0]
-            for part in settled_parts[1:]:
-                out = out.unionAll(part)
-            return out
+            return reduce(DataFrame.unionAll, settled_parts)
         work_nodes = rest.select(
             "node",
             F.concat_ws(
@@ -1333,10 +1100,10 @@ def strongly_connected_components(
                 F.col("mb").cast("string"),
             ).alias("p"),
         ).localCheckpoint(eager=True)
-    raise RuntimeError(
-        "strongly_connected_components: partition refinement did not "
-        f"settle within max_rounds={max_rounds} — raise max_rounds "
-        "(each round is one forward + one backward propagation)"
+    raise frontier.exhausted(
+        "strongly_connected_components", max_rounds,
+        "each round is one forward + one backward propagation — raise "
+        "max_rounds", "refining partitions", "max_rounds",
     )
 
 
@@ -1626,11 +1393,9 @@ def _betweenness_weighted(
         )
         parts.append(done)
         upperall = upperall.unionAll(done)
-    delta = parts[0]
-    for p in parts[1:]:
-        delta = delta.unionAll(p)
     per_node = (
-        delta.filter(F.col("node") != F.col("origin"))
+        reduce(DataFrame.unionAll, parts)
+        .filter(F.col("node") != F.col("origin"))
         .groupBy("node")
         .agg(F.sum("delta").alias("betweenness"))
     )
@@ -1677,31 +1442,20 @@ def betweenness_centrality(
         )
     edges = _hop_edges(pairs, src, dst, directed)
     all_nodes, origins = _endpoints_and_origins(edges, sources)
-    # both passes run under the pinned static layout (AQE off so
-    # per-level checkpoints keep their hash layout and exchanges stop
-    # materializing one job each; size-derived partitions) — the
-    # settled state is at most |origins| x |nodes| rows, the honest
-    # upper bound for the layout sizer. The edge frame is laid out by
-    # src ONCE (both passes join on src), never per level.
-    n_state = origins.count() * all_nodes.count()
-    with _fixpoint_conf(edges.sparkSession, n_state) as n_parts:
-        return _betweenness_unweighted_inner(
-            edges.repartition(n_parts, "src").localCheckpoint(eager=True),
-            all_nodes, origins, directed, max_iter,
-        )
-
-
-def _betweenness_unweighted_inner(
-    edges: DataFrame,
-    all_nodes: DataFrame,
-    origins: DataFrame,
-    directed: bool,
-    max_iter: int,
-) -> DataFrame:
-    """Both Brandes passes of :func:`betweenness_centrality`, run
-    under the caller's pinned layout. The forward pass is a
-    :func:`frontier.reach` loop with sigma; the backward pass's
-    per-level checkpoints are lazy and ride the final action."""
+    # both passes run in a pinned loop session (per-level checkpoints
+    # keep their hash layout; exchanges stop materializing one job
+    # each) — the settled state is at most |origins| x |nodes| rows,
+    # the honest upper bound for the layout sizer. The edge frame is
+    # laid out by src ONCE (both passes join on src), never per level.
+    spark = edges.sparkSession
+    loop, n_parts = frontier.pinned(spark, origins.count() * all_nodes.count())
+    edges = (
+        frontier.bind(edges, loop)
+        .repartition(n_parts, "src")
+        .localCheckpoint(eager=True)
+    )
+    all_nodes = frontier.bind(all_nodes, loop)
+    origins = frontier.bind(origins, loop)
     # -- forward: settle (origin, node) -> (hops, sigma), level by level
     levels = frontier.reach(
         edges,
@@ -1750,21 +1504,18 @@ def _betweenness_unweighted_inner(
             .localCheckpoint(eager=False)
         )
         parts.append(upper)
-    delta = parts[0]
-    for p in parts[1:]:
-        delta = delta.unionAll(p)
     per_node = (
-        delta.filter(F.col("node") != F.col("origin"))
+        reduce(DataFrame.unionAll, parts)
+        .filter(F.col("node") != F.col("origin"))
         .groupBy("node")
         .agg(F.sum("delta").alias("betweenness"))
     )
     scale = F.col("betweenness") / 2 if not directed else F.col("betweenness")
-    return (
-        all_nodes.join(per_node, on="node", how="left")
-        .select(
-            "node",
-            F.coalesce(scale, F.lit(0.0)).alias("betweenness"),
-        )
+    return frontier.bind(
+        all_nodes.join(per_node, on="node", how="left").select(
+            "node", F.coalesce(scale, F.lit(0.0)).alias("betweenness")
+        ),
+        spark,
     )
 
 
@@ -1916,10 +1667,10 @@ def _louvain_moves(
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.sum("w").alias("deg")
     ).localCheckpoint(eager=True)
-    # r13 pinned layout: the only per-round consumer of ext joins it
-    # on dst, so lay it out by dst ONCE before the rounds (inside
-    # _fixpoint_conf the shuffle.partitions match, so the per-round
-    # k_uc join reuses this layout with no new exchange)
+    # the only per-round consumer of ext joins it on dst, so lay it
+    # out by dst ONCE before the rounds (in the loop session the
+    # shuffle partitions match, so the per-round k_uc join reuses this
+    # layout with no new exchange)
     n_parts = int(
         edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
@@ -2042,7 +1793,7 @@ def _louvain_moves(
         # pin the JOINED frame (still carrying the moved flag): the
         # settled probe then reads the materialized checkpoint with a
         # cheap filter instead of re-joining new vs old labels per
-        # round (r13: one fewer per-round job; `moved` is non-null
+        # round (one fewer per-round job; `moved` is non-null
         # exactly when the node changed community, since the argmax
         # requires a STRICT improvement over the current community)
         joined = _pin(labels.join(best, on="node", how="left"))
@@ -2131,13 +1882,10 @@ def louvain(
 
 
 def _louvain_levels(e: DataFrame, levels: int, n_rounds: int) -> DataFrame:
-    """The level loop of :func:`louvain`. Runs under the pinned
-    static layout of :func:`_fixpoint_conf` (r13): AQE off so the
-    ~8-exchange round body stops materializing one job per exchange
-    and round r+1 reuses round r's checkpointed hash layout, fixed
-    size-derived shuffle partitions, no per-round broadcast builds.
-    Float semantics and move decisions are expression-identical; only
-    plan shape and partition layout change."""
+    """The level loop of :func:`louvain`, run in a pinned loop session
+    (:func:`frontier.pinned`): the ~8-exchange round body does not
+    materialize one job per exchange, round r+1 reuses round r's
+    checkpointed hash layout, and no round builds a broadcast."""
     spark = e.sparkSession
     two_m = float(
         e.agg(F.sum("w").alias("s")).first()["s"]
@@ -2146,15 +1894,9 @@ def _louvain_levels(e: DataFrame, levels: int, n_rounds: int) -> DataFrame:
     assign = nodes.select(
         "node", F.col("node").alias("community")
     ).localCheckpoint(eager=True)
-    n = assign.count()
-    with _fixpoint_conf(spark, n):
-        return _louvain_levels_inner(e, assign, levels, n_rounds, two_m)
-
-
-def _louvain_levels_inner(
-    e: DataFrame, assign: DataFrame, levels: int, n_rounds: int,
-    two_m: float,
-) -> DataFrame:
+    loop, _ = frontier.pinned(spark, assign.count())
+    e = frontier.bind(e, loop)
+    assign = frontier.bind(assign, loop)
     for _ in range(levels):
         moved = _louvain_moves(
             e, assign.select(F.col("community").alias("node")).dropDuplicates()
@@ -2208,7 +1950,7 @@ def _louvain_levels_inner(
         if contracted.filter(F.col("src") != F.col("dst")).isEmpty():
             break
         e = contracted
-    return assign
+    return frontier.bind(assign, spark)
 
 
 def link_prediction(
@@ -2417,42 +2159,26 @@ def eigenvector_centrality(
         .dropDuplicates()
         .localCheckpoint(eager=True)
     )
-    # Pinned-layout loop (_fixpoint_conf): edges laid out by src (the
-    # per-round join key) once; each round is the one contribution
-    # shuffle plus a 1-row L2-norm scalar subquery. Float semantics
-    # unchanged (same join/aggregate/normalize expressions).
-    spark = pairs.sparkSession
-    n = nodes.count()
-    with _fixpoint_conf(spark, n) as n_parts:
-        ew = (
-            edges.repartition(n_parts, "src").localCheckpoint(eager=True)
+    # Pinned rounds: edges laid out by src (the per-round join key)
+    # once; each round is the one contribution shuffle plus a 1-row
+    # L2-norm scalar subquery.
+    nrm = "(SELECT sqrt(sum(score * score)) FROM raw)"
+    round_sql = f"""
+        WITH raw AS (
+          SELECT e.dst AS node, sum(e.__w * st.score) AS score
+          FROM edges e JOIN score st ON e.src = st.node
+          GROUP BY e.dst
         )
-        score = (
-            nodes.select("node", F.lit(1.0).alias("score"))
-            .repartition(n_parts, "node")
-            .localCheckpoint(eager=True)
-        )
-        vs = _loop_view(score, "eig_state")
-        ve = _loop_view(ew, "eig_edges")
-        nrm = "(SELECT sqrt(sum(score * score)) FROM raw)"
-        round_sql = f"""
-            WITH raw AS (
-              SELECT e.dst AS node, sum(e.__w * st.score) AS score
-              FROM {ve} e JOIN {vs} st ON e.src = st.node
-              GROUP BY e.dst
-            )
-            SELECT node,
-                   CASE WHEN {nrm} > 0 THEN score / {nrm}
-                        ELSE 0.0d END AS score
-            FROM raw
-        """
-        try:
-            for _ in range(n_iter):
-                score.createOrReplaceTempView(vs)
-                score = spark.sql(round_sql).localCheckpoint(eager=True)
-        finally:
-            spark.catalog.dropTempView(vs)
-            spark.catalog.dropTempView(ve)
+        SELECT node,
+               CASE WHEN {nrm} > 0 THEN score / {nrm}
+                    ELSE 0.0d END AS score
+        FROM raw
+    """
+    score = frontier.rounds(
+        pairs.sparkSession, nodes.count(), {"edges": (edges, "src")},
+        (nodes.select("node", F.lit(1.0).alias("score")), "node"),
+        [("score", round_sql)], n_iter,
+    )["score"]
     return nodes.join(score, on="node", how="left").select(
         "node", F.coalesce("score", F.lit(0.0)).alias("score")
     )
@@ -2506,70 +2232,49 @@ def hits(
         .localCheckpoint(eager=True)
     )
 
-    # Pinned-layout loop (_fixpoint_conf): the two half-steps join the
-    # edge list on DIFFERENT keys (src for the authority step, dst for
-    # the hub step), so the edge frame is laid out TWICE before the
-    # loop — two one-time shuffles instead of two per round. Rows
-    # absent from a half-step's aggregate are implicit zeros (they
-    # change neither the L2 norm nor the next propagation); the
-    # 0-fill happens once at the end, as before. Each round: TWO
-    # eager checkpoints (auth, then hub). Checkpointing auth is what
-    # keeps the per-round plan flat — left lazy, the hub step's plan
-    # nests the auth step's scalar subquery inside its own, and
-    # subquery reuse does NOT cross that nesting (measured 2.5-9 s
-    # PER ROUND at sf0.1 from the recomputation). Float semantics are
-    # expression-for-expression unchanged from the crossJoin-norm
-    # form this replaces.
-    spark = pairs.sparkSession
-    n = nodes.count()
-    with _fixpoint_conf(spark, n) as n_parts:
-        e_src = edges.repartition(n_parts, "src").localCheckpoint(eager=True)
-        e_dst = edges.repartition(n_parts, "dst").localCheckpoint(eager=True)
-        hub = (
-            nodes.select("node", F.lit(1.0).alias("hub"))
-            .repartition(n_parts, "node")
-            .localCheckpoint(eager=True)
+    # Pinned rounds: the two half-steps join the edge list on
+    # DIFFERENT keys (src for the authority step, dst for the hub
+    # step), so the edge frame is laid out TWICE before the loop — two
+    # one-time shuffles instead of two per round. Rows absent from a
+    # half-step's aggregate are implicit zeros (they change neither
+    # the L2 norm nor the next propagation); the 0-fill happens once
+    # at the end. Each round pins both statements eagerly: left lazy,
+    # the hub step's plan nests the auth step's scalar subquery inside
+    # its own, and subquery reuse does NOT cross that nesting
+    # (measured 2.5-9 s PER ROUND at sf0.1 from the recomputation).
+    a_nrm = "(SELECT sqrt(sum(authority * authority)) FROM a_raw)"
+    auth_sql = f"""
+        WITH a_raw AS (
+          SELECT e.dst AS node, sum(e.__w * st.hub) AS authority
+          FROM e_src e JOIN hub st ON e.src = st.node
+          GROUP BY e.dst
         )
-        auth = nodes.select("node", F.lit(1.0).alias("authority"))
-        vh = _loop_view(hub, "hits_hub")
-        ves = _loop_view(e_src, "hits_esrc")
-        ved = _loop_view(e_dst, "hits_edst")
-        va = f"__hits_auth_{next(_VIEW_SEQ)}"
-        a_nrm = "(SELECT sqrt(sum(authority * authority)) FROM a_raw)"
-        auth_sql = f"""
-            WITH a_raw AS (
-              SELECT e.dst AS node, sum(e.__w * st.hub) AS authority
-              FROM {ves} e JOIN {vh} st ON e.src = st.node
-              GROUP BY e.dst
-            )
-            SELECT node,
-                   CASE WHEN {a_nrm} > 0 THEN authority / {a_nrm}
-                        ELSE 0.0d END AS authority
-            FROM a_raw
-        """
-        h_nrm = "(SELECT sqrt(sum(hub * hub)) FROM h_raw)"
-        hub_sql = f"""
-            WITH h_raw AS (
-              SELECT e.src AS node, sum(e.__w * a.authority) AS hub
-              FROM {ved} e JOIN {va} a ON e.dst = a.node
-              GROUP BY e.src
-            )
-            SELECT node,
-                   CASE WHEN {h_nrm} > 0 THEN hub / {h_nrm}
-                        ELSE 0.0d END AS hub
-            FROM h_raw
-        """
-        try:
-            for _ in range(n_iter):
-                hub.createOrReplaceTempView(vh)
-                auth = spark.sql(auth_sql).localCheckpoint(eager=True)
-                auth.createOrReplaceTempView(va)
-                hub = spark.sql(hub_sql).localCheckpoint(eager=True)
-        finally:
-            for v in (vh, va, ves, ved):
-                spark.catalog.dropTempView(v)
+        SELECT node,
+               CASE WHEN {a_nrm} > 0 THEN authority / {a_nrm}
+                    ELSE 0.0d END AS authority
+        FROM a_raw
+    """
+    h_nrm = "(SELECT sqrt(sum(hub * hub)) FROM h_raw)"
+    hub_sql = f"""
+        WITH h_raw AS (
+          SELECT e.src AS node, sum(e.__w * a.authority) AS hub
+          FROM e_dst e JOIN auth a ON e.dst = a.node
+          GROUP BY e.src
+        )
+        SELECT node,
+               CASE WHEN {h_nrm} > 0 THEN hub / {h_nrm}
+                    ELSE 0.0d END AS hub
+        FROM h_raw
+    """
+    out = frontier.rounds(
+        pairs.sparkSession, nodes.count(),
+        {"e_src": (edges, "src"), "e_dst": (edges, "dst")},
+        (nodes.select("node", F.lit(1.0).alias("hub")), "node"),
+        [("auth", auth_sql), ("hub", hub_sql)], n_iter,
+    )
+    auth = out.get("auth", nodes.select("node", F.lit(1.0).alias("authority")))
     return (
-        nodes.join(hub, on="node", how="left")
+        nodes.join(out["hub"], on="node", how="left")
         .join(auth, on="node", how="left")
         .select(
             "node",
@@ -3256,40 +2961,41 @@ def neighborhood_function(
     )
 
     if tier == "exact":
-        # r13 pinned layout: the loop runs under _fixpoint_conf (AQE
-        # off, size-derived partitions from the ball-state bound) with
-        # the edge frame laid out by the join key ONCE; the per-round
+        # pinned loop session sized by the ball-state bound, the edge
+        # frame laid out by the join key ONCE; the per-round
         # checkpoint is LAZY and ONE count() both materializes it and
-        # doubles as the termination probe (was: eager checkpoint +
-        # isEmpty + count = 3 driver actions per round).
+        # is the termination probe
         n_nodes = nodes.count()
-        with _fixpoint_conf(
+        loop, n_parts = frontier.pinned(
             edges.sparkSession, n_nodes * (max_radius + 1)
-        ) as n_parts:
-            e_by_member = (
-                edges.withColumnRenamed("src", "member")
-                .repartition(n_parts, "member")
-                .localCheckpoint(eager=True)
+        )
+        e_by_member = (
+            frontier.bind(edges, loop)
+            .withColumnRenamed("src", "member")
+            .repartition(n_parts, "member")
+            .localCheckpoint(eager=True)
+        )
+        state = frontier.bind(nodes, loop).select(
+            "node", F.col("node").alias("member")
+        )
+        state = state.localCheckpoint(eager=True)
+        out = [(0, float(n_nodes))]
+        front = state
+        for r in range(1, max_radius + 1):
+            grown = (
+                front.join(e_by_member, on="member")
+                .select("node", F.col("dst").alias("member"))
+                .dropDuplicates()
+                .join(state, on=["node", "member"], how="leftanti")
+                .localCheckpoint(eager=False)
             )
-            state = nodes.select("node", F.col("node").alias("member"))
-            state = state.localCheckpoint(eager=True)
-            out = [(0, float(n_nodes))]
-            frontier = state
-            for r in range(1, max_radius + 1):
-                grown = (
-                    frontier.join(e_by_member, on="member")
-                    .select("node", F.col("dst").alias("member"))
-                    .dropDuplicates()
-                    .join(state, on=["node", "member"], how="leftanti")
-                    .localCheckpoint(eager=False)
-                )
-                n_grown = grown.count()
-                if n_grown == 0:
-                    break
-                state = state.unionAll(grown)
-                frontier = grown
-                out.append((r, out[-1][1] + float(n_grown)))
-            return out
+            n_grown = grown.count()
+            if n_grown == 0:
+                break
+            state = state.unionAll(grown)
+            front = grown
+            out.append((r, out[-1][1] + float(n_grown)))
+        return out
 
     b = int(registers_log2)
     if not 4 <= b <= 12:
@@ -3333,54 +3039,56 @@ def neighborhood_function(
             rf.agg(F.sum(node_est).alias("t")).first()["t"] or 0.0
         )
 
-    # r13 pinned layout (same discipline as the exact tier): AQE off
-    # for the loop, edge frame laid out by dst once, per-round
-    # checkpoints lazy (the changed-probe materializes them). The
-    # register math is expression-identical.
-    with _fixpoint_conf(edges.sparkSession, nodes.count()) as n_parts:
-        edges = edges.repartition(n_parts, "dst").localCheckpoint(
-            eager=True
+    # pinned loop session (same discipline as the exact tier), edge
+    # frame laid out by dst once, per-round checkpoints lazy (the
+    # stable-probe materializes them)
+    loop, n_parts = frontier.pinned(edges.sparkSession, nodes.count())
+    edges = (
+        frontier.bind(edges, loop)
+        .repartition(n_parts, "dst")
+        .localCheckpoint(eager=True)
+    )
+    regs = frontier.bind(regs, loop)
+    out = [(0, total(regs))]
+    for r in range(1, max_radius + 1):
+        contrib = (
+            edges.join(
+                regs.select(F.col("node").alias("dst"), "regs"),
+                on="dst",
+            )
+            .groupBy(F.col("src").alias("node"))
+            .agg(
+                *[
+                    F.max(F.col("regs")[i]).alias(f"__r{i}")
+                    for i in range(m)
+                ]
+            )
         )
-        out = [(0, total(regs))]
-        for r in range(1, max_radius + 1):
-            contrib = (
-                edges.join(
-                    regs.select(F.col("node").alias("dst"), "regs"),
-                    on="dst",
-                )
-                .groupBy(F.col("src").alias("node"))
-                .agg(
+        new = (
+            regs.join(contrib, on="node", how="left")
+            .select(
+                "node",
+                F.array(
                     *[
-                        F.max(F.col("regs")[i]).alias(f"__r{i}")
+                        F.greatest(
+                            F.col("regs")[i],
+                            F.coalesce(F.col(f"__r{i}"), F.lit(0)),
+                        )
                         for i in range(m)
                     ]
-                )
+                ).alias("regs"),
             )
-            new = (
-                regs.join(contrib, on="node", how="left")
-                .select(
-                    "node",
-                    F.array(
-                        *[
-                            F.greatest(
-                                F.col("regs")[i],
-                                F.coalesce(F.col(f"__r{i}"), F.lit(0)),
-                            )
-                            for i in range(m)
-                        ]
-                    ).alias("regs"),
-                )
-                .localCheckpoint(eager=False)
-            )
-            changed = (
-                new.join(regs.withColumnRenamed("regs", "__old"), on="node")
-                .filter(F.col("regs") != F.col("__old"))
-                .isEmpty()
-            )
-            regs = new
-            if changed:
-                break
-            out.append((r, total(regs)))
+            .localCheckpoint(eager=False)
+        )
+        stable = (
+            new.join(regs.withColumnRenamed("regs", "__old"), on="node")
+            .filter(F.col("regs") != F.col("__old"))
+            .isEmpty()
+        )
+        regs = new
+        if stable:
+            break
+        out.append((r, total(regs)))
     return out
 
 

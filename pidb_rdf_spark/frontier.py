@@ -41,36 +41,204 @@ either a BUDGET or a BOUND.
   many rounds: ``sssp``'s i-round contract and Cypher's ``*..m``
   upper bound.
 
-Size choice: :func:`relax` without origins (``sssp``) carries a state
-of at least ``analytics._FIXPOINT_MIN_STATE_ROWS`` nodes in a pinned
-full-node-state layout under ``analytics._fixpoint_conf``, which keeps
-the edges partitioned by src across rounds instead of re-shuffling or
-broadcasting per round (sf0.1 full edge set, 786k nodes, 8 rounds on 4
-cores: ~20 s pinned vs ~29 s frontier-sized, which also ran out of
-broadcast memory on a 4 GB driver). Apart from that tier the driver
-never touches session conf; callers that pin a loop layout wrap the
-call themselves.
+Loop sessions: :func:`pinned` gives a loop its own clone of the
+caller's session, with a static layout (AQE off, size-derived shuffle
+partitions, no broadcasts, codegen off for small states) set on the
+clone only; the caller's session conf is never changed, so loops need
+no lock and a query another thread runs meanwhile plans under the
+caller's conf. :func:`bind` moves frames into the loop session and
+results back. :func:`rounds` is the SQL-text round driver on top of
+:func:`_drive` for the vertex-program loops (PageRank, HITS,
+eigenvector, label propagation, min-label components, SCC's
+partitioned min-label and :func:`relax`'s large-state tier): pinned,
+the static frames are laid out by their join key once, and each round
+re-runs the same statement text over the re-registered state view.
+Min-label components pin from ``_FIXPOINT_MIN_STATE_ROWS`` nodes; SCC
+runs the same rounds with the caller's planner defaults at every size
+(no workload has measured a pinned SCC).
+:func:`relax` without origins (``sssp``) switches to that pinned
+full-node-state tier at ``_FIXPOINT_MIN_STATE_ROWS`` nodes, which
+keeps the edges partitioned by src across rounds instead of
+re-shuffling or broadcasting per round (sf0.1 full edge set, 786k
+nodes, 8 rounds on 4 cores: ~20 s pinned vs ~29 s frontier-sized,
+which also ran out of broadcast memory on a 4 GB driver).
 """
 
 from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _RAISE_HINT = "raise max_iter above the number of rounds the fixpoint needs"
 
+# Below this state size, whole-stage codegen is off in a pinned loop
+# session: Janino compilation of each round's stages costs more than
+# interpreting a few-MB state ever could (measured ~1.3 s of the 4.7 s
+# pagerank wall at sf0.1). Above it, codegen pays for itself.
+_LOOP_CODEGEN_OFF_MAX_ROWS = 5_000_000
+
+# Target state rows per partition of a pinned loop: N = clamp(rows //
+# this + 1, 1, the caller's shuffle partitions), so a KB-sized state
+# gets 1 partition and a cluster session keeps its configured
+# parallelism once the state is big enough to use it.
+_LOOP_ROWS_PER_PARTITION = 100_000
+
+# State-size gate of the loops with a small tier (min-label
+# components, relax without origins): the first size at which
+# the sizer allocates a second partition. Below it a pinned loop runs
+# on ONE partition with broadcasts off and setup shuffles that never
+# amortize; the caller's planner defaults win there.
+_FIXPOINT_MIN_STATE_ROWS = _LOOP_ROWS_PER_PARTITION
+
 
 def exhausted(
-    what: str, max_rounds: int, hint: str = _RAISE_HINT, doing: str = "changing"
+    what: str,
+    max_rounds: int,
+    hint: str = _RAISE_HINT,
+    doing: str = "changing",
+    budget: str = "max_iter",
 ) -> RuntimeError:
-    """The error every fixpoint loop raises when its round budget runs
-    out before convergence."""
+    """The error every fixpoint loop raises when its round budget
+    (the ``budget`` parameter) runs out before convergence."""
     return RuntimeError(
-        f"{what}: still {doing} after max_iter={max_rounds} rounds — a "
+        f"{what}: still {doing} after {budget}={max_rounds} rounds — a "
         f"truncated fixpoint would be a wrong answer; {hint}"
     )
+
+
+def _clone(spark: SparkSession) -> SparkSession:
+    # cloneSession, not newSession: a new session drops the runtime
+    # conf the caller set (session time zone, case sensitivity). The
+    # wrapper skips SparkSession.__init__, which would rebind the
+    # process-wide RDD.toDF to the clone.
+    loop = object.__new__(SparkSession)
+    loop._sc, loop._jsc, loop._jvm = spark._sc, spark._jsc, spark._jvm
+    loop._profiler_collector = spark._profiler_collector
+    loop._jsparkSession = spark._jsparkSession.cloneSession()
+    return loop
+
+
+def pinned(spark: SparkSession, n_state_rows: int) -> tuple[SparkSession, int]:
+    """A loop session for a state of ``n_state_rows`` rows and the
+    partition count N to lay the loop frames out with. The session is
+    a clone of ``spark`` (runtime conf, temp views and UDFs included)
+    with a STATIC layout set on the clone only:
+
+    - AQE off. AQE runs every Exchange as its own job (123 jobs for a
+      10-round pagerank at sf0.1, 28 without), and a
+      ``localCheckpoint`` under AQE loses its hash layout, so every
+      round would re-shuffle both join sides. With AQE off the
+      checkpoints keep ``HashPartitioning`` and a round has one data
+      shuffle, its aggregation.
+    - ``shuffle.partitions=N``, size-derived: the round aggregates land
+      on the N partitions the loop frames were laid out with, so the
+      state⋈contribution joins need no exchange.
+    - no auto-broadcast: a per-round broadcast build of the state is a
+      job per round; the co-partitioned sort-merge join is free.
+    - whole-stage codegen off for states up to
+      ``_LOOP_CODEGEN_OFF_MAX_ROWS`` rows.
+
+    The caller's session is never changed."""
+    loop = _clone(spark)
+    n_parts = max(
+        1,
+        min(
+            int(spark.conf.get("spark.sql.shuffle.partitions")),
+            int(n_state_rows) // _LOOP_ROWS_PER_PARTITION + 1,
+        ),
+    )
+    loop.conf.set("spark.sql.adaptive.enabled", "false")
+    loop.conf.set("spark.sql.shuffle.partitions", str(n_parts))
+    loop.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    if n_state_rows <= _LOOP_CODEGEN_OFF_MAX_ROWS:
+        loop.conf.set("spark.sql.codegen.wholeStage", "false")
+    return loop, n_parts
+
+
+def bind(df: DataFrame, spark: SparkSession) -> DataFrame:
+    """``df``'s plan as a frame of ``spark``: it plans and runs under
+    that session's conf."""
+    return DataFrame(
+        spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+            spark._jsparkSession, df._jdf.logicalPlan()
+        ),
+        spark,
+    )
+
+
+def rounds(
+    spark: SparkSession,
+    n_state_rows: int,
+    static: dict,
+    state: tuple,
+    steps: list,
+    max_rounds: int,
+    *,
+    flag: str | None = None,
+    pin: bool = True,
+    bounded: bool = False,
+    what: str = "rounds",
+    hint: str = _RAISE_HINT,
+    doing: str = "changing",
+) -> dict:
+    """Run SQL-text rounds in a loop session: each round re-parses the
+    same statement text over the re-registered state view, ~3 py4j
+    calls a round instead of ~25 DataFrame-API calls (180-240 ms a
+    round of driver time at sf0.1). ``static`` maps a view
+    name to ``(frame, key)``; ``state`` is ``(frame, key)``; a key is
+    a column or a list of columns. ``steps`` is a list of ``(view,
+    sql)`` statements run in order each round; each result is
+    registered under its view for the statements after it, and the
+    LAST step's view holds the state (registered before round one).
+
+    Pinned (``pin``, see :func:`pinned`), every frame is laid out by
+    its key once and checkpointed; unpinned, the rounds run with the
+    caller's planner defaults in a plain clone of its session (the
+    clone keeps the fixed view names private to the call; it costs
+    nothing measurable next to the rounds).
+
+    Without ``flag`` the rounds run exactly ``max_rounds`` times,
+    every statement pinned eagerly. With ``flag`` they run until no
+    row of the state has that column true, through :func:`_drive`:
+    one lazy pin and one probe per round, and the convergence policy
+    of this module (``bounded``, ``what``, ``hint``, ``doing``).
+
+    Returns ``{view: frame}`` for the state and every step that ran,
+    bound to ``spark``."""
+    loop, n_parts = pinned(spark, n_state_rows) if pin else (_clone(spark), 0)
+
+    def lay(df, key):
+        df = bind(df, loop)
+        if not pin:
+            return df
+        keys = [key] if isinstance(key, str) else key
+        return df.repartition(n_parts, *keys).localCheckpoint(eager=True)
+
+    for view, (df, key) in static.items():
+        lay(df, key).createOrReplaceTempView(view)
+    *inner, (sview, last_sql) = steps
+    out = {}
+
+    def step(_r, _frontier, cur):
+        cur.createOrReplaceTempView(sview)
+        for view, sql in inner:
+            out[view] = loop.sql(sql).localCheckpoint(eager=True)
+            out[view].createOrReplaceTempView(view)
+        return loop.sql(last_sql)
+
+    cur = lay(*state)
+    if flag is None:
+        for r in range(max_rounds):
+            cur = step(r, None, cur).localCheckpoint(eager=True)
+    else:
+        cur = _drive(
+            cur, None, step, lambda _s, p: p, lambda p: p.filter(flag),
+            max_rounds, bounded, what, hint, doing,
+        )
+    out[sview] = cur
+    return {view: bind(df, spark) for view, df in out.items()}
 
 
 def _drive(state, frontier, step, merge, fresh, max_rounds, bounded, what, hint, doing):
@@ -173,9 +341,6 @@ def relax(
         )
 
     if not okey:
-        # lazy: analytics imports this module
-        from pidb_rdf_spark import analytics
-
         nodes = (
             edges.select(F.col("src").alias("node"))
             .unionAll(edges.select(F.col("dst").alias("node")))
@@ -184,7 +349,7 @@ def relax(
             .localCheckpoint(eager=True)
         )
         n = nodes.count()
-        if n >= analytics._FIXPOINT_MIN_STATE_ROWS:
+        if n >= _FIXPOINT_MIN_STATE_ROWS:
             return _relax_pinned(
                 edges, seeds, nodes, n, max_rounds, bounded, what, hint
             )
@@ -200,52 +365,32 @@ def relax(
 
 def _relax_pinned(edges, seeds, nodes, n, max_rounds, bounded, what, hint):
     """The large-state tier of :func:`relax` without origins: the
-    state is EVERY node (``dist`` NULL = unreached) under
-    ``analytics._fixpoint_conf``'s static layout — edges laid out by
-    src once, state by node once, so the frontier⋈edges join is
-    co-partitioned and each round is one contribution shuffle (GROUP BY
-    dst) plus a layout-preserving merge left-join. A candidate wins
-    only when strictly smaller, so the i-round invariant is the
-    frontier-sized tier's."""
-    from pidb_rdf_spark.analytics import _fixpoint_conf, _loop_view
-
-    spark = edges.sparkSession
-    with _fixpoint_conf(spark, n) as n_parts:
-        ew = edges.repartition(n_parts, "src").localCheckpoint(eager=True)
-        state = (
-            nodes.join(seeds, on="node", how="left")
-            .select("node", "dist", F.col("dist").isNotNull().alias("is_new"))
-            .repartition(n_parts, "node")
-            .localCheckpoint(eager=True)
-        )
-        vs = _loop_view(state, "relax_state")
-        ve = _loop_view(ew, "relax_edges")
-        improved = "c.nd IS NOT NULL AND (s.dist IS NULL OR c.nd < s.dist)"
-        round_sql = f"""
-            SELECT s.node,
-                   CASE WHEN {improved} THEN c.nd ELSE s.dist END AS dist,
-                   ({improved}) AS is_new
-            FROM {vs} s
-            LEFT JOIN (
-              SELECT e.dst AS node, min(f.dist + e.w) AS nd
-              FROM {ve} e JOIN {vs} f ON e.src = f.node AND f.is_new
-              GROUP BY e.dst
-            ) c ON s.node = c.node
-        """
-
-        def step(_r, _frontier, state):
-            state.createOrReplaceTempView(vs)
-            return spark.sql(round_sql)
-
-        try:
-            state = _drive(
-                state, None, step, lambda _s, p: p,
-                lambda p: p.filter("is_new"), max_rounds, bounded, what, hint,
-                "relaxing",
-            )
-        finally:
-            spark.catalog.dropTempView(vs)
-            spark.catalog.dropTempView(ve)
+    state is EVERY node (``dist`` NULL = unreached) in a pinned
+    :func:`rounds` loop — edges laid out by src once, state by node
+    once, so the frontier⋈edges join is co-partitioned and each round
+    is one contribution shuffle (GROUP BY dst) plus a layout-preserving
+    merge left-join. A candidate wins only when strictly smaller, so
+    the i-round invariant is the frontier-sized tier's."""
+    improved = "c.nd IS NOT NULL AND (s.dist IS NULL OR c.nd < s.dist)"
+    round_sql = f"""
+        SELECT s.node,
+               CASE WHEN {improved} THEN c.nd ELSE s.dist END AS dist,
+               ({improved}) AS is_new
+        FROM state s
+        LEFT JOIN (
+          SELECT e.dst AS node, min(f.dist + e.w) AS nd
+          FROM edges e JOIN state f ON e.src = f.node AND f.is_new
+          GROUP BY e.dst
+        ) c ON s.node = c.node
+    """
+    state = nodes.join(seeds, on="node", how="left").select(
+        "node", "dist", F.col("dist").isNotNull().alias("is_new")
+    )
+    state = rounds(
+        edges.sparkSession, n, {"edges": (edges, "src")}, (state, "node"),
+        [("state", round_sql)], max_rounds, flag="is_new", bounded=bounded,
+        what=what, hint=hint, doing="relaxing",
+    )["state"]
     return state.filter(F.col("dist").isNotNull()).select("node", "dist")
 
 

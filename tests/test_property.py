@@ -288,9 +288,12 @@ def _py_components(pairs):
 
 @SLOW
 @given(pairs=edges_strategy)
-def test_star_components_match_union_find(spark, pairs):
+def test_star_components_match_union_find(spark, monkeypatch, pairs):
     """Pointer-doubling (large-star/small-star) components equal the
-    python union-find oracle AND the min-label implementation."""
+    python union-find oracle AND the min-label implementation on both
+    sides of its state-size gate (pinned rounds and planner-default
+    rounds)."""
+    from pidb_rdf_spark import frontier
     from pidb_rdf_spark.analytics import (
         connected_components,
         connected_components_star,
@@ -311,11 +314,13 @@ def test_star_components_match_union_find(spark, pairs):
         for r in connected_components_star(df).collect()
     }
     assert got_star == expected
-    got_minlabel = {
-        (r["node"], r["component"])
-        for r in connected_components(df).collect()
-    }
-    assert got_star == got_minlabel
+    for gate in (0, 10**9):
+        monkeypatch.setattr(frontier, "_FIXPOINT_MIN_STATE_ROWS", gate)
+        got_minlabel = {
+            (r["node"], r["component"])
+            for r in connected_components(df).collect()
+        }
+        assert got_star == got_minlabel, gate
 
 
 def _py_bfs(pairs, sources, directed=True):
@@ -820,3 +825,96 @@ def test_pack_manifest_matches_python(spark, docs, seq_len, n_shards, sep):
             c += 1
         off = end + sep
     assert got == sorted(want)
+
+
+@SLOW
+@given(pairs=edges_strategy)
+def test_scc_matches_reachability_twin(spark, pairs):
+    """SCC's component = the min id among the nodes that reach the
+    node and are reached by it (the closure twin), over the nodes of
+    the non-self-loop edges."""
+    from pidb_rdf_spark.analytics import strongly_connected_components
+
+    df = spark.createDataFrame(pairs, "src long, dst long")
+    reach = _py_closure([(a, b) for a, b in pairs if a != b])
+    want = {
+        v: min({v} | {u for u, w in reach if w == v and (v, u) in reach})
+        for v in {x for a, b in pairs if a != b for x in (a, b)}
+    }
+    got = dict(map(tuple, strongly_connected_components(df).collect()))
+    assert got == want
+
+
+def _py_pagerank(pairs, n_iter, damping=0.85, seeds=None):
+    """Power iteration over the edge rows (parallel edges count), with
+    dangling mass and teleport spread uniformly or over ``seeds``."""
+    nodes = {x for e in pairs for x in e}
+    n = len(nodes)
+    deg: dict = {}
+    for a, _ in pairs:
+        deg[a] = deg.get(a, 0) + 1
+    if seeds is None:
+        pref = dict.fromkeys(nodes, 1.0 / n)
+    else:
+        s = set(seeds) & nodes
+        pref = {v: (1.0 / len(s) if v in s else 0.0) for v in nodes}
+    rank = dict(pref)
+    for _ in range(n_iter):
+        dang = sum(rank[v] for v in nodes if v not in deg)
+        inc = dict.fromkeys(nodes, 0.0)
+        for a, b in pairs:
+            inc[b] += rank[a] / deg[a]
+        rank = {
+            v: (1 - damping) * pref[v] + damping * dang * pref[v]
+            + damping * inc[v]
+            for v in nodes
+        }
+    return rank
+
+
+@SLOW
+@given(pairs=edges_strategy, n_iter=st.integers(1, 6), data=st.data())
+def test_pagerank_matches_power_iteration_twin(spark, pairs, n_iter, data):
+    """Uniform and personalized PageRank vs a Python power iteration."""
+    from pidb_rdf_spark.analytics import pagerank
+
+    df = spark.createDataFrame(pairs, "src long, dst long")
+    nodes = sorted({x for e in pairs for x in e})
+    seeds = data.draw(st.lists(st.sampled_from(nodes), min_size=1, max_size=3))
+    for seed_set in (None, seeds):
+        personalize = (
+            None if seed_set is None
+            else spark.createDataFrame([(s,) for s in seed_set], "node long")
+        )
+        got = dict(
+            map(tuple, pagerank(df, n_iter=n_iter, personalize=personalize).collect())
+        )
+        want = _py_pagerank(pairs, n_iter, seeds=seed_set)
+        assert got.keys() == want.keys()
+        assert all(abs(got[v] - want[v]) <= 1e-9 for v in want)
+
+
+@SLOW
+@given(pairs=edges_strategy, n_iter=st.integers(1, 5))
+def test_label_propagation_matches_python_twin(spark, pairs, n_iter):
+    """Synchronous LPA vs a Python twin: each round every node takes
+    its most frequent neighbor label, ties to the smallest."""
+    from pidb_rdf_spark.analytics import label_propagation
+
+    nbrs: dict = {}
+    for a, b in {(a, b) for a, b in pairs if a != b}:
+        nbrs.setdefault(a, set()).add(b)
+        nbrs.setdefault(b, set()).add(a)
+    labels = {v: v for v in nbrs}
+    for _ in range(n_iter):
+        nxt = {}
+        for v, ns in nbrs.items():
+            counts: dict = {}
+            for u in ns:
+                counts[labels[u]] = counts.get(labels[u], 0) + 1
+            top = max(counts.values())
+            nxt[v] = min(c for c, k in counts.items() if k == top)
+        labels = nxt
+    df = spark.createDataFrame(pairs, "src long, dst long")
+    got = dict(map(tuple, label_propagation(df, n_iter=n_iter).collect()))
+    assert got == labels
