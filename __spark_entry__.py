@@ -3708,7 +3708,8 @@ def _louvain_sql(
     ctes = [
         "pr AS MATERIALIZED "
         f"(SELECT a, b FROM ({_jaccard_pairs_sql(threshold)}) jp)",
-        # _sym: both directions, self-loops dropped, dedup; w = 1.0
+        # _edge_list, undirected: both directions, self-loops dropped,
+        # dedup; w = 1.0
         """g0 AS MATERIALIZED (
   SELECT DISTINCT u AS src, v AS dst, 1.0 AS w FROM (
     SELECT a AS u, b AS v FROM pr UNION ALL SELECT b, a FROM pr)

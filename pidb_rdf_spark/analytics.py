@@ -35,8 +35,8 @@ set on its own session: loops never change the caller's conf.
 
 from __future__ import annotations
 
-import os
 from functools import reduce
+from itertools import accumulate
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -48,10 +48,8 @@ from pidb_rdf_spark import frontier
 # pass) provably fits: ~40 B/row keeps this cap well under the
 # default 10 MB autoBroadcast threshold. A corpus-scale vocabulary
 # falls back to the sort-merge plan unchanged. Module-level so tests
-# can pin both sides of the boundary (VERDICT r13 #7).
-_NEG_BROADCAST_MAX_VOCAB = int(
-    os.environ.get("SPARK_GRAFT_NEG_BROADCAST_MAX_VOCAB", "250000")
-)
+# can pin both sides of the boundary.
+_NEG_BROADCAST_MAX_VOCAB = 250_000
 
 
 def _components_driver_side(spark, edge_rows, id_dtype) -> DataFrame:
@@ -94,12 +92,46 @@ def _components_driver_side(spark, edge_rows, id_dtype) -> DataFrame:
     return spark.createDataFrame(out, schema=schema)
 
 
-def _sym(pairs: DataFrame, src: str, dst: str) -> DataFrame:
-    """Undirected edge view: both directions, self-loops dropped."""
-    fwd = pairs.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+def _edge_list(
+    pairs: DataFrame,
+    src: str,
+    dst: str,
+    directed: bool,
+    weight: str | None = None,
+    loops: bool = False,
+) -> DataFrame:
+    """The one edge list of the analytics operators, ``(src, dst,
+    __w)`` rows, unpinned. Its convention (flow style; the distance
+    metrics keep theirs in :func:`_cost_edges`):
+
+    - weighted (``weight`` names a column): NULL and w <= 0 edges
+      drop, and parallel weights sum;
+    - unweighted: distinct pairs, ``__w`` the exact literal 1.0, so a
+      weighted expression over it is bitwise its unweighted form;
+    - undirected adds the reverse of every edge;
+    - self-loops drop unless ``loops`` is set."""
+    e = pairs.select(
+        F.col(src).alias("src"),
+        F.col(dst).alias("dst"),
+        *([] if weight is None else [F.col(weight).cast("double").alias("__w")]),
+    )
+    if weight is not None:
+        e = e.filter(F.col("__w") > 0)
+    if not directed:
+        rev = [F.col("dst").alias("src"), F.col("src").alias("dst")]
+        e = e.unionAll(e.select(*rev, *e.columns[2:]))
+    if not loops:
+        e = e.filter(F.col("src") != F.col("dst"))
+    if weight is None:
+        return e.dropDuplicates().withColumn("__w", F.lit(1.0))
+    return e.groupBy("src", "dst").agg(F.sum("__w").alias("__w"))
+
+
+def _node_set(edges: DataFrame) -> DataFrame:
+    """The distinct ``node`` frame of ``edges``' endpoints."""
     return (
-        fwd.unionAll(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .filter(F.col("src") != F.col("dst"))
+        edges.select(F.col("src").alias("node"))
+        .unionAll(edges.select(F.col("dst").alias("node")))
         .dropDuplicates()
     )
 
@@ -122,7 +154,7 @@ def connected_components(
     otherwise dominate wall-clock on small pair sets (near-dup pair
     graphs are usually tiny relative to the corpus). Above the cap
     the distributed fixpoint runs unchanged."""
-    edges = _sym(pairs, src, dst)
+    edges = _edge_list(pairs, src, dst, False)
     if small_cap is not None:
         probe = edges.limit(small_cap + 1).collect()
         if len(probe) <= small_cap:
@@ -130,11 +162,7 @@ def connected_components(
                 pairs.sparkSession, probe, edges.schema["src"].dataType
             )
     edges = edges.localCheckpoint(eager=True)
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .dropDuplicates()
-        .localCheckpoint(eager=True)
-    )
+    nodes = _node_set(edges).localCheckpoint(eager=True)
     n = nodes.count()
     # State-size gate: below frontier._FIXPOINT_MIN_STATE_ROWS the same
     # rounds run with the caller's planner defaults (AQE, broadcasts)
@@ -146,18 +174,18 @@ def connected_components(
     ).select("node", F.col("label").alias("component"))
 
 
-def _min_label(edges, labels, n, max_iter, pin, what, part=""):
+def _min_label(edges, labels, n, max_iter, pin, what, part=()):
     """Min-label propagation to fixpoint: every node of ``labels``
-    (node[, part], label) repeatedly takes the min of its own label
-    and the labels of its ``edges`` (src, node[, part]) neighbors, the
-    label flowing from ``node`` to ``src`` within one ``part``. One
+    (node, *part, label) repeatedly takes the min of its own label
+    and the labels of its ``edges`` (src, node, *part) neighbors, the
+    label flowing from ``node`` to ``src`` within one ``part`` key. One
     :func:`frontier.rounds` statement per round — the neighbor-min
     aggregate is the one exchange of a pinned round (GROUP BY over
     the co-partitioned join ∪ own label) and the convergence flag
     ``__chg`` rides the same statement as a layout-preserving
     self-join. min() over ids is order-independent, so the pinned and
     the planner-default (``pin`` false) forms give identical labels."""
-    k = f", {part}" if part else ""
+    k = "".join(f", {c}" for c in part)
     round_sql = f"""
         SELECT node{k}, m.label, (m.label != l.label) AS __chg
         FROM (
@@ -171,7 +199,7 @@ def _min_label(edges, labels, n, max_iter, pin, what, part=""):
           GROUP BY node{k}
         ) m JOIN labels l USING (node{k})
     """
-    key = ["node", part] if part else "node"
+    key = ["node", *part]
     return frontier.rounds(
         labels.sparkSession, n, {"edges": (edges, key)}, (labels, key),
         [("labels", round_sql)], max_iter, flag="__chg", pin=pin, what=what,
@@ -192,11 +220,8 @@ def connected_components_star(
     edge set (no per-node neighbor collects — hub skew stays in hash
     aggregates, which partial-aggregate map-side). Convergence = the
     canonical edge set stops changing."""
-    edges = _sym(pairs, src, dst).localCheckpoint(eager=True)
-    all_nodes = (
-        edges.select(F.col("src").alias("node")).dropDuplicates()
-        .localCheckpoint(eager=True)
-    )
+    edges = _edge_list(pairs, src, dst, False).localCheckpoint(eager=True)
+    all_nodes = _node_set(edges).localCheckpoint(eager=True)
 
     def min_nbr(e):
         # m(u) = min(Γ(u) ∪ {u})
@@ -285,13 +310,10 @@ def shortest_hops(
     :func:`frontier.reach` loop (semi-naive: total work is O(edges
     reached), not O(edges x diameter)); ``max_iter`` is a round budget
     that raises when it runs out."""
-    edges = (
-        pairs.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        if directed
-        else _sym(pairs, src, dst)
-    ).localCheckpoint(eager=True)
     seeds = sources.select(F.col(sources.columns[0]).alias("node")).dropDuplicates()
-    return frontier.reach(edges, seeds, max_iter, what="shortest_hops")[0]
+    return frontier.reach(
+        _hop_edges(pairs, src, dst, directed), seeds, max_iter, what="shortest_hops"
+    )[0]
 
 
 def sssp(
@@ -605,6 +627,33 @@ def local_clustering(
 _PEEL_HINT = "long chains peel O(n) rounds — raise max_rounds"
 
 
+def _peel(edges, k, rounds, max_rounds, what):
+    """Peel the nodes of degree < k from the symmetric ``edges`` to a
+    fixpoint: per round one degree aggregation and two semi-joins.
+    ``rounds`` peels are already charged to ``max_rounds``; a round
+    that peels nothing is not charged, and a peel past the budget
+    raises. Returns ``(edges, deg, rounds)``, ``deg`` the fixpoint's
+    (src, __deg) frame."""
+    while True:
+        # symmetric view: a node's degree is its out-degree here
+        deg = edges.groupBy("src").agg(F.count("*").alias("__deg"))
+        if deg.filter(F.col("__deg") < k).limit(1).isEmpty():
+            return edges, deg, rounds
+        if rounds >= max_rounds:
+            raise frontier.exhausted(
+                what, max_rounds, _PEEL_HINT, "peeling", "max_rounds"
+            )
+        rounds += 1
+        keep = deg.filter(F.col("__deg") >= k).select("src").localCheckpoint(
+            eager=True
+        )
+        edges = (
+            edges.join(keep, on="src", how="leftsemi")
+            .join(keep.withColumnRenamed("src", "dst"), on="dst", how="leftsemi")
+            .localCheckpoint(eager=True)
+        )
+
+
 def kcore(
     pairs: DataFrame,
     k: int,
@@ -631,23 +680,8 @@ def kcore(
     on a one-row probe only."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    edges = _sym(pairs, src, dst).localCheckpoint(eager=True)
-    for r in range(max_rounds + 1):
-        # symmetric view: a node's degree is its out-degree here
-        deg = edges.groupBy("src").agg(F.count("*").alias("__deg"))
-        if deg.filter(F.col("__deg") < k).limit(1).isEmpty():
-            break
-        if r == max_rounds:
-            raise frontier.exhausted(
-                "kcore", max_rounds, _PEEL_HINT, "peeling", "max_rounds"
-            )
-        keep = deg.filter(F.col("__deg") >= k).select("src")
-        keep = keep.localCheckpoint(eager=True)
-        edges = (
-            edges.join(keep, on="src", how="leftsemi")
-            .join(keep.withColumnRenamed("src", "dst"), on="dst", how="leftsemi")
-            .localCheckpoint(eager=True)
-        )
+    edges = _edge_list(pairs, src, dst, False).localCheckpoint(eager=True)
+    edges = _peel(edges, k, 0, max_rounds, "kcore")[0]
     return edges.select(F.col("src").alias("node")).dropDuplicates()
 
 
@@ -684,7 +718,7 @@ def core_numbers(
     minimum degree + 1 (every threshold in between peels nothing, so
     a dense region — e.g. a template family forming a near-clique —
     costs O(peel depth) rounds, not O(degeneracy))."""
-    edges = _sym(pairs, src, dst).localCheckpoint(eager=True)
+    edges = _edge_list(pairs, src, dst, False).localCheckpoint(eager=True)
     survivors = (
         edges.select(F.col("src").alias("node"))
         .dropDuplicates()
@@ -696,32 +730,11 @@ def core_numbers(
     while not edges.limit(1).isEmpty():
         # peel at threshold k to a fixpoint; at the fixpoint the same
         # degree frame yields the min surviving degree — the next
-        # threshold with any work to do (the cheap short-circuiting
-        # isEmpty probe stays the per-iteration test; the full min
-        # aggregate runs once per stage, not once per round)
-        while True:
-            deg = edges.groupBy("src").agg(F.count("*").alias("__deg"))
-            if deg.filter(F.col("__deg") < k).limit(1).isEmpty():
-                min_deg = deg.agg(F.min("__deg").alias("m")).first()["m"]
-                next_k = (min_deg or k) + 1
-                break
-            if rounds >= max_rounds:
-                raise frontier.exhausted(
-                    "core_numbers", max_rounds, _PEEL_HINT, "peeling",
-                    "max_rounds",
-                )
-            rounds += 1
-            keep = deg.filter(F.col("__deg") >= k).select("src")
-            keep = keep.localCheckpoint(eager=True)
-            edges = (
-                edges.join(keep, on="src", how="leftsemi")
-                .join(
-                    keep.withColumnRenamed("src", "dst"),
-                    on="dst",
-                    how="leftsemi",
-                )
-                .localCheckpoint(eager=True)
-            )
+        # threshold with any work to do (the full min aggregate runs
+        # once per stage, not once per round)
+        edges, deg, rounds = _peel(edges, k, rounds, max_rounds, "core_numbers")
+        min_deg = deg.agg(F.min("__deg").alias("m")).first()["m"]
+        next_k = (min_deg or k) + 1
         now = (
             edges.select(F.col("src").alias("node"))
             .dropDuplicates()
@@ -754,8 +767,8 @@ def label_propagation(
     neighbors, ties broken by the SMALLEST label — fully
     deterministic, unlike classic asynchronous LPA. ``weight`` names
     an edge-weight column for weighted LPA (each round adopts the
-    label with the largest incident WEIGHT sum; parallel edge weights
-    sum, zero/negative-weight edges drop). A fixed round
+    label with the largest incident WEIGHT sum; edges per
+    :func:`_edge_list`). A fixed round
     count keeps the loop bounded (LPA has no convergence guarantee;
     5 rounds is the conventional cut). Known synchronous-LPA caveat
     (GraphFrames documents the same): bipartite/star regions can
@@ -766,38 +779,14 @@ def label_propagation(
     count-aggregation per (node, label), one max_by tie-broken
     reduction — all shuffles keyed on node id. No arrays are
     collected per node (safe for power-law degrees at scale)."""
-    if weight is None:
-        edges = _sym(pairs, src, dst).withColumn("__w", F.lit(1.0))
-    else:
-        fwd = pairs.select(
-            F.col(src).alias("src"),
-            F.col(dst).alias("dst"),
-            F.col(weight).cast("double").alias("__w"),
-        ).filter(F.col("__w") > 0)
-        edges = (
-            fwd.unionAll(
-                fwd.select(
-                    F.col("dst").alias("src"),
-                    F.col("src").alias("dst"),
-                    "__w",
-                )
-            )
-            .filter(F.col("src") != F.col("dst"))
-            .groupBy("src", "dst")
-            .agg(F.sum("__w").alias("__w"))
-        )
-    edges = edges.localCheckpoint(eager=True)
+    edges = _edge_list(pairs, src, dst, False, weight).localCheckpoint(eager=True)
     # Pinned rounds: edges laid out by dst (the per-round join key)
     # once, labels by node. Per round the whole most-frequent-label
     # step is ONE statement: the (node, label) weight aggregate, a
     # max-over-node window instead of a best-aggregate + re-join, and
     # the tie-break min — two exchanges (to (src, community), then to
     # src).
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .dropDuplicates()
-        .localCheckpoint(eager=True)
-    )
+    nodes = _node_set(edges).localCheckpoint(eager=True)
     round_sql = """
         SELECT node, min(community) AS community
         FROM (
@@ -870,10 +859,10 @@ def modularity_table(
     ``weight`` switches to the weighted decomposition (Newman 2004):
     e_c = intra-community weight sum, d_c = strength (weighted
     degree) sum, m = total weight — same column NAMES, double type —
-    with parallel edge weights pre-summed and zero/negative-weight
-    edges dropped (the :func:`louvain` / :func:`label_propagation`
-    convention). The exact-integer compare property is unweighted-
-    only; weighted q_num is just 4m²·contribution as a float.
+    with the edge convention of :func:`_edge_list` (the one
+    :func:`louvain` and :func:`label_propagation` use). The
+    exact-integer compare property is unweighted-only; weighted q_num
+    is just 4m²·contribution as a float.
 
     Plan shape: the deduplicated undirected edge list is computed
     once (localCheckpoint) and feeds the edge total m, the
@@ -1046,18 +1035,8 @@ def strongly_connected_components(
     partition key is an exact concatenated string (grows one id per
     round, bounded by max_rounds) — exactness over a hashed key's
     2^-64 cross-partition leak."""
-    e = (
-        pairs.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .dropDuplicates()
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionAll(e.select(F.col("dst").alias("node")))
-        .dropDuplicates()
-    )
-    work_nodes = nodes.select(
+    e = _edge_list(pairs, src, dst, True).localCheckpoint(eager=True)
+    work_nodes = _node_set(e).select(
         "node", F.lit("r").alias("p")
     ).localCheckpoint(eager=True)
     settled_parts: list = []
@@ -1071,20 +1050,28 @@ def strongly_connected_components(
             .select("src", "dst", "p")
             .localCheckpoint(eager=True)
         )
-        labels = node_p.select("node", "p", F.col("node").alias("label"))
-        # the forward-min flows along the edges, the backward-min
-        # against them; planner-default rounds at every size (no
-        # workload has measured a pinned SCC)
-        fwd, bwd = (
-            _min_label(
-                ep.select(F.col(a).alias("src"), F.col(b).alias("node"), "p"),
-                labels, 0, max_iter, False, "strongly_connected_components",
-                "p",
-            )
-            for a, b in (("dst", "src"), ("src", "dst"))
+        # ONE min-label loop runs both passes, the direction d in the
+        # partition key: the forward-min (d = 0) flows along the edges,
+        # the backward-min (d = 1) against them. Planner-default rounds
+        # at every size (no workload has measured a pinned SCC)
+        labels = _min_label(
+            ep.select(
+                F.col("dst").alias("src"), F.col("src").alias("node"), "p",
+                F.lit(0).alias("d"),
+            ).unionAll(
+                ep.select("src", F.col("dst").alias("node"), "p", F.lit(1).alias("d"))
+            ),
+            node_p.select(
+                "node", "p", F.explode(F.array(F.lit(0), F.lit(1))).alias("d"),
+                F.col("node").alias("label"),
+            ),
+            0, max_iter, False, "strongly_connected_components", ("p", "d"),
         )
-        joined = fwd.select("node", "p", F.col("label").alias("m")).join(
-            bwd.select("node", "p", F.col("label").alias("mb")), on=["node", "p"]
+        joined = labels.groupBy("node", "p").agg(
+            *[
+                F.min(F.when(F.col("d") == d, F.col("label"))).alias(c)
+                for d, c in ((0, "m"), (1, "mb"))
+            ]
         ).localCheckpoint(eager=True)
         settled = joined.filter(F.col("m") == F.col("mb")).select(
             "node", F.col("m").alias("component")
@@ -1125,9 +1112,8 @@ def closeness_centrality(
     distances become minimum path COSTS (per-origin semi-naive
     Bellman-Ford — the :func:`sssp` relaxation keyed by origin) and
     ``sum_hops`` carries the cost sums as doubles under the same
-    column names. Weight conventions for a DISTANCE metric: parallel
-    edges take the CHEAPEST weight (min — unlike the flow-style
-    operators, where parallel weights sum), zero/negative drop.
+    column names, over the distance-metric edges of
+    :func:`_cost_edges`.
 
     One multi-source BFS keyed by origin: state rows are
     (origin, node, hops), each round joins only the last frontier
@@ -1143,9 +1129,7 @@ def closeness_centrality(
         else _cost_edges(pairs, src, dst, weight, directed, "double")
     )
     if sources is None:
-        sources = edges.select(F.col("src").alias("node")).unionAll(
-            edges.select(F.col("dst").alias("node"))
-        )
+        sources = _node_set(edges)
     origins = (
         sources.select(F.col(sources.columns[0]).alias("origin"))
         .dropDuplicates()
@@ -1167,20 +1151,18 @@ def closeness_centrality(
 
 
 def _hop_edges(pairs, src, dst, directed) -> DataFrame:
-    """Pinned distinct (src, dst) BFS edges (see :func:`_sym` for the
-    undirected view)."""
-    return (
-        pairs.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .dropDuplicates()
-        if directed
-        else _sym(pairs, src, dst)
-    ).localCheckpoint(eager=True)
+    """Pinned unweighted :func:`_edge_list` edges for the hop-count
+    metrics. A self-loop never shortens a path; a directed graph keeps
+    it, so a node seen only in one still gets its row."""
+    return _edge_list(pairs, src, dst, directed, loops=directed).localCheckpoint(
+        eager=True
+    )
 
 
 def _cost_edges(pairs, src, dst, weight, directed, dtype) -> DataFrame:
     """Pinned (src, dst, w) edges for a DISTANCE metric: parallel edges
-    take the CHEAPEST weight (min — unlike the flow-style operators,
-    where parallel weights sum); zero/negative/NULL weights and
+    take the CHEAPEST weight (min — unlike :func:`_edge_list`, where
+    parallel weights sum); zero/negative/NULL weights and
     self-loops drop; undirected adds both directions."""
     e = pairs.select(
         F.col(src).alias("src"),
@@ -1200,12 +1182,7 @@ def _endpoints_and_origins(edges: DataFrame, sources: DataFrame | None):
     """Pinned distinct edge endpoints ``(node)`` and pinned distinct
     origins ``(origin)``: ``sources``' first column, or every
     endpoint."""
-    all_nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionAll(edges.select(F.col("dst").alias("node")))
-        .dropDuplicates()
-        .localCheckpoint(eager=True)
-    )
+    all_nodes = _node_set(edges).localCheckpoint(eager=True)
     origins = (
         all_nodes.select(F.col("node").alias("origin"))
         if sources is None
@@ -1269,9 +1246,8 @@ def _betweenness_weighted(
     the shortest-path-DAG membership test is the exact equality
     ``dist(u) + w == dist(v)``, which only never-misses when every
     distance is an exact long; pre-scale fractional weights to
-    integers, e.g. cents). Weight conventions for a DISTANCE metric
-    match weighted closeness: parallel edges take the CHEAPEST weight
-    (min), zero/negative/NULL drop.
+    integers, e.g. cents). Edges per :func:`_cost_edges`, as in
+    weighted closeness.
 
     Shape: (1) per-origin semi-naive Bellman-Ford settles
     dist(origin, node) — the sssp relaxation keyed by origin;
@@ -1418,9 +1394,7 @@ def betweenness_centrality(
     """(node, betweenness) — Brandes' algorithm as DataFrame rounds.
 
     ``weight`` names an edge-weight column for the weighted form
-    (positive integral weights; see :func:`_betweenness_weighted` for
-    the conventions) — the unweighted plan below is bitwise-unchanged
-    when ``weight`` is None, the family convention.
+    (positive integral weights; see :func:`_betweenness_weighted`).
 
     Forward: a multi-source BFS keyed by origin settles each node's
     level and shortest-path count sigma (sigma sums over the level-k
@@ -1541,13 +1515,10 @@ def node_similarity(
     exact-verify shape used across this repo), so every emitted
     (n_common, jaccard) is exact."""
     nbrs = (
-        pairs.select(F.col(src).alias("node"), F.col(dst).alias("nbr"))
-        .dropDuplicates()
-        if directed
-        else _sym(pairs, src, dst).select(
-            F.col("src").alias("node"), F.col("dst").alias("nbr")
-        )
-    ).localCheckpoint(eager=True)
+        _edge_list(pairs, src, dst, directed, loops=directed)
+        .select(F.col("src").alias("node"), F.col("dst").alias("nbr"))
+        .localCheckpoint(eager=True)
+    )
     deg = nbrs.groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
     # r13: same single-task wedge-expansion hazard as
     # link_prediction — spread the (materialized, so the partition
@@ -1823,9 +1794,9 @@ def louvain(
 ) -> DataFrame:
     """(node, community) by Louvain-style modularity optimization
     (Blondel et al. 2008), deterministic. ``weight`` names an edge
-    weight column for the weighted form (parallel edge weights sum;
-    without it the simple unweighted graph is used): ``levels``
-    passes of the
+    weight column for the weighted form (edges per
+    :func:`_edge_list`; without it the simple unweighted graph is
+    used): ``levels`` passes of the
     synchronous local-move phase (:func:`_louvain_moves` —
     modularity-gain argmax per node, smallest-id tie-break, bounded
     rounds, move only on strict improvement) each followed by graph
@@ -1846,31 +1817,7 @@ def louvain(
     mapping back through levels is one hash join per level. Fixed
     bounds everywhere (synchronous moves have no convergence
     guarantee; the early-exit fires when a round moves nothing)."""
-    if weight is None:
-        e = _sym(pairs, src, dst).select(
-            "src", "dst", F.lit(1.0).alias("w")
-        )
-    else:
-        # weighted form: symmetric view with PARALLEL EDGE WEIGHTS
-        # SUMMED (multigraph semantics; the unweighted path instead
-        # dedups to the simple graph), self-loops dropped
-        fwd = pairs.select(
-            F.col(src).alias("src"),
-            F.col(dst).alias("dst"),
-            F.col(weight).cast("double").alias("w"),
-        )
-        e = (
-            fwd.unionAll(
-                fwd.select(
-                    F.col("dst").alias("src"),
-                    F.col("src").alias("dst"),
-                    "w",
-                )
-            )
-            .filter(F.col("src") != F.col("dst"))
-            .groupBy("src", "dst")
-            .agg(F.sum("w").alias("w"))
-        )
+    e = _edge_list(pairs, src, dst, False, weight).withColumnRenamed("__w", "w")
     e = e.localCheckpoint(eager=True)
     if e.isEmpty():
         # typed empty frame: node/community carry the INPUT id type
@@ -1980,7 +1927,7 @@ def link_prediction(
     has deg(z) >= 2 by construction, so 1/ln(deg) is finite. The
     integer scores are engine-exact; the float sums are
     order-sensitive (use the ints for cross-engine comparison)."""
-    nbrs = _sym(pairs, src, dst).select(
+    nbrs = _edge_list(pairs, src, dst, False).select(
         F.col("src").alias("node"), F.col("dst").alias("nbr")
     ).localCheckpoint(eager=True)
     deg = nbrs.groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
@@ -2117,8 +2064,7 @@ def eigenvector_centrality(
     graph 20 rounds is well past visual convergence (pin exact values
     against a dense twin, as the tests do, rather than assuming a
     fixpoint). ``weight`` scales each propagated score by the edge
-    weight (parallel weights sum, w ≤ 0 drops — the family
-    convention; unweighted multiplies by an exact literal 1.0).
+    weight (edges per :func:`_edge_list`, self-loops kept).
 
     Plan shape per round — identical to one :func:`hits` half-step:
     one equi-join of the score vector against the edge list + one
@@ -2127,38 +2073,9 @@ def eigenvector_centrality(
     driver round-trip. State is |V| doubles, checkpointed per round.
     Nodes with no in-edges decay to 0 (the standard behavior — use
     :func:`pagerank` when teleport mass is wanted)."""
-    if weight is None:
-        base = pairs.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        if not directed:
-            base = base.unionAll(
-                base.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            )
-        edges = base.dropDuplicates().withColumn(
-            "__w", F.lit(1.0)
-        ).localCheckpoint(eager=True)
-    else:
-        base = pairs.select(
-            F.col(src).alias("src"),
-            F.col(dst).alias("dst"),
-            F.col(weight).cast("double").alias("__w"),
-        ).filter(F.col("__w") > 0)
-        if not directed:
-            base = base.unionAll(
-                base.select(
-                    F.col("dst").alias("src"), F.col("src").alias("dst"), "__w"
-                )
-            )
-        edges = (
-            base.groupBy("src", "dst")
-            .agg(F.sum("__w").alias("__w"))
-            .localCheckpoint(eager=True)
-        )
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionAll(edges.select(F.col("dst").alias("node")))
-        .dropDuplicates()
-        .localCheckpoint(eager=True)
-    )
+    edges = _edge_list(pairs, src, dst, directed, weight, loops=True)
+    edges = edges.localCheckpoint(eager=True)
+    nodes = _node_set(edges).localCheckpoint(eager=True)
     # Pinned rounds: edges laid out by src (the per-round join key)
     # once; each round is the one contribution shuffle plus a 1-row
     # L2-norm scalar subquery.
@@ -2195,42 +2112,17 @@ def hits(
     iterations with L2 normalization each half-step (the textbook
     formulation, so an unrolled SQL oracle can replay it).
     ``weight`` names an edge-weight column for the weighted form
-    (each propagated score multiplies by w; parallel edge weights
-    sum, zero/negative drop — the family convention). Unweighted,
-    ``__w`` is the exact literal 1.0, so every addend is bitwise what
-    it was before the weighted form existed and the pinned oracle
-    replays unchanged.
+    (each propagated score multiplies by w; edges per
+    :func:`_edge_list`, self-loops kept).
 
     Per iteration: authority = normalize(A^T h) is one equi-join +
     one aggregation; hub = normalize(A a) the same; each L2 norm is
     a one-row aggregate folded back as a broadcast cross join (the
     PageRank dangling-mass shape — no driver round-trip). State is
     2 x |V| doubles, checkpointed per round."""
-    if weight is None:
-        edges = (
-            pairs.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-            .dropDuplicates()
-            .withColumn("__w", F.lit(1.0))
-            .localCheckpoint(eager=True)
-        )
-    else:
-        edges = (
-            pairs.select(
-                F.col(src).alias("src"),
-                F.col(dst).alias("dst"),
-                F.col(weight).cast("double").alias("__w"),
-            )
-            .filter(F.col("__w") > 0)
-            .groupBy("src", "dst")
-            .agg(F.sum("__w").alias("__w"))
-            .localCheckpoint(eager=True)
-        )
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionAll(edges.select(F.col("dst").alias("node")))
-        .dropDuplicates()
-        .localCheckpoint(eager=True)
-    )
+    edges = _edge_list(pairs, src, dst, True, weight, loops=True)
+    edges = edges.localCheckpoint(eager=True)
+    nodes = _node_set(edges).localCheckpoint(eager=True)
 
     # Pinned rounds: the two half-steps join the edge list on
     # DIFFERENT keys (src for the authority step, dst for the hub
@@ -2303,17 +2195,21 @@ def ktruss(
     shape ``triangle_count`` uses — never per-triangle enumeration);
     edges below support k-2 drop; converge when a round drops
     nothing. Rounds = peeling depth (small on clique-family graphs);
-    an exhausted ``max_rounds`` RAISES (house rule: never silently
-    return a superset). Lineage truncated per round."""
+    ``max_rounds`` is a budget under :func:`kcore`'s rule: a round
+    that peels nothing is not charged, and a peel past the budget
+    raises (never a silent superset). Lineage truncated per round."""
     if k < 3:
         raise ValueError("k must be >= 3 (k=2 is just the edge set)")
     e = (
-        _sym(pairs, src, dst)
+        _edge_list(pairs, src, dst, False)
         .filter(F.col("src") < F.col("dst"))
         .select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_rounds):
+    n = e.count()
+    for r in range(max_rounds + 1):
+        if n == 0:
+            return e
         adj = e.select(F.col("a").alias("x"), F.col("b").alias("n")).unionAll(
             e.select(F.col("b").alias("x"), F.col("a").alias("n"))
         )
@@ -2330,15 +2226,120 @@ def ktruss(
             e.join(sup.filter(F.col("__sup") >= k - 2), on=["a", "b"], how="leftsemi")
             .localCheckpoint(eager=True)
         )
-        if kept.count() == e.count():
+        n_kept = kept.count()
+        if n_kept == n:
             return kept
-        e = kept
-        if e.isEmpty():
-            return e
-    raise RuntimeError(
-        f"ktruss did not converge within max_rounds={max_rounds} — "
-        "raise the budget (result would be a superset, not returned)"
+        if r == max_rounds:
+            raise frontier.exhausted(
+                "ktruss", max_rounds, _PEEL_HINT, "peeling", "max_rounds"
+            )
+        e, n = kept, n_kept
+
+
+def _walks(pairs, walk_len, n_walks, src, dst, salt, directed, weight, pq=None):
+    """The walk kernel of :func:`random_walks` and
+    :func:`node2vec_walks`: ``n_walks`` walks of up to ``walk_len``
+    steps from every node of the :func:`_edge_list` graph (self-loops
+    dropped), as (start, walk, step, node) rows, step 0 = the start.
+    Walks stop early at sinks.
+
+    Step s of walk (start, walk) draws h = md5(salt:start:walk:s), a
+    52-bit integer. An unbiased step (every step of a random walk,
+    the first of a node2vec walk) takes neighbor rank ``h mod deg +
+    1`` in the sorted adjacency, or, weighted, the cumsum pick over
+    the edge weights. Node2vec (``pq`` = (p, q)) steps s >= 2 take
+    the cumsum pick over w · bias(prev, x). The cumsum pick is the
+    first candidate in ranked-adjacency order whose cumulative weight
+    exceeds u·total, u = h / 2^52 — a fixed-order sum, so walks
+    replay bit-for-bit on any engine and partitioning.
+
+    Scale shape: adjacency is a RANKED EDGE TABLE (node, rank,
+    neighbor — one row_number window over edges), never per-node
+    neighbor arrays. A rank step is one join of the walkers against
+    (degree, rank) on the current node; a cumsum step joins deg(cur)
+    candidates per walker and sums them in a per-(start, walk)
+    window. Per-step checkpoints are lazy with no per-step probe: the
+    driver never blocks between steps, every checkpoint materializes
+    once under the collecting action, and a walker set that dies
+    early flows through the remaining steps as empty joins."""
+    if walk_len < 1 or n_walks < 1:
+        raise ValueError("walk_len and n_walks must be >= 1")
+    from pidb_rdf_spark.operators.hashing import md5_prefix_long
+
+    e = _edge_list(pairs, src, dst, directed, weight)
+    rk = e.select(
+        F.col("src").alias("cur"),
+        F.col("dst").alias("nbr"),
+        "__w",
+        F.row_number()
+        .over(Window.partitionBy("src").orderBy("dst"))
+        .alias("rk"),
+    ).localCheckpoint(eager=False)
+    deg = rk.groupBy("cur").agg(F.max("rk").alias("deg"))
+    prev_adj = rk.select(
+        F.col("cur").alias("prev"), "nbr", F.lit(1).alias("__adj")
     )
+    walkers = _node_set(e).select(
+        F.col("node").alias("start"),
+        F.explode(F.sequence(F.lit(0), F.lit(n_walks - 1))).alias("walk"),
+        "node",
+    ).localCheckpoint(eager=False)
+    out = walkers.select(
+        "start", "walk", F.lit(0).cast("int").alias("step"), "node"
+    )
+    for s in range(1, walk_len + 1):
+        h = md5_prefix_long(
+            F.concat(
+                F.lit(salt + ":"),
+                F.col("start").cast("string"),
+                F.lit(":"),
+                F.col("walk").cast("string"),
+                F.lit(f":{s}"),
+            ),
+            52,
+        )
+        cur = walkers.withColumnRenamed("node", "cur")  # sinks drop out
+        if weight is None and (pq is None or s == 1):
+            picked = (
+                cur.join(deg, on="cur")
+                .withColumn("rk", (h % F.col("deg") + 1).cast("int"))
+                .join(rk, on=["cur", "rk"])
+            )
+        else:
+            cand, wt = cur.join(rk, on="cur"), F.col("__w")
+            if pq is not None and s > 1:
+                cand = cand.join(prev_adj, on=["prev", "nbr"], how="left")
+                # unweighted, __w is the literal 1.0 and 1.0·bias is
+                # exact, so the draws are those of the bias alone
+                wt = wt * (
+                    F.when(F.col("nbr") == F.col("prev"), F.lit(1.0 / pq[0]))
+                    .when(F.col("__adj").isNotNull(), F.lit(1.0))
+                    .otherwise(F.lit(1.0 / pq[1]))
+                )
+            # the lower bound is the LAGGED cumsum (bit-identical
+            # floats), never cum - wt re-derived: a float round there
+            # could pick zero or two candidates at a boundary
+            w = Window.partitionBy("start", "walk")
+            wo = w.orderBy("rk")
+            ut = F.col("__u") * F.col("__tot")
+            picked = (
+                cand.withColumn("__cum", F.sum(wt).over(wo))
+                .withColumn(
+                    "__lo", F.coalesce(F.lag("__cum").over(wo), F.lit(0.0))
+                )
+                .withColumn("__tot", F.sum(wt).over(w))
+                .withColumn("__u", h / F.lit(float(1 << 52)))
+                .filter((F.col("__cum") > ut) & (F.col("__lo") <= ut))
+            )
+        walkers = picked.select(
+            "start", "walk", F.col("cur").alias("prev"), F.col("nbr").alias("node")
+        ).localCheckpoint(eager=False)
+        out = out.unionAll(
+            walkers.select(
+                "start", "walk", F.lit(s).cast("int").alias("step"), "node"
+            )
+        )
+    return out
 
 
 def random_walks(
@@ -2362,131 +2363,13 @@ def random_walks(
 
     ``weight`` switches to weight-proportional steps: the draw
     becomes the fixed-order cumsum pick over the ranked adjacency
-    (first neighbor whose cumulative weight exceeds u·total,
-    u = the same md5 draw / 2^52 — the :func:`node2vec_walks`
-    mechanism), parallel edge weights sum, zero/negative drop. The
-    unweighted draw expression is untouched, so the pinned oracle
-    replays unchanged. The weighted step inspects every neighbor of
-    each walker (a candidate join, deg(cur) rows per walker) where
-    the unweighted step is a rank point-join — the inherent cost of
-    weighted sampling without per-node alias tables.
-
-    Scale shape: adjacency becomes a RANKED EDGE TABLE (node, rank,
-    neighbor — one row_number window over edges), never per-node
-    neighbor arrays (a hub's array would be degree-sized; the rank
-    table stays row-shaped and co-partitions with the walk frontier).
-    Each step is ONE join of the frontier against (degree, rank) on
-    the current node — walk_len narrow joins total, frontier size
-    ≤ nodes x n_walks throughout.
-
-    r13: per-step checkpoints are LAZY (eager=False) and the loop has
-    no per-step isEmpty barrier — the former eager-checkpoint +
-    isEmpty pair cost 2 driver-BLOCKING round-trips per step (~10
-    serialized launches for walk_len=5), each paying full scheduler
-    latency before the next step's plan was even built. Lazily the
-    checkpoints still truncate lineage at build time and materialize
-    once each when the collecting action runs, but the driver never
-    blocks between steps (measured isolated sf0.1, same machine
-    state: random_walks 3.80 → 2.05 s, skipgram 3.98 → 2.55 s).
-    A frontier that dies early now flows through the remaining steps
-    as empty (narrow, zero-row) joins instead of breaking the loop —
-    output-identical, since empty unions contribute nothing."""
-    if walk_len < 1 or n_walks < 1:
-        raise ValueError("walk_len and n_walks must be >= 1")
-    if weight is None:
-        e = (
-            pairs.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-            .filter(F.col("src") != F.col("dst"))
-            .dropDuplicates()
-            if directed
-            else _sym(pairs, src, dst)
-        ).withColumn("__w", F.lit(1.0))
-    else:
-        base = pairs.select(
-            F.col(src).alias("src"),
-            F.col(dst).alias("dst"),
-            F.col(weight).cast("double").alias("__w"),
-        ).filter((F.col("__w") > 0) & (F.col("src") != F.col("dst")))
-        if not directed:
-            base = base.unionAll(
-                base.select(
-                    F.col("dst").alias("src"), F.col("src").alias("dst"), "__w"
-                )
-            )
-        e = base.groupBy("src", "dst").agg(F.sum("__w").alias("__w"))
-    rk = e.select(
-        F.col("src").alias("cur"),
-        F.col("dst").alias("nbr"),
-        "__w",
-        F.row_number()
-        .over(Window.partitionBy("src").orderBy("dst"))
-        .alias("rk"),
-    ).localCheckpoint(eager=False)
-    deg = rk.groupBy("cur").agg(F.max("rk").alias("deg"))
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionAll(e.select(F.col("dst").alias("node")))
-        .dropDuplicates()
-    )
-    frontier = nodes.select(
-        F.col("node").alias("start"),
-        F.explode(F.sequence(F.lit(0), F.lit(n_walks - 1))).alias("walk"),
-        F.col("node").alias("node"),
-    ).localCheckpoint(eager=False)
-    out = frontier.select(
-        "start", "walk", F.lit(0).cast("int").alias("step"), "node"
-    )
-    from pidb_rdf_spark.operators.hashing import md5_prefix_long
-
-    for s in range(1, walk_len + 1):
-        h = md5_prefix_long(
-            F.concat(
-                F.lit(salt + ":"),
-                F.col("start").cast("string"),
-                F.lit(":"),
-                F.col("walk").cast("string"),
-                F.lit(f":{s}"),
-            ),
-            52,
-        )
-        if weight is None:
-            frontier = (
-                frontier.withColumnRenamed("node", "cur")
-                .join(deg, on="cur")  # sinks drop out: the walk ends
-                .withColumn("rk", (h % F.col("deg") + 1).cast("int"))
-                .join(rk, on=["cur", "rk"])
-                .select("start", "walk", F.col("nbr").alias("node"))
-                .localCheckpoint(eager=False)
-            )
-        else:
-            cand = frontier.withColumnRenamed("node", "cur").join(
-                rk, on="cur"
-            )  # sinks drop out: the walk ends
-            w_all = Window.partitionBy("start", "walk")
-            wo = w_all.orderBy("rk")
-            picked = (
-                cand.withColumn("__cum", F.sum("__w").over(wo))
-                # lagged cumsum as the lower bound — same boundary
-                # rule as node2vec_walks
-                .withColumn(
-                    "__lo", F.coalesce(F.lag("__cum").over(wo), F.lit(0.0))
-                )
-                .withColumn("__tot", F.sum("__w").over(w_all))
-                .withColumn("__u", h / F.lit(float(1 << 52)))
-                .filter(
-                    (F.col("__cum") > F.col("__u") * F.col("__tot"))
-                    & (F.col("__lo") <= F.col("__u") * F.col("__tot"))
-                )
-            )
-            frontier = picked.select(
-                "start", "walk", F.col("nbr").alias("node")
-            ).localCheckpoint(eager=False)
-        out = out.unionAll(
-            frontier.select(
-                "start", "walk", F.lit(s).cast("int").alias("step"), "node"
-            )
-        )
-    return out
+    (edges per :func:`_edge_list`). The weighted step inspects every
+    neighbor of each walker (deg(cur) rows per walker) where the
+    unweighted step is a rank point-join — the inherent cost of
+    weighted sampling without per-node alias tables. Every step is
+    :func:`node2vec_walks`' first step; :func:`_walks` is the shared
+    kernel and states the scale shape."""
+    return _walks(pairs, walk_len, n_walks, src, dst, salt, directed, weight)
 
 
 def skipgram_pairs(
@@ -2648,167 +2531,32 @@ def node2vec_walks(
     returning (x = prev), 1 for staying near (x adjacent to prev),
     1/``q`` for exploring outward. Low p ⇒ backtracking (BFS-like
     neighborhoods), low q ⇒ outward drift (DFS-like). Step 1 is
-    uniform (no prev yet), exactly node2vec's convention.
+    :func:`random_walks`' step (no prev yet), exactly node2vec's
+    convention.
 
     ``weight`` names an edge-weight column (the paper's weighted
-    form: transition weight = w(cur, x) · bias). Parallel edge
-    weights sum, zero/negative-weight edges drop — the family-wide
-    convention. The weighted step 1 draws proportional to w via the
-    same cumsum mechanism; the UNWEIGHTED step-1 draw stays the
-    modular rank pick, so existing unweighted corpora (and the
-    pinned twin/oracle) replay unchanged.
+    form: transition weight = w(cur, x) · bias; edges per
+    :func:`_edge_list`). The weighted step 1 draws proportional to w;
+    the unweighted one is the modular rank pick.
 
-    Determinism contract: candidates keep the ranked-adjacency order;
-    the draw is the first candidate whose cumulative weight exceeds
-    u·total with u = md5(salt:start:walk:s)/2^52 — a fixed-order
-    cumsum (exact dyadic bias weights; weighted form multiplies the
-    input weights in the same fixed order), so walks replay
-    bit-for-bit on any engine/partitioning (pinned against
+    Determinism contract: the draw is the fixed-order cumsum pick of
+    :func:`_walks` (exact dyadic bias weights; the weighted form
+    multiplies the input weights in the same fixed order), so walks
+    replay bit-for-bit on any engine/partitioning (pinned against
     pure-python twins, weighted and unweighted).
 
-    Scale shape: per step, ONE join of the frontier against the
+    Scale shape: per step s ≥ 2, ONE join of the walkers against the
     ranked edge table on the current node (candidate rows =
     Σ deg(cur) — the intrinsic node2vec cost of inspecting every
-    candidate's relation to prev), one left semi-ish join against the
-    edge set keyed (prev, candidate) for the adjacency class, and one
-    per-(start,walk) window for the cumsum pick (partition size =
-    deg(cur), never global). No per-node arrays, no alias tables.
-    Per-step checkpoints are lazy with no isEmpty barrier (r13) —
-    see :func:`random_walks` for the rationale; one collecting job
-    instead of 2·walk_len driver-blocking jobs, identical output."""
-    if walk_len < 1 or n_walks < 1:
-        raise ValueError("walk_len and n_walks must be >= 1")
+    candidate's relation to prev), one left join against the edge set
+    keyed (prev, candidate) for the adjacency class, and one
+    per-(start, walk) window for the cumsum pick (partition size =
+    deg(cur), never global). No per-node arrays, no alias tables."""
     if p <= 0 or q <= 0:
         raise ValueError("p and q must be > 0")
-    from pidb_rdf_spark.operators.hashing import md5_prefix_long
-
-    if weight is None:
-        e = (
-            pairs.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-            .filter(F.col("src") != F.col("dst"))
-            .dropDuplicates()
-            if directed
-            else _sym(pairs, src, dst)
-        ).withColumn("__w", F.lit(1.0))
-    else:
-        base = pairs.select(
-            F.col(src).alias("src"),
-            F.col(dst).alias("dst"),
-            F.col(weight).cast("double").alias("__w"),
-        ).filter((F.col("__w") > 0) & (F.col("src") != F.col("dst")))
-        if not directed:
-            base = base.unionAll(
-                base.select(
-                    F.col("dst").alias("src"), F.col("src").alias("dst"), "__w"
-                )
-            )
-        e = base.groupBy("src", "dst").agg(F.sum("__w").alias("__w"))
-    rk = e.select(
-        F.col("src").alias("cur"),
-        F.col("dst").alias("nbr"),
-        "__w",
-        F.row_number()
-        .over(Window.partitionBy("src").orderBy("dst"))
-        .alias("rk"),
-    ).localCheckpoint(eager=False)
-    deg = rk.groupBy("cur").agg(F.max("rk").alias("deg"))
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionAll(e.select(F.col("dst").alias("node")))
-        .dropDuplicates()
+    return _walks(
+        pairs, walk_len, n_walks, src, dst, salt, directed, weight, (p, q)
     )
-    start = nodes.select(
-        F.col("node").alias("start"),
-        F.explode(F.sequence(F.lit(0), F.lit(n_walks - 1))).alias("walk"),
-        F.col("node").alias("node"),
-    ).localCheckpoint(eager=False)
-    out = start.select(
-        "start", "walk", F.lit(0).cast("int").alias("step"), "node"
-    )
-
-    def draw_hash(s: int) -> Column:
-        return md5_prefix_long(
-            F.concat(
-                F.lit(salt + ":"),
-                F.col("start").cast("string"),
-                F.lit(":"),
-                F.col("walk").cast("string"),
-                F.lit(f":{s}"),
-            ),
-            52,
-        )
-
-    def _cumsum_pick(cand: DataFrame, s: int, wt_col: str) -> DataFrame:
-        """First candidate (ranked-adjacency order) whose cumulative
-        weight exceeds u·total. The lower bound is the LAGGED cumsum
-        (bit-identical floats), never cum - wt re-derived (a float
-        round there could pick zero or two candidates at a boundary)."""
-        w = Window.partitionBy("start", "walk")
-        wo = w.orderBy("rk")
-        u = (draw_hash(s) / F.lit(float(1 << 52))).alias("__u")
-        return (
-            cand.withColumn("__cum", F.sum(wt_col).over(wo))
-            .withColumn(
-                "__lo", F.coalesce(F.lag("__cum").over(wo), F.lit(0.0))
-            )
-            .withColumn("__tot", F.sum(wt_col).over(w))
-            .withColumn("__u", u)
-            .filter(
-                (F.col("__cum") > F.col("__u") * F.col("__tot"))
-                & (F.col("__lo") <= F.col("__u") * F.col("__tot"))
-            )
-        )
-
-    # step 1: no prev yet — uniform modular rank pick (unweighted;
-    # the pinned twin/oracle contract) or w-proportional cumsum
-    step1 = start.withColumnRenamed("node", "cur")
-    if weight is None:
-        step1 = (
-            step1.join(deg, on="cur")
-            .withColumn("rk", (draw_hash(1) % F.col("deg") + 1).cast("int"))
-            .join(rk, on=["cur", "rk"])
-        )
-    else:
-        step1 = _cumsum_pick(step1.join(rk, on="cur"), 1, "__w")
-    frontier = step1.select(
-        "start", "walk", F.col("cur").alias("prev"),
-        F.col("nbr").alias("node"),
-    ).localCheckpoint(eager=False)
-    out = out.unionAll(
-        frontier.select(
-            "start", "walk", F.lit(1).cast("int").alias("step"), "node"
-        )
-    )
-    prev_adj = rk.select(
-        F.col("cur").alias("prev"), F.col("nbr").alias("nbr"),
-        F.lit(1).alias("__adj"),
-    )
-    for s in range(2, walk_len + 1):
-        cand = frontier.withColumnRenamed("node", "cur").join(
-            rk, on="cur"
-        )  # sinks drop out: the walk ends
-        bias = (
-            F.when(F.col("nbr") == F.col("prev"), F.lit(1.0 / p))
-            .when(F.col("__adj").isNotNull(), F.lit(1.0))
-            .otherwise(F.lit(1.0 / q))
-        )
-        cand = cand.join(prev_adj, on=["prev", "nbr"], how="left").withColumn(
-            # unweighted: __w is literal 1.0, so __wt == bias bitwise
-            # (IEEE 1.0·x is exact) and the pinned draws replay
-            "__wt",
-            F.col("__w") * bias,
-        )
-        picked = _cumsum_pick(cand, s, "__wt")
-        frontier = picked.select(
-            "start", "walk", F.col("cur").alias("prev"),
-            F.col("nbr").alias("node"),
-        ).localCheckpoint(eager=False)
-        out = out.unionAll(
-            frontier.select(
-                "start", "walk", F.lit(s).cast("int").alias("step"), "node"
-            )
-        )
-    return out
 
 
 def negative_samples(
@@ -2948,54 +2696,27 @@ def neighborhood_function(
         raise ValueError("tier must be 'exact' or 'sketch'")
     if max_radius < 1:
         raise ValueError("max_radius must be >= 1")
-    edges = (
-        pairs.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        if directed
-        else _sym(pairs, src, dst)
-    ).localCheckpoint(eager=True)
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionAll(edges.select(F.col("dst").alias("node")))
-        .dropDuplicates()
-        .localCheckpoint(eager=True)
-    )
+    edges = _edge_list(pairs, src, dst, directed, loops=directed)
+    edges = edges.localCheckpoint(eager=True)
+    nodes = _node_set(edges).localCheckpoint(eager=True)
 
     if tier == "exact":
-        # pinned loop session sized by the ball-state bound, the edge
-        # frame laid out by the join key ONCE; the per-round
-        # checkpoint is LAZY and ONE count() both materializes it and
-        # is the termination probe
-        n_nodes = nodes.count()
+        # a bounded frontier.reach from every node in a loop session
+        # sized by the ball-state bound, the edge frame laid out by
+        # src once; N(r) comes from one count per hop level
         loop, n_parts = frontier.pinned(
-            edges.sparkSession, n_nodes * (max_radius + 1)
+            edges.sparkSession, nodes.count() * (max_radius + 1)
         )
-        e_by_member = (
-            frontier.bind(edges, loop)
-            .withColumnRenamed("src", "member")
-            .repartition(n_parts, "member")
-            .localCheckpoint(eager=True)
-        )
-        state = frontier.bind(nodes, loop).select(
-            "node", F.col("node").alias("member")
-        )
-        state = state.localCheckpoint(eager=True)
-        out = [(0, float(n_nodes))]
-        front = state
-        for r in range(1, max_radius + 1):
-            grown = (
-                front.join(e_by_member, on="member")
-                .select("node", F.col("dst").alias("member"))
-                .dropDuplicates()
-                .join(state, on=["node", "member"], how="leftanti")
-                .localCheckpoint(eager=False)
-            )
-            n_grown = grown.count()
-            if n_grown == 0:
-                break
-            state = state.unionAll(grown)
-            front = grown
-            out.append((r, out[-1][1] + float(n_grown)))
-        return out
+        e_by_src = frontier.bind(edges, loop).repartition(n_parts, "src")
+        state = frontier.reach(
+            e_by_src.localCheckpoint(eager=True),
+            frontier.bind(nodes, loop).select(F.col("node").alias("origin"), "node"),
+            max_radius, bounded=True,
+        )[0]
+        # every level up to the last is non-empty, so the sorted hop
+        # counts are N(0), N(1) - N(0), ...
+        levels = sorted(map(tuple, state.groupBy("hops").count().collect()))
+        return list(enumerate(accumulate(float(n) for _, n in levels))) or [(0, 0.0)]
 
     b = int(registers_log2)
     if not 4 <= b <= 12:

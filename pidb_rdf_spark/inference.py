@@ -21,7 +21,6 @@ data tables broadcasts.
 
 from __future__ import annotations
 
-import os
 from collections import OrderedDict
 
 from pyspark.sql import DataFrame
@@ -36,14 +35,12 @@ SPO = "SPO"  # subproperty-of
 SRO = "SRO"  # subrelationship-of
 SLO = "SLO"  # sublabel-of
 
-# Driver-side closure growth bound (r14): small_cap bounds the EDGE
+# Driver-side closure growth bound: small_cap bounds the EDGE
 # set a driver-side closure may collect, but a deep chain's closure is
 # quadratic in it; past this many pairs _closure_driver_side abandons
 # the attempt and the distributed fixpoint runs instead. ~1M tuples is
 # ~100-200 MB of transient driver sets — bounded, brief, safe.
-_DRIVER_CLOSURE_MAX_PAIRS = int(
-    os.environ.get("SPARK_GRAFT_DRIVER_CLOSURE_MAX_PAIRS", "1000000")
-)
+_DRIVER_CLOSURE_MAX_PAIRS = 1_000_000
 
 # NOTE (r14, measured rejection): extending small_cap to the
 # DATA-sized closure call sites (SPARQL `+`/`*`, Cypher `[*]`,

@@ -1218,6 +1218,47 @@ def test_louvain_weighted(spark):
     assert {got[4], got[5], got[6]} == {4}
 
 
+# a w=1 triangle 1-2-3 with a second (w=0.5) edge 1-2 and a
+# self-loop on 2, a second triangle 4-5-6 bridged at 3-4, and the
+# edges the convention drops: 3-9 (w=0), 9-10 (w=-1), 10-11 (NULL)
+CONVENTION_EDGES = [
+    (1, 2, 1.0), (2, 3, 1.0), (3, 1, 1.0), (1, 2, 0.5), (2, 2, 3.0),
+    (4, 5, 1.0), (5, 6, 1.0), (6, 4, 1.0), (3, 4, 1.0),
+    (3, 9, 0.0), (9, 10, -1.0), (10, 11, None),
+]
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        "label_propagation", "louvain", "eigenvector_centrality", "hits",
+        "random_walks", "node2vec_walks",
+    ],
+)
+def test_weighted_operators_share_the_edge_convention(spark, op):
+    """Every weighted flow-style operator drops NULL and w <= 0 edges:
+    its answer on the graph equals its answer on the graph's w > 0
+    edges. With every weight 0, louvain returns the typed empty frame
+    of an empty graph."""
+    import pidb_rdf_spark.analytics as A
+
+    g = spark.createDataFrame(CONVENTION_EDGES, "src long, dst long, w double")
+
+    def rows(df):
+        # the power iterations' float sums may differ in the last ulp
+        # when the two inputs are laid out differently
+        return sorted(
+            tuple(round(v, 12) if isinstance(v, float) else v for v in r)
+            for r in df.collect()
+        )
+
+    fn = getattr(A, op)
+    assert rows(fn(g, weight="w")) == rows(fn(g.filter("w > 0"), weight="w"))
+    if op == "louvain":
+        out = fn(g.withColumn("w", F.lit(0.0)), weight="w")
+        assert out.columns == ["node", "community"] and out.count() == 0
+
+
 def test_link_prediction_python_twin(spark):
     """All four predictors vs a brute-force python replay on a mixed
     graph (hub + triangle + pendant), both with and without

@@ -136,6 +136,21 @@ def test_kcore_budget_exhaustion_raises(spark):
     assert A.kcore(pairs, 2).isEmpty()
 
 
+def test_ktruss_budget_exhaustion_raises(spark):
+    """ktruss charges its budget by kcore's rule: a peel past
+    max_rounds raises, and the round that peels nothing is not
+    charged. K4 plus a triangle with a dangling edge needs one peel
+    at k=3 (the dangling edge)."""
+    pairs = spark.createDataFrame(
+        [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4),
+         (5, 6), (5, 7), (6, 7), (7, 8)],
+        ["src", "dst"],
+    )
+    with pytest.raises(RuntimeError, match="max_rounds=0"):
+        A.ktruss(pairs, 3, max_rounds=0)
+    assert A.ktruss(pairs, 3, max_rounds=1).count() == 9
+
+
 def test_interleaved_fixpoint_loops_restore_conf(spark, monkeypatch):
     """Loops running concurrently on ONE session never change its conf:
     a third thread polling the caller's conf while pagerank,

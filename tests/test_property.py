@@ -305,7 +305,7 @@ def test_star_components_match_union_find(spark, monkeypatch, pairs):
     expected = {
         (n, c) for n, c in _py_components(pairs).items() if True
     }
-    # drop self-loop-only nodes the same way _sym does
+    # drop self-loop-only nodes the same way _edge_list does
     real = {(a, b) for a, b in pairs if a != b}
     nodes_in = {x for e in real for x in e}
     expected = {(n, c) for n, c in expected if n in nodes_in}
