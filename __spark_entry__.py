@@ -46,34 +46,31 @@ def _reasoner_hierarchy(spark: SparkSession, sf_dir: str):
     but the closure fixpoint runs ONCE across the family: the frame
     object is memoized here, and inference.py's plan-keyed LRU
     returns the cached closure for entries 2 and 3."""
+    from pidb_rdf_spark.session import local_frame
+
     key = (id(spark), sf_dir)
     if key not in _HIER_CACHE:
-        # one explicit slice: createDataFrame alone slices even a
-        # 4-row list into default.parallelism partitions, and the
-        # union below inherits every slice — the closure's probe stage
-        # was 65 near-empty tasks for a 31-row hierarchy (r14, §2.2)
-        labels = spark.createDataFrame(
-            spark.sparkContext.parallelize(
-                [
-                    ("Customer", "Actor"),
-                    ("Supplier", "Actor"),
-                    ("Nation", "Place"),
-                    ("Region", "Place"),
-                ],
-                1,
-            ),
-            schema="child string, parent string",
+        # local_frame keeps the literal rows in one slice: the union
+        # below inherits every slice of its inputs
+        labels = local_frame(
+            spark,
+            [
+                ("Customer", "Actor"),
+                ("Supplier", "Actor"),
+                ("Nation", "Place"),
+                ("Region", "Place"),
+            ],
+            "child string, parent string",
         )
         nations = spark.read.parquet(f"{sf_dir}/nation.parquet")
         containment = nations.select(
             F.concat(F.lit("urn:nation:"), F.col("n_nationkey").cast("string")).alias("child"),
             F.concat(F.lit("urn:region:"), F.col("n_regionkey").cast("string")).alias("parent"),
         )
-        rels = spark.createDataFrame(
-            spark.sparkContext.parallelize(
-                [("IN_NATION", "LOCATED"), ("IN_REGION", "LOCATED")], 1
-            ),
-            schema="child string, parent string",
+        rels = local_frame(
+            spark,
+            [("IN_NATION", "LOCATED"), ("IN_REGION", "LOCATED")],
+            "child string, parent string",
         )
         _HIER_CACHE[key] = labels.unionAll(containment).unionAll(rels)
     return _HIER_CACHE[key]

@@ -2703,20 +2703,17 @@ def neighborhood_function(
     if tier == "exact":
         # a bounded frontier.reach from every node in a loop session
         # sized by the ball-state bound, the edge frame laid out by
-        # src once; N(r) comes from one count per hop level
-        loop, n_parts = frontier.pinned(
-            edges.sparkSession, nodes.count() * (max_radius + 1)
-        )
+        # src once; N(r) sums the level sizes the rounds' termination
+        # probes already counted (N(0) = one (node, node) pair each)
+        n = nodes.count()
+        loop, n_parts = frontier.pinned(edges.sparkSession, n * (max_radius + 1))
         e_by_src = frontier.bind(edges, loop).repartition(n_parts, "src")
-        state = frontier.reach(
+        sizes = frontier.reach(
             e_by_src.localCheckpoint(eager=True),
             frontier.bind(nodes, loop).select(F.col("node").alias("origin"), "node"),
             max_radius, bounded=True,
-        )[0]
-        # every level up to the last is non-empty, so the sorted hop
-        # counts are N(0), N(1) - N(0), ...
-        levels = sorted(map(tuple, state.groupBy("hops").count().collect()))
-        return list(enumerate(accumulate(float(n) for _, n in levels))) or [(0, 0.0)]
+        )[2]
+        return list(enumerate(accumulate(float(k) for k in [n, *sizes])))
 
     b = int(registers_log2)
     if not 4 <= b <= 12:

@@ -151,6 +151,7 @@ from pyspark.sql import types as T
 
 from pidb_rdf_spark import frontier
 from pidb_rdf_spark.graph import NODE_CORE, SIDECAR_COLS, PropertyGraph
+from pidb_rdf_spark.session import local_frame
 
 
 _STR_ESCAPES = {
@@ -1915,15 +1916,12 @@ def _materialize_props(c: _Compile, needed: set) -> None:
                         )
                     c.cur = c.cur.withColumn(cname, tcol)
             continue
-        cols = []
+        cols = {}
         for p in props:
             cname = f"__p_{var}_{p}"
             c.prop_cols[(var, p)] = cname
-            cols.append(_prop_col(g, kind, var, p).alias(cname))
-        side = (g.nodes if kind == "node" else g.edges).select(
-            F.col("id").alias(var), *cols
-        )
-        c.cur = c.cur.join(side, on=var, how="left")
+            cols[cname] = _prop_col(g, kind, var, p)
+        c.cur = g.lookup(c.cur, var, cols, edges=kind != "node")
 
 
 def _lambda_body(c: _Compile, var: str, body: tuple):
@@ -3960,10 +3958,7 @@ def _call_procedure(g: PropertyGraph, name: str, yields: list) -> DataFrame:
         ]
         if hot:
             parts.append(
-                g.spark.createDataFrame(
-                    g.spark.sparkContext.parallelize([(h,) for h in hot], 1),
-                    "propertyKey string",
-                )
+                local_frame(g.spark, [(h,) for h in hot], "propertyKey string")
             )
         df = parts[0]
         for p in parts[1:]:

@@ -23,10 +23,13 @@ Example::
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pidb_rdf_spark.graph import PropertyGraph
+from pidb_rdf_spark.session import local_frame
 
 CUR = "__cur"
 
@@ -74,16 +77,45 @@ class Traversal:
             se=self._se,
         )
 
-    def _frontier_nodes(self) -> DataFrame:
-        """Join the current node frontier back to the nodes table."""
-        return self.df.join(
-            self.g.nodes.withColumnRenamed("id", CUR), on=CUR, how="inner"
+    def _prop(self, key: str) -> Column:
+        """The current element's property ``key``: ``g.node_prop`` on
+        a node frontier; on an edge frontier the edge table's own
+        column when it has one (``predicate``, ``src``, ...), else the
+        ``props`` map entry."""
+        if not self.on_edges:
+            return self.g.node_prop(key)
+        if key in self.g.edges.columns:
+            return F.col(key)
+        return F.col("props").getItem(key)
+
+    def _read(self, df: DataFrame, cols: dict, how: str) -> DataFrame:
+        """The one element read of the DSL: join the ``CUR``-keyed
+        frame ``df`` with ``(id, cols)`` of the current element table
+        (edges on an edge frontier, nodes otherwise), where ``cols``
+        maps output names to property keys read by :meth:`_prop`'s
+        rule. One hash join per step, through ``PropertyGraph.lookup``.
+
+        ``how`` is ``"inner"`` for the steps that emit element data
+        (``values``, ``value_map``, ``label``, ``uri``, ``group*``,
+        ``sack_df``, and the value side of ``by()`` modulators and
+        ``group``): a traverser whose element has no row (a dangling
+        edge end) yields nothing there. It is ``"left"`` for the steps
+        that keep every traverser and only use the value (``order_by``,
+        ``local``'s order key, ``sack_by``, a ``by("prop")``
+        modulator): a missing element reads NULL, so it sorts last,
+        leaves the sack unchanged, or projects NULL."""
+        return self.g.lookup(
+            df, CUR, {a: self._prop(k) for a, k in cols.items()},
+            edges=self.on_edges, how=how,
         )
 
-    def _semi(self, filtered: DataFrame) -> "Traversal":
-        """Keep frontier rows whose node passes a nodes-side filter."""
-        keep = filtered.select(F.col("id").alias(CUR))
-        return self._with(self.df.join(keep, on=CUR, how="leftsemi"))
+    def _pin(self) -> DataFrame:
+        """The frontier with traverser identity pinned: one
+        ``__tid`` row id, checkpointed so every branch or modulator
+        run over it sees the same ids."""
+        return self.df.withColumn(
+            "__tid", F.monotonically_increasing_id()
+        ).localCheckpoint(eager=False)
 
     # ---- starts (S1-S4) ------------------------------------------------
 
@@ -92,42 +124,30 @@ class Traversal:
     # ---- filters (P13-P15, S5/S6) --------------------------------------
 
     def has_label(self, *labels: str) -> "Traversal":
-        n = self.g.nodes
-        cond = F.array_contains("labels", labels[0])
-        for lab in labels[1:]:
-            cond = cond | F.array_contains("labels", lab)
-        if self.pristine:
-            return self._fuse(cond)
-        return self._semi(n.filter(cond))
+        """Nodes carrying any of ``labels``; on an edge frontier the
+        edge label is its predicate (what :meth:`label` returns)."""
+        if self.on_edges:
+            return self.has("predicate", lambda c: c.isin(list(labels)))
+        return self.has(
+            "labels",
+            lambda c: reduce(
+                Column.__or__, [F.array_contains(c, lab) for lab in labels]
+            ),
+        )
 
     def has(self, key: str, value=None) -> "Traversal":
         """has(key) = property exists; has(key, value) = equality;
         has(key, callable) = predicate on the Column (P.gt etc.)."""
-        if self.pristine and not self.on_edges:
-            col = self.g.node_prop(key)
-            if value is None:
-                return self._fuse(col.isNotNull())
-            if callable(value):
-                return self._fuse(value(col))
-            return self._fuse(col == F.lit(value))
-        if self.on_edges:
-            e = self.g.edges
-            col = F.col(key) if key in e.columns else F.col("props").getItem(key)
-            if value is None:
-                keep = e.filter(col.isNotNull())
-            elif callable(value):
-                keep = e.filter(value(col))
-            else:
-                keep = e.filter(col == F.lit(value))
-            return self._with(
-                self.df.join(keep.select(F.col("id").alias(CUR)), on=CUR, how="leftsemi")
-            )
-        col = self.g.node_prop(key)
         if value is None:
-            return self._semi(self.g.nodes.filter(col.isNotNull()))
-        if callable(value):
-            return self._semi(self.g.nodes.filter(value(col)))
-        return self._semi(self.g.nodes.filter(col == F.lit(value)))
+            test = Column.isNotNull
+        elif callable(value):
+            test = value
+        else:
+            test = lambda c: c == F.lit(value)  # noqa: E731
+        if self.pristine:
+            return self._fuse(test(self._prop(key)))
+        df = self._read(self.df, {"__has": key}, "inner")
+        return self._with(df.filter(test(F.col("__has"))).drop("__has"))
 
     def has_id(self, *ids) -> "Traversal":
         return self._with(self.df.filter(F.col(CUR).isin([int(i) for i in ids])))
@@ -139,9 +159,7 @@ class Traversal:
         """Shared engine of where_/not_: pin traverser identity, run
         the sub-traversal ONCE over the whole frontier, then one
         traverser-id semi/anti join — never a per-row loop."""
-        src = self.df.withColumn(
-            "__tid", F.monotonically_increasing_id()
-        ).localCheckpoint(eager=False)
+        src = self._pin()
         b = body(Traversal(self.g, src, self.on_edges))
         hits = b.df.select("__tid").dropDuplicates()
         how = "leftsemi" if keep else "leftanti"
@@ -162,15 +180,7 @@ class Traversal:
     def has_not(self, key: str) -> "Traversal":
         """TinkerPop ``hasNot(key)``: keep elements MISSING the
         property (NULL under the typed-column/props-map read)."""
-        if self.on_edges:
-            e = self.g.edges
-            col = (
-                F.col(key) if key in e.columns
-                else F.col("props").getItem(key)
-            )
-            keep = e.filter(col.isNull()).select(F.col("id").alias(CUR))
-            return self._with(self.df.join(keep, on=CUR, how="leftsemi"))
-        return self._semi(self.g.nodes.filter(self.g.node_prop(key).isNull()))
+        return self.has(key, Column.isNull)
 
     # ---- side effects / stream utilities (deep-tail steps, r12) --------
 
@@ -201,11 +211,8 @@ class Traversal:
             )
         if not ids:
             return self
-        extra = self.df.sparkSession.createDataFrame(
-            self.df.sparkSession.sparkContext.parallelize(
-                [(int(i),) for i in ids], 1
-            ),
-            f"{CUR} long",
+        extra = local_frame(
+            self.df.sparkSession, [(int(i),) for i in ids], f"{CUR} long"
         )
         return self._with(
             self.df.unionByName(extra, allowMissingColumns=True)
@@ -397,9 +404,7 @@ class Traversal:
         same ids)."""
         if not branches:
             raise ValueError("coalesce_() needs at least one branch")
-        src = self.df.withColumn(
-            "__tid", F.monotonically_increasing_id()
-        ).localCheckpoint(eager=False)
+        src = self._pin()
         outs = []
         on_edges = self.on_edges
         for rank, branch in enumerate(branches):
@@ -530,22 +535,11 @@ class Traversal:
         """TinkerPop ``sack(op).by(key)``: fold the CURRENT element's
         property into each traverser's sack (``sum``/``mult``/
         ``min``/``max``/``assign``). Works on node and edge
-        frontiers; one hash join against the element table (the same
-        join ``values()`` pays), NULL properties leave the sack
-        unchanged."""
+        frontiers; NULL properties leave the sack unchanged."""
         if "__sack" not in self.df.columns:
             raise ValueError("sack_by(): call with_sack(initial) first")
-        if self.on_edges:
-            e = self.g.edges
-            col = F.col(key) if key in e.columns else F.col("props").getItem(key)
-            side = e.select(F.col("id").alias(CUR), col.cast("double").alias("__sv"))
-        else:
-            side = self.g.nodes.select(
-                F.col("id").alias(CUR),
-                self.g.node_prop(key).cast("double").alias("__sv"),
-            )
-        joined = self.df.join(side, on=CUR, how="left")
-        s, v = F.col("__sack"), F.col("__sv")
+        joined = self._read(self.df, {"__sv": key}, "left")
+        s, v = F.col("__sack"), F.col("__sv").cast("double")
         if op == "sum":
             newsack = s + F.coalesce(v, F.lit(0.0))
         elif op == "mult":
@@ -570,17 +564,7 @@ class Traversal:
             raise ValueError("sack_df(): call with_sack(initial) first")
         if not keys:
             return self.df.select(F.col("__sack").alias("sack"))
-        if self.on_edges:
-            e = self.g.edges.withColumnRenamed("id", CUR)
-            src = self.df.join(e, on=CUR, how="inner")
-            cols = [
-                (F.col(k) if k in e.columns else F.col("props").getItem(k)).alias(k)
-                for k in keys
-            ]
-        else:
-            src = self._frontier_nodes()
-            cols = [self.g.node_prop(k).alias(k) for k in keys]
-        return src.select(*cols, F.col("__sack").alias("sack"))
+        return self._values(keys, F.col("__sack").alias("sack"))
 
     def local(
         self,
@@ -603,9 +587,7 @@ class Traversal:
         per-group top-k plan ``operators/window.py`` uses, so the
         sort is per-partition-group, never global. Ordering ties
         break on element id (deterministic across partitionings)."""
-        src = self.df.withColumn(
-            "__tid", F.monotonically_increasing_id()
-        ).localCheckpoint(eager=False)
+        src = self._pin()
         b = body(Traversal(self.g, src, self.on_edges))
         df = b.df
         if dedup:
@@ -614,22 +596,7 @@ class Traversal:
             from pyspark.sql import Window
 
             if order_key is not None:
-                if b.on_edges:
-                    e = self.g.edges
-                    col = (
-                        F.col(order_key)
-                        if order_key in e.columns
-                        else F.col("props").getItem(order_key)
-                    )
-                    side = e.select(
-                        F.col("id").alias(CUR), col.alias("__ok")
-                    )
-                else:
-                    side = self.g.nodes.select(
-                        F.col("id").alias(CUR),
-                        self.g.node_prop(order_key).alias("__ok"),
-                    )
-                df = df.join(side, on=CUR, how="left")
+                df = b._read(df, {"__ok": order_key}, "left")
                 # elements MISSING the order property rank LAST either
                 # direction (Spark's asc default is NULLS FIRST, which
                 # would hand them the per-traverser top-k slots)
@@ -783,13 +750,10 @@ class Traversal:
         one row per ``key`` property value with the sorted list of
         ``value`` properties of the grouped frontier elements
         (sorted → deterministic across partitionings)."""
-        frontier = self._frontier_nodes()
-        return frontier.groupBy(
-            self.g.node_prop(key).alias("key")
-        ).agg(
-            F.array_sort(
-                F.collect_list(self.g.node_prop(value))
-            ).alias("values")
+        return (
+            self._read(self.df, {"key": key, "__v": value}, "inner")
+            .groupBy("key")
+            .agg(F.array_sort(F.collect_list("__v")).alias("values"))
         )
 
     # ---- project() / group().by(traversal) ------------------------------
@@ -819,20 +783,7 @@ class Traversal:
         frontier (never per-row), one grouped aggregate keyed on
         ``__tid``, one left join back — the ``local()`` plan shape."""
         if isinstance(spec, str):
-            if self.on_edges:
-                e = self.g.edges.withColumnRenamed("id", CUR)
-                col = (
-                    F.col(spec)
-                    if spec in e.columns
-                    else F.col("props").getItem(spec)
-                )
-                return src.join(e, on=CUR, how="left").select(
-                    "__tid", col.alias(name)
-                )
-            nodes = self.g.nodes.withColumnRenamed("id", CUR)
-            return src.join(nodes, on=CUR, how="left").select(
-                "__tid", self.g.node_prop(spec).alias(name)
-            )
+            return self._read(src, {name: spec}, "left").select("__tid", name)
         body, terminal, *rest = spec
         b = body(Traversal(self.g, src, self.on_edges))
         reached = b.df
@@ -849,22 +800,9 @@ class Traversal:
                 )
             )
         if rest:
-            prop = rest[0]
-            if b.on_edges:
-                e = self.g.edges.withColumnRenamed("id", CUR)
-                vcol = (
-                    F.col(prop)
-                    if prop in e.columns
-                    else F.col("props").getItem(prop)
-                )
-                vals = reached.join(e, on=CUR, how="inner").select(
-                    "__tid", vcol.alias("__v")
-                )
-            else:
-                nodes = self.g.nodes.withColumnRenamed("id", CUR)
-                vals = reached.join(nodes, on=CUR, how="inner").select(
-                    "__tid", self.g.node_prop(prop).alias("__v")
-                )
+            vals = b._read(reached, {"__v": rest[0]}, "inner").select(
+                "__tid", "__v"
+            )
         else:
             vals = reached.select("__tid", F.col(CUR).alias("__v"))
         if terminal == "fold":
@@ -895,9 +833,7 @@ class Traversal:
         filter on the column for that semantics)."""
         if not specs:
             raise ValueError("project() needs at least one named modulator")
-        src = self.df.withColumn(
-            "__tid", F.monotonically_increasing_id()
-        ).localCheckpoint(eager=False)
+        src = self._pin()
         out = src.select("__tid")
         for name, spec in specs.items():
             part = self._by_modulator(src, name, spec)
@@ -923,20 +859,9 @@ class Traversal:
         ``group_values`` contract). One sub-traversal + one grouped
         aggregate; NULL keys (traversers whose key traversal died)
         group under NULL, matching SQL GROUP BY."""
-        if self.on_edges:
-            raise ValueError(
-                "group() folds node property values; on an edge "
-                "frontier the value side would silently join nothing "
-                "— hop to a node frontier (out_v/in_v) first"
-            )
-        src = self.df.withColumn(
-            "__tid", F.monotonically_increasing_id()
-        ).localCheckpoint(eager=False)
+        src = self._pin()
         keyed = self._by_modulator(src, "key", key)
-        nodes = self.g.nodes.withColumnRenamed("id", CUR)
-        vals = src.join(nodes, on=CUR, how="inner").select(
-            "__tid", self.g.node_prop(value).alias("__v")
-        )
+        vals = self._read(src, {"__v": value}, "inner").select("__tid", "__v")
         return (
             keyed.join(vals, on="__tid", how="inner")
             .groupBy("key")
@@ -965,9 +890,8 @@ class Traversal:
             raise ValueError("by must be 'id' or 'uri'")
         keyed = out.withColumn("__pid", F.monotonically_increasing_id())
         ex = keyed.select("__pid", F.posexplode("path").alias("pos", "nid"))
-        uri = self.g.nodes.select(F.col("id").alias("nid"), "uri")
         return (
-            ex.join(uri, on="nid", how="left")
+            self.g.lookup(ex, "nid", {"uri": F.col("uri")})
             .groupBy("__pid")
             .agg(
                 F.array_sort(F.collect_list(F.struct("pos", "uri"))).alias("__s")
@@ -982,43 +906,44 @@ class Traversal:
         """Project as_()-labeled node ids to uris."""
         df = self.df
         for n in names:
-            lookup = self.g.nodes.select(
-                F.col("id").alias(f"__sid_{n}"), F.col("uri").alias(f"__uri_{n}")
-            )
-            df = df.withColumnRenamed(n, f"__sid_{n}").join(lookup, on=f"__sid_{n}")
-        return df.select(*[F.col(f"__uri_{n}").alias(n) for n in names])
+            df = self.g.lookup(df, n, {n: F.col("uri")}, how="inner")
+        return df.select(*names)
 
     def values(self, *keys: str) -> DataFrame:
         """Project properties of the current frontier (reference
         PropertiesStep / values())."""
-        if self.on_edges:
-            e = self.g.edges.withColumnRenamed("id", CUR)
-            cols = [
-                (F.col(k) if k in e.columns else F.col("props").getItem(k)).alias(k)
-                for k in keys
-            ]
-            return self.df.join(e, on=CUR, how="inner").select(*cols)
-        frontier = self._frontier_nodes()
-        cols = [self.g.node_prop(k).alias(k) for k in keys]
-        return frontier.select(*cols)
+        return self._values(keys)
+
+    def _values(self, keys: tuple, *extra: Column) -> DataFrame:
+        """One column per key, named as the key (read under private
+        names, so a key may hold dots or repeat), plus ``extra``."""
+        got = self._read(
+            self.df, {f"__v{i}": k for i, k in enumerate(keys)}, "inner"
+        )
+        return got.select(
+            *[F.col(f"__v{i}").alias(k) for i, k in enumerate(keys)], *extra
+        )
 
     def value_map(self, *keys: str) -> DataFrame:
         """One row per element with its property map (TinkerPop
         ``valueMap()``): the full schemaless ``props`` map, optionally
         restricted to ``keys``. Includes ``id`` for joinability."""
-        if self.on_edges:
-            e = self.g.edges.withColumnRenamed("id", CUR)
-            src = self.df.join(e, on=CUR, how="inner")
-        else:
-            src = self._frontier_nodes()
-        props = F.col("props")
+        src = self._read(self.df, {"__props": "props"}, "inner")
+        props = F.col("__props")
         if keys:
             key_arr = F.array(*[F.lit(k) for k in keys])
             props = F.map_filter(props, lambda k, _: F.array_contains(key_arr, k))
         return src.select(F.col(CUR).alias("id"), props.alias("value_map"))
 
     def uri(self) -> DataFrame:
-        return self._frontier_nodes().select("uri")
+        """The current nodes' uris; edges have none, so an edge
+        frontier raises."""
+        if self.on_edges:
+            raise ValueError(
+                "uri(): edges have no uri — hop to a node frontier "
+                "(out_v/in_v) first"
+            )
+        return self._read(self.df, {"uri": "uri"}, "inner").select("uri")
 
     def id_(self) -> DataFrame:
         return self.df.select(F.col(CUR).alias("id"))
@@ -1028,9 +953,12 @@ class Traversal:
         (reference joins labels with '::', Neo4jVertex.java:100-103;
         SURVEY §1.5 says use native arrays instead)."""
         if self.on_edges:
-            e = self.g.edges.withColumnRenamed("id", CUR)
-            return self.df.join(e, on=CUR).select(F.col("predicate").alias("label"))
-        return self._frontier_nodes().select(F.explode("labels").alias("label"))
+            return self._read(self.df, {"label": "predicate"}, "inner").select(
+                "label"
+            )
+        return self._read(self.df, {"__labels": "labels"}, "inner").select(
+            F.explode("__labels").alias("label")
+        )
 
     # ---- terminal aggregates (A1-A6 analogs) ---------------------------
 
@@ -1046,9 +974,10 @@ class Traversal:
             return self.df.groupBy(F.col(CUR).alias("key")).agg(
                 F.count("*").alias("count")
             )
-        frontier = self._frontier_nodes()
-        return frontier.groupBy(self.g.node_prop(key).alias("key")).agg(
-            F.count("*").alias("count")
+        return (
+            self._read(self.df, {"key": key}, "inner")
+            .groupBy("key")
+            .agg(F.count("*").alias("count"))
         )
 
     def _det_tiebreaks(
@@ -1072,10 +1001,10 @@ class Traversal:
         ]
 
     def order_by(self, key: str, asc: bool = True) -> "Traversal":
-        frontier = self._frontier_nodes()
-        col = self.g.node_prop(key)
+        col = F.col("__ok")
         return self._with(
-            frontier.orderBy(
+            self._read(self.df, {"__ok": key}, "left")
+            .orderBy(
                 # nulls LAST in both directions: elements missing the
                 # order property must not win top slots of
                 # order_by().limit() (matches the by()-modulated
@@ -1083,7 +1012,8 @@ class Traversal:
                 col.asc_nulls_last() if asc else col.desc_nulls_last(),
                 F.col(CUR).asc(),
                 *self._det_tiebreaks(),
-            ).select(CUR, *[c for c in self.df.columns if c != CUR])
+            )
+            .drop("__ok")
         )
 
     def limit(self, n: int) -> "Traversal":

@@ -236,7 +236,7 @@ def rounds(
         cur = _drive(
             cur, None, step, lambda _s, p: p, lambda p: p.filter(flag),
             max_rounds, bounded, what, hint, doing,
-        )
+        )[0]
     out[sview] = cur
     return {view: bind(df, spark) for view, df in out.items()}
 
@@ -246,16 +246,20 @@ def _drive(state, frontier, step, merge, fresh, max_rounds, bounded, what, hint,
     step's frame is pinned lazily; ``fresh`` selects the next frontier
     from it, and that frontier's count both materializes the pin and
     ends the loop when it is zero. ``merge`` folds the pinned frame
-    into the state."""
+    into the state. Returns ``(state, sizes)``: ``sizes`` holds the
+    frontier count of every merged round."""
+    sizes = []
     for r in range(1, max_rounds + 1):
         pinned = step(r, frontier, state).localCheckpoint(eager=False)
         frontier = fresh(pinned)
-        if frontier.count() == 0:
-            return state
+        n = frontier.count()
+        if n == 0:
+            return state, sizes
         state = merge(state, pinned)
+        sizes.append(n)
     if not bounded:
         raise exhausted(what, max_rounds, hint, doing)
-    return state
+    return state, sizes
 
 
 def _keys(seeds: DataFrame) -> list[str]:
@@ -270,13 +274,14 @@ def reach(
     bounded: bool = False,
     what: str = "reach",
     hint: str = _RAISE_HINT,
-) -> tuple[DataFrame, list[DataFrame]]:
+) -> tuple[DataFrame, list[DataFrame], list[int]]:
     """BFS from ``seeds`` — ``([origin,] node[, sigma])`` rows, distinct
     per key — over ``edges`` ``(src, dst)``, which the caller pins (the
-    loop re-scans it every round). Returns ``(state, levels)``:
+    loop re-scans it every round). Returns ``(state, levels, sizes)``:
     ``levels[i]`` holds the ``([origin,] node, hops[, sigma])`` rows
-    settled in round i (``levels[0]`` = the seeds, hops 0) and
-    ``state`` is their union."""
+    settled in round i (``levels[0]`` = the seeds, hops 0), ``state``
+    is their union, and ``sizes[i]`` is the row count of
+    ``levels[i + 1]``, counted by the round's termination probe."""
     keys = _keys(seeds)
     okey = keys[:-1]
     sig = ["sigma"] if "sigma" in seeds.columns else []
@@ -298,11 +303,11 @@ def reach(
     seed = seeds.select(
         *keys, F.lit(0).cast("long").alias("hops"), *sig
     ).localCheckpoint(eager=False)
-    levels = _drive(
+    levels, sizes = _drive(
         [seed], seed, step, lambda lv, p: lv + [p], lambda p: p,
         max_rounds, bounded, what, hint, "expanding",
     )
-    return _union(levels), levels
+    return _union(levels), levels, sizes
 
 
 def relax(
@@ -359,7 +364,7 @@ def relax(
     state = _drive(
         seed, seed, step, lambda _s, p: p, lambda p: p.filter("is_new"),
         max_rounds, bounded, what, hint, "relaxing",
-    )
+    )[0]
     return state.select(*keys, "dist")
 
 

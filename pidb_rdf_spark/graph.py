@@ -144,6 +144,35 @@ class PropertyGraph:
         index invariant, ``semantics/RDFImport.java:198-203``)."""
         return self.nodes.filter(F.col("uri") == uri)
 
+    def lookup(
+        self,
+        df: DataFrame,
+        id_col: str,
+        cols: dict,
+        edges: bool = False,
+        how: str = "left",
+    ) -> DataFrame:
+        """Attach element columns to ``df`` by the element id held in
+        ``id_col``: one hash join of ``df`` with ``(id, cols)`` of the
+        node table (the edge table when ``edges``). ``cols`` maps each
+        output name to a Column over that table; an output name that
+        ``df`` already has (``id_col`` included) is replaced in place,
+        the others are appended. ``how`` is ``"left"`` (ids without an
+        element row read NULL) or ``"inner"`` (they drop). Every front
+        end's by-id read of node or edge columns goes through here, so
+        a pruned scan of the element table lands in one place."""
+        def ref(name):  # names may hold dots (Cypher's `n.name`)
+            return F.col("`" + name.replace("`", "``") + "`")
+
+        side = (self.edges if edges else self.nodes).select(
+            F.col("id").alias("__lookup_id"),
+            *[c.alias(f"__lookup_{i}") for i, c in enumerate(cols.values())],
+        )
+        out = {n: F.col(f"__lookup_{i}").alias(n) for i, n in enumerate(cols)}
+        return df.join(side, ref(id_col) == F.col("__lookup_id"), how).select(
+            *[out.pop(c, ref(c)) for c in df.columns], *out.values()
+        )
+
     # ---- property access ----------------------------------------------
 
     def prop_type_families(self) -> dict:

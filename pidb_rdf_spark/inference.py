@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from pidb_rdf_spark import frontier
 from pidb_rdf_spark.graph import PropertyGraph
+from pidb_rdf_spark.session import local_frame
 
 # hierarchy kinds, reference LiteOntologyImporter.java:136-147,185-195
 SCO = "SCO"  # subclass-of
@@ -121,21 +122,6 @@ def transitive_closure(
     return closure
 
 
-def _local_df(spark, rows, schema, rows_per_slice: int = 8192) -> DataFrame:
-    """DataFrame over driver-resident rows with a SIZE-DERIVED slice
-    count. ``spark.createDataFrame`` alone slices any local list into
-    ``default.parallelism`` partitions (32 near-empty tasks for a
-    vocabulary-sized list), while funneling the slices through a
-    ``coalesce(1)`` single task measured 6-9 s for a 32k-row closure —
-    explicit ``parallelize(rows, n)`` with n ≈ rows/8k avoids both
-    (r14, guide §2.2: partition counts follow data size)."""
-    n = max(1, min(int(spark.sparkContext.defaultParallelism),
-                   len(rows) // rows_per_slice + 1))
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, n), schema=schema
-    )
-
-
 def _closure_driver_side(
     spark, schema, rows, include_self: bool, max_pairs: int | None = None
 ) -> DataFrame | None:
@@ -169,7 +155,7 @@ def _closure_driver_side(
     # deterministic row order (None/mixed-type safe key); row order is
     # semantically irrelevant but keeps downstream plans reproducible
     ordered = sorted(closure, key=lambda t: tuple((v is None, str(v)) for v in t))
-    df = _local_df(spark, ordered, schema)
+    df = local_frame(spark, ordered, schema)
     # the rows are already driver-resident — carry them on the frame
     # so sub_closure/_bounded_names answer vocabulary-sized seeks with
     # ZERO Spark jobs instead of a collect each (r14, guide §5: the
@@ -278,7 +264,7 @@ def sub_closure(hierarchy: DataFrame, name: str, kind: str | None = None,
             {c for c, p in local if p == name}
             | ({name} if include_self else set())
         )
-        subs = _local_df(
+        subs = local_frame(
             clo.sparkSession,
             [(n,) for n in names],
             T.StructType(
@@ -291,7 +277,7 @@ def sub_closure(hierarchy: DataFrame, name: str, kind: str | None = None,
     if include_self:
         from pyspark.sql import types as T
 
-        self_row = _local_df(
+        self_row = local_frame(
             subs.sparkSession,
             [(name,)],
             T.StructType(

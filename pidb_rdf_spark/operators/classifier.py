@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pidb_rdf_spark.operators.hashing import md5_prefix_long
+from pidb_rdf_spark.session import local_frame
 
 __all__ = [
     "hashed_features",
@@ -183,12 +184,9 @@ def quality_classifier_score(
     weights = model["weights"]
     if len(weights) != D:
         raise ValueError("model weights length != n_features")
-    spark = df.sparkSession
-    # one explicit slice (r14): D weight rows are driver-built
-    wt = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(i, float(weights[i])) for i in range(D)], 1
-        ),
+    # D weight rows, driver-built
+    wt = local_frame(
+        df.sparkSession, [(i, float(weights[i])) for i in range(D)],
         "f long, w double",
     )
     feats = hashed_features(

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pidb_rdf_spark.operators.hashing import md5_prefix_long
+from pidb_rdf_spark.session import local_frame
 
 _UNIT_DIV = float(1 << 52)
 
@@ -121,10 +122,9 @@ def mix_sources(
     # (int source ids are legal — a hardcoded string schema would
     # crash createDataFrame and mistype the equi-join)
     stype = docs.schema[source_col].dataType.simpleString()
-    rate_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(s, int(r // 1), r - int(r // 1)) for s, _a, _t, r in rates], 1
-        ),
+    rate_df = local_frame(
+        spark,
+        [(s, int(r // 1), r - int(r // 1)) for s, _a, _t, r in rates],
         f"{source_col} {stype}, __nfull int, __frac double",
     )
     return (

@@ -23,6 +23,8 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pidb_rdf_spark.session import local_frame
+
 
 def profile_table(
     df: DataFrame,
@@ -65,9 +67,7 @@ def profile_table(
             T.StructField("n_distinct", T.LongType(), False),
         ]
     )
-    return df.sparkSession.createDataFrame(
-        df.sparkSession.sparkContext.parallelize(out, 1), schema=schema
-    )
+    return local_frame(df.sparkSession, out, schema)
 
 
 def profile_diff(
@@ -234,9 +234,7 @@ def check_constraints(df: DataFrame, rules: list[dict]) -> DataFrame:
             )
             n = df.filter(F.col(r["col"]).isNotNull()).count()
             outs.append(("fk", r["col"], orphan, orphan / n if n else 0.0))
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(outs, 1), out_schema
-    )
+    return local_frame(spark, outs, out_schema)
 
 
 def skew_report(

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pidb_rdf_spark.session import local_frame
+
 
 def quantize_embeddings(
     df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
@@ -230,10 +232,9 @@ def pq_topk(
             lut.extend(
                 (qid, s, int(c), float(p)) for c, p in enumerate(parts)
             )
-    spark = codes.sparkSession
-    # one explicit slice: the LUT is |q|·m·k rows (driver-built)
-    lut_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(lut, 1),
+    # the LUT is |q|·m·k rows (driver-built)
+    lut_df = local_frame(
+        codes.sparkSession, lut,
         f"{query_id_col} long, subspace long, code long, __part double",
     )
     scored = (
@@ -309,15 +310,10 @@ def ivfpq_topk(
         for s, Csub in enumerate(Cs):
             for c, p in enumerate(Csub @ q[s * sub:(s + 1) * sub]):
                 lut.append((qid, s, int(c), float(p)))
-    # one explicit slice: these driver-built lists are query-sized
-    # (|q|·nprobe and |q|·m·k rows); default createDataFrame slicing
-    # would spread them over default.parallelism near-empty partitions
-    probes_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(probes, 1),
-        f"{query_id_col} long, cluster int",
-    )
-    lut_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(lut, 1),
+    # driver-built, query-sized lists (|q|·nprobe and |q|·m·k rows)
+    probes_df = local_frame(spark, probes, f"{query_id_col} long, cluster int")
+    lut_df = local_frame(
+        spark, lut,
         f"{query_id_col} long, subspace long, code long, __part double",
     )
     cand = assigned.join(F.broadcast(probes_df), on="cluster").select(

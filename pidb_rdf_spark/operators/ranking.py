@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pidb_rdf_spark.operators.text import tokens
+from pidb_rdf_spark.session import local_frame
 
 
 def _term_counts(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -89,15 +90,7 @@ def bm25_search(
     q_terms = [t for t in query.lower().split(" ") if t]
     if not q_terms:
         raise ValueError("empty query")
-    # one explicit slice: a query-terms list is a handful of rows;
-    # default createDataFrame slicing spreads it over
-    # default.parallelism near-empty partitions (r14, guide §2.2)
-    qdf = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [(t,) for t in sorted(set(q_terms))], 1
-        ),
-        "term string",
-    )
+    qdf = local_frame(spark, [(t,) for t in sorted(set(q_terms))], "term string")
 
     # corpus size folded in as a broadcast 1-row aggregate (r13) —
     # same rationale and bit-identical arithmetic as tfidf_top_terms;

@@ -1217,13 +1217,7 @@ class SparqlCompiler:
             flag = f"__isbnode_{v}"
             if flag in df.columns:
                 continue
-            lookup = self.g.nodes.select(
-                F.col("id").alias(f"__bid_{v}"),
-                F.col("uri").startswith("_:").alias(flag),
-            )
-            df = df.join(
-                lookup, df[v] == lookup[f"__bid_{v}"], "left"
-            ).drop(f"__bid_{v}")
+            df = self.g.lookup(df, v, {flag: F.col("uri").startswith("_:")})
         return df
 
     def _bnode_test_vars(self, expr) -> set[str]:
@@ -1580,12 +1574,7 @@ class SparqlCompiler:
             if state.kinds.get(v) == "node" and v in df.columns
         ]
         for v in node_vars:
-            lookup = self.g.nodes.select(
-                F.col("id").alias(f"__id_{v}"), F.col("uri").alias(v)
-            )
-            df = df.withColumnRenamed(v, f"__id_{v}").join(
-                lookup, on=f"__id_{v}", how="left"
-            ).drop(f"__id_{v}")
+            df = self.g.lookup(df, v, {v: F.col("uri")})
         return df
 
     def _node_prop_dtype(self, name: str):

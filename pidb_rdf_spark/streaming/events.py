@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pidb_rdf_spark.session import local_frame
+
 
 def windowed_event_counts(
     events: DataFrame,
@@ -647,14 +649,12 @@ def funnel(
         cur = nxt
         counts.append((str(i), s, nxt.count()))
     base = counts[0][2]
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(
-            [
-                (int(idx), step, int(n), (n / base) if base else 0.0)
-                for idx, step, n in counts
-            ],
-            1,
-        ),
+    return local_frame(
+        spark,
+        [
+            (int(idx), step, int(n), (n / base) if base else 0.0)
+            for idx, step, n in counts
+        ],
         "step_idx int, step string, n_converted long, conversion double",
     )
 

@@ -1,5 +1,6 @@
 """Graph DSL (Gremlin-role) traversal tests vs DuckDB oracle."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from pidb_rdf_spark.dsl import P, traversal
@@ -1042,3 +1043,69 @@ def test_inject_edge_frontier_guard(graph):
     assert n == 2
     with _pytest.raises(ValueError, match="NODE frontier"):
         traversal(graph).V().inject(1, edge_ids=True)
+
+
+@pytest.fixture(scope="module")
+def dangling(spark):
+    """Nodes 1, 2, 3 and three weighted edges, one of them (103)
+    ending at node 99, which has no node row."""
+    from pidb_rdf_spark.graph import PropertyGraph
+
+    nodes = spark.createDataFrame(
+        [(1, "urn:1", ["P"], {"name": "a"}),
+         (2, "urn:2", ["P"], {"name": "b"}),
+         (3, "urn:3", ["P"], {"name": "c"})],
+        "id long, uri string, labels array<string>,"
+        " props map<string,string>",
+    )
+    edges = spark.createDataFrame(
+        [(101, 1, 2, "KNOWS", {"w": "5"}),
+         (102, 2, 3, "KNOWS", {"w": "1"}),
+         (103, 1, 99, "LINK", {"w": "3"})],
+        "id long, src long, dst long, predicate string,"
+        " props map<string,string>",
+    )
+    return traversal(PropertyGraph(spark=spark, nodes=nodes, edges=edges))
+
+
+def _ids(t):
+    return [r["id"] for r in t.id_().collect()]
+
+
+def _groups(df):
+    return {r["key"]: r[1] for r in df.collect()}
+
+
+@pytest.mark.parametrize(
+    "step, want",
+    [
+        # edge frontiers read edge properties (the edge table's own
+        # column first, then the props map), never the node table
+        (lambda s: _ids(s.E().order_by("w")), [102, 103, 101]),
+        (lambda s: _ids(s.E().order_by("w", asc=False)), [101, 103, 102]),
+        (lambda s: _groups(s.E().group_count("w")),
+         {"5": 1, "1": 1, "3": 1}),
+        (lambda s: _groups(s.E().group_count("predicate")),
+         {"KNOWS": 2, "LINK": 1}),
+        (lambda s: _groups(s.E().group_values("predicate", "w")),
+         {"KNOWS": ["1", "5"], "LINK": ["3"]}),
+        (lambda s: _groups(s.E().group("predicate", value="w")),
+         {"KNOWS": ["1", "5"], "LINK": ["3"]}),
+        (lambda s: _ids(s.E().has_label("LINK")), [103]),
+        # order_by keeps a traverser whose element has no row; its
+        # missing value sorts last
+        (lambda s: _ids(s.V(1).out().order_by("name")), [2, 99]),
+        (lambda s: _ids(s.V(1).out().order_by("name", asc=False)), [2, 99]),
+    ],
+    ids=["E_order_by", "E_order_by_desc", "E_group_count", "E_group_count_column",
+         "E_group_values", "E_group", "E_has_label", "dangling_order_by",
+         "dangling_order_by_desc"],
+)
+def test_element_reads_on_edge_frontiers_and_dangling_ends(dangling, step, want):
+    assert step(dangling) == want
+
+
+def test_uri_is_node_only(dangling):
+    with pytest.raises(ValueError, match="edges have no uri"):
+        dangling.E().uri()
+    assert sorted(r["uri"] for r in dangling.V(1).out().uri().collect()) == ["urn:2"]

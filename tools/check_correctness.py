@@ -3,11 +3,17 @@
 given scale factor, compare row-count + (name-sorted-column,
 order-insensitive) values.
 
+Both sides stream: Spark rows through ``toLocalIterator()``, DuckDB
+rows through ``fetchmany``, each folded into a multiset digest
+(:func:`digest_rows`), so memory stays bounded by one partition. Only
+a mismatch collects both results whole, for the row-level printout.
+
 Usage: python tools/check_correctness.py [sf_dir] [name ...]
 """
 
 from __future__ import annotations
 
+import hashlib
 import math
 import sys
 
@@ -51,6 +57,27 @@ def norm_cell(v):
     return str(v)
 
 
+def digest_rows(cols, rows):
+    """``(sorted column names, row count, digest)`` of a result, read
+    in one pass over ``rows``. The digest is the sum mod 2^128 of a
+    128-bit blake2b of each normalized row (cells in name-sorted column
+    order): row order does not change it, row multiplicity does."""
+    order = sorted(range(len(cols)), key=lambda i: cols[i])
+    n = total = 0
+    for r in rows:
+        cells = repr(tuple(norm_cell(r[i]) for i in order)).encode()
+        h = hashlib.blake2b(cells, digest_size=16).digest()
+        total = (total + int.from_bytes(h, "big")) % (1 << 128)
+        n += 1
+    return sorted(cols), n, total
+
+
+def fetch_iter(cur, size: int = 10_000):
+    """Stream a DuckDB cursor's rows ``size`` at a time."""
+    while batch := cur.fetchmany(size):
+        yield from batch
+
+
 def norm_rows(cols, rows):
     order = sorted(range(len(cols)), key=lambda i: cols[i])
     out = [tuple(norm_cell(r[i]) for i in order) for r in rows]
@@ -84,24 +111,27 @@ def main():
             )
             failures.append(name)
             continue
-        srows = [tuple(r) for r in sdf.collect()]
-        scols = sdf.columns
+        sc, sn, sd = digest_rows(sdf.columns, sdf.toLocalIterator(True))
         if name not in oracles:
-            print(f"  {name:30s} rows={len(srows)} (no oracle — rows-only check)")
+            print(f"  {name:30s} rows={sn} (no oracle — rows-only check)")
             continue
         ocur = con.execute(oracles[name])
-        ocols = [d[0] for d in ocur.description]
-        orows = ocur.fetchall()
-        sc, sr = norm_rows(scols, srows)
-        oc, orr = norm_rows(ocols, orows)
-        ok = sc == oc and sr == orr
+        oc, on, od = digest_rows(
+            [d[0] for d in ocur.description], fetch_iter(ocur)
+        )
+        ok = (sc, sn, sd) == (oc, on, od)
         status = "OK " if ok else "FAIL"
-        print(f"  {name:30s} {status} rows={len(srows)}/{len(orows)} cols={sc}")
+        print(f"  {name:30s} {status} rows={sn}/{on} cols={sc}")
         if not ok:
             failures.append(name)
             if sc != oc:
                 print(f"    columns: spark={sc} oracle={oc}")
             else:
+                sr = norm_rows(sdf.columns, sdf.collect())[1]
+                ocur = con.execute(oracles[name])
+                orr = norm_rows(
+                    [d[0] for d in ocur.description], ocur.fetchall()
+                )[1]
                 sset, oset = set(sr), set(orr)
                 for d in list(sset - oset)[:3]:
                     print(f"    spark-only: {d}")
