@@ -50,8 +50,8 @@ def _reasoner_hierarchy(spark: SparkSession, sf_dir: str):
 
     key = (id(spark), sf_dir)
     if key not in _HIER_CACHE:
-        # local_frame keeps the literal rows in one slice: the union
-        # below inherits every slice of its inputs
+        # local_frame makes the literal rows a JVM LocalRelation: no
+        # query over the union below starts a Python worker for them
         labels = local_frame(
             spark,
             [

@@ -122,7 +122,7 @@ def _require_uri_free(g: PropertyGraph, uri: str) -> None:
     same uri carries the identical xxhash64 id and every later
     MATCH/MERGE on that id fans out. Raise and point at MERGE
     (never-silently-mis-execute doctrine)."""
-    if g.nodes.filter(F.col("uri") == uri).limit(1).count() > 0:
+    if not g.node_by_uri(uri).isEmpty():
         raise CypherWriteError(
             f"CREATE: a node with uri {uri!r} already exists — CREATE "
             "never upserts; use MERGE {uri: ...} for idempotent "
@@ -218,9 +218,7 @@ def _apply_create(
                 # matched rows merge nothing (Neo4j cardinality)
                 if c.cur is not None and c.cur.limit(1).isEmpty():
                     continue
-                exists = (
-                    g.nodes.filter(F.col("uri") == uri).limit(1).count() > 0
-                )
+                exists = not g.node_by_uri(uri).isEmpty()
                 if not exists:
                     g = M.add_vertices(g, [_node_row(n, uri, c.params)])
                 items = on_match if exists else on_create
@@ -280,7 +278,7 @@ def _apply_create(
                     # uri would append a second node row with the same
                     # xxhash64 id (add_vertices just unions), fanning
                     # out every later join on that id — raise instead
-                    # of silently corrupting (ADVICE r11)
+                    # of silently corrupting
                     _require_uri_free(g, uri)
                 else:
                     uri = f"urn:cypher:{uuid.uuid4().hex}"
@@ -401,7 +399,7 @@ def _apply_create(
                 # an explicit literal uri IS the node's identity in the
                 # chain branch too — CREATE (a {uri:'x'})-[:R]->(b) used
                 # to silently discard it for a random urn, so a later
-                # MERGE {uri:'x'} duplicated the node (ADVICE r11)
+                # MERGE {uri:'x'} duplicated the node
                 lits = _literal_props(n, c.params)
                 if merge:
                     uri = _content_uri(n, c.params)
@@ -410,9 +408,7 @@ def _apply_create(
                     _require_uri_free(g, uri)
                 else:
                     uri = f"urn:cypher:{uuid.uuid4().hex}"
-                if not merge or (
-                    g.nodes.filter(F.col("uri") == uri).limit(1).count() == 0
-                ):
+                if not merge or g.node_by_uri(uri).isEmpty():
                     g = M.add_vertices(g, [_node_row(n, uri, c.params)])
                 if n.var is not None:
                     var_uris[n.var] = uri

@@ -43,6 +43,7 @@ class Traversal:
         pristine: bool = False,
         pred: Column | None = None,
         se: dict | None = None,
+        labels: frozenset | None = None,
     ):
         self.g = graph
         self.df = df
@@ -60,21 +61,29 @@ class Traversal:
         # the flag via _with.
         self.pristine = pristine
         self._pred = pred
+        # labels one of which every frontier node carries (None:
+        # unknown). A pristine has_label sets them, an out/in/both hop
+        # takes them from the graph summary, every other step resets
+        # them; _read passes them to lookup, which prunes the node
+        # table to the branches they can live in.
+        self.labels = labels
 
     def _fuse(self, cond: Column) -> "Traversal":
         """Fold one more has-condition into a pristine frontier."""
         pred = cond if self._pred is None else (self._pred & cond)
         df = self.g.nodes.filter(pred).select(F.col("id").alias(CUR))
         return Traversal(self.g, df, False, pristine=True, pred=pred,
-                         se=self._se)
+                         se=self._se, labels=self.labels)
 
     # ---- internal helpers ---------------------------------------------
 
-    def _with(self, df: DataFrame, on_edges: bool | None = None) -> "Traversal":
+    def _with(
+        self, df: DataFrame, on_edges: bool | None = None, labels=None
+    ) -> "Traversal":
         return Traversal(
             self.g, df,
             self.on_edges if on_edges is None else on_edges,
-            se=self._se,
+            se=self._se, labels=labels,
         )
 
     def _prop(self, key: str) -> Column:
@@ -106,7 +115,7 @@ class Traversal:
         leaves the sack unchanged, or projects NULL."""
         return self.g.lookup(
             df, CUR, {a: self._prop(k) for a, k in cols.items()},
-            edges=self.on_edges, how=how,
+            edges=self.on_edges, how=how, labels=self.labels,
         )
 
     def _pin(self) -> DataFrame:
@@ -128,12 +137,15 @@ class Traversal:
         edge label is its predicate (what :meth:`label` returns)."""
         if self.on_edges:
             return self.has("predicate", lambda c: c.isin(list(labels)))
-        return self.has(
+        t = self.has(
             "labels",
             lambda c: reduce(
                 Column.__or__, [F.array_contains(c, lab) for lab in labels]
             ),
         )
+        if self.pristine:
+            t.labels = frozenset(labels)
+        return t
 
     def has(self, key: str, value=None) -> "Traversal":
         """has(key) = property exists; has(key, value) = equality;
@@ -182,7 +194,7 @@ class Traversal:
         property (NULL under the typed-column/props-map read)."""
         return self.has(key, Column.isNull)
 
-    # ---- side effects / stream utilities (deep-tail steps, r12) --------
+    # ---- side effects / stream utilities (deep-tail steps) -------------
 
     def inject(self, *ids, edge_ids: bool = False) -> "Traversal":
         """TinkerPop ``inject()``, restricted to ELEMENT IDS (this
@@ -191,7 +203,7 @@ class Traversal:
         Labeled/as_() columns of existing rows fill NULL on the
         injected rows (they carry no history).
 
-        The id SPACE must match the frontier (ADVICE r12): node ids
+        The id SPACE must match the frontier: node ids
         on a node frontier, edge ids on an edge frontier (after
         ``outE()``/``inE()``/``bothE()``). Both are opaque longs, so a
         mix-up would not fail — downstream joins would just silently
@@ -276,7 +288,11 @@ class Traversal:
         )
         if "__path" in df.columns:
             df = df.withColumn("__path", F.array_append(F.col("__path"), F.col(CUR)))
-        return self._with(df, on_edges=to_edges)
+        summary = None if to_edges else self.g.summary
+        return self._with(
+            df, on_edges=to_edges,
+            labels=summary and summary.hop_labels(labels, direction),
+        )
 
     def out(self, *labels: str) -> "Traversal":
         return self._hop("out", labels, to_edges=False)
@@ -372,7 +388,7 @@ class Traversal:
         for i in range(max_iter):
             cur = body(cur)
             on_edges = cur.on_edges
-            # LAZY checkpoints (r13, same discipline as the walk
+            # LAZY checkpoints (same discipline as the walk
             # loops): lineage still truncates per round, but the
             # materialization rides the round's ONE driver action
             # (the isEmpty below) instead of two blocking jobs first.
@@ -848,7 +864,7 @@ class Traversal:
     def group(self, key, value) -> DataFrame:
         """TinkerPop ``group().by(key).by(values(value).fold())`` with
         the KEY side accepting either a property name or a
-        ``by(traversal)`` modulator (the r10-deferred long-tail form),
+        ``by(traversal)`` modulator (the long-tail form),
         e.g. group customers by their nation's name::
 
             t.group((lambda s: s.out("IN_NATION"), "first", "n_name"),

@@ -24,6 +24,7 @@ from __future__ import annotations
 import os
 import warnings
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -96,6 +97,52 @@ NODE_CORE = ["id", "uri", "labels", "props"]
 SIDECAR_COLS = {"__prop_types", "__meta"}
 
 
+@dataclass(frozen=True)
+class GraphSummary:
+    """Facts about a graph that hold by construction, so reading them
+    costs no job:
+
+    - ``ends``: predicate -> ``(src labels, dst labels)``. Every edge
+      of that predicate starts at a node carrying at least one of the
+      src labels and ends at one carrying at least one of the dst
+      labels (when that node exists). Its keys are every predicate of
+      the edge table.
+    - ``uri_prefix``: label -> prefix. Every node carrying the label
+      has a uri starting with the prefix.
+
+    A reader that knows the labels its ids can carry filters the node
+    table with ``array_contains(labels, L)``; on a graph whose node
+    table is a union of per-label frames with literal label arrays
+    (``graphify``), Catalyst folds that filter per branch and prunes
+    every branch it cannot hit."""
+
+    ends: dict
+    uri_prefix: dict
+
+    def hop_labels(self, predicates, direction: str) -> frozenset | None:
+        """Labels of the nodes an ``out``/``in``/``both`` hop over
+        edges with any of ``predicates`` (all when empty) reaches; None
+        when the summary does not cover one of the predicates."""
+        if any(p not in self.ends for p in predicates):
+            return None
+        sides = {"out": (1,), "in": (0,), "both": (0, 1)}[direction]
+        return frozenset().union(
+            *[self.ends[p][i] for p in (predicates or self.ends) for i in sides]
+        )
+
+    def without_prefixes(self, labels) -> GraphSummary:
+        return GraphSummary(
+            self.ends,
+            {k: v for k, v in self.uri_prefix.items() if k not in labels},
+        )
+
+
+def _has_any_label(labels) -> Column:
+    """The node carries one of ``labels``; NULL labels read false."""
+    hits = [F.array_contains("labels", lab) for lab in sorted(labels)]
+    return F.coalesce(reduce(Column.__or__, hits, F.lit(False)), F.lit(False))
+
+
 @dataclass
 class PropertyGraph:
     """A pair of DataFrames + small broadcastable side tables.
@@ -111,6 +158,9 @@ class PropertyGraph:
     namespaces: DataFrame | None = None
     # graph-wide key/value config, reference Neo4jGraphVariables.java:33-79
     variables: dict = field(default_factory=dict)
+    # facts true by construction (``graphify``); None when unknown.
+    # Mutations drop it unless they provably keep it (mutation._derive)
+    summary: GraphSummary | None = None
 
     # ---- scans (SURVEY §2.1 S1-S6) -------------------------------------
 
@@ -141,8 +191,16 @@ class PropertyGraph:
 
     def node_by_uri(self, uri: str) -> DataFrame:
         """Point lookup on the unique uri (reference ``:Resource(uri)``
-        index invariant, ``semantics/RDFImport.java:198-203``)."""
-        return self.nodes.filter(F.col("uri") == uri)
+        index invariant, ``semantics/RDFImport.java:198-203``). With a
+        summary, nodes carrying a label whose uri prefix ``uri`` lacks
+        are excluded up front, so no graphify branch is scanned for a
+        uri none of them can hold."""
+        out = self.nodes.filter(F.col("uri") == uri)
+        foreign = [
+            lab for lab, pre in (self.summary.uri_prefix if self.summary else {}).items()
+            if not uri.startswith(pre)
+        ]
+        return out.filter(~_has_any_label(foreign)) if foreign else out
 
     def lookup(
         self,
@@ -151,6 +209,7 @@ class PropertyGraph:
         cols: dict,
         edges: bool = False,
         how: str = "left",
+        labels=None,
     ) -> DataFrame:
         """Attach element columns to ``df`` by the element id held in
         ``id_col``: one hash join of ``df`` with ``(id, cols)`` of the
@@ -158,13 +217,18 @@ class PropertyGraph:
         output name to a Column over that table; an output name that
         ``df`` already has (``id_col`` included) is replaced in place,
         the others are appended. ``how`` is ``"left"`` (ids without an
-        element row read NULL) or ``"inner"`` (they drop). Every front
-        end's by-id read of node or edge columns goes through here, so
-        a pruned scan of the element table lands in one place."""
+        element row read NULL) or ``"inner"`` (they drop). ``labels``,
+        when given, are labels one of which every node id in ``id_col``
+        carries: the node table is filtered on them first, which prunes
+        the union branches no such node lives in. Every front end's
+        by-id read of node or edge columns goes through here."""
         def ref(name):  # names may hold dots (Cypher's `n.name`)
             return F.col("`" + name.replace("`", "``") + "`")
 
-        side = (self.edges if edges else self.nodes).select(
+        table = self.edges if edges else self.nodes
+        if labels is not None and not edges:
+            table = table.filter(_has_any_label(labels))
+        side = table.select(
             F.col("id").alias("__lookup_id"),
             *[c.alias(f"__lookup_{i}") for i, c in enumerate(cols.values())],
         )
@@ -244,6 +308,19 @@ class PropertyGraph:
                 )
             }
             self.__dict__["_edge_preds"] = cached
+        return cached
+
+    def namespace_map(self) -> dict:
+        """``{namespace: prefix}`` of the namespace registry (collected
+        once, cached; empty without one). Rows are kept as stored,
+        including the importer's ``("", "")`` placeholder of a registry
+        with no namespace: IRI serializers skip the empty namespace."""
+        cached = self.__dict__.get("_ns_map")
+        if cached is None:
+            cached = {} if self.namespaces is None else {
+                r["namespace"]: r["prefix"] for r in self.namespaces.collect()
+            }
+            self.__dict__["_ns_map"] = cached
         return cached
 
     def node_prop(self, name: str) -> Column:
@@ -349,12 +426,13 @@ def read_tables(spark: SparkSession, sf_dir: str, names=None) -> dict[str, DataF
 
 
 def _nodeframe(
-    df: DataFrame, table: str, pk: Column, label: str, prop_cols: list[str]
+    df: DataFrame, table: str, pk: Column, prop_cols: list[str]
 ) -> DataFrame:
-    """One table → F2-shaped node rows with typed hot columns kept."""
+    """One table → F2-shaped node rows with typed hot columns kept:
+    label ``table.capitalize()``, uri ``urn:{table}:{pk}``."""
     id_col = (F.lit(ID_BANDS[table]) + pk.cast("long")).alias("id")
     uri = F.concat(F.lit(f"urn:{table}:"), pk.cast("string")).alias("uri")
-    labels = F.array(F.lit(label[:1].upper() + label[1:])).alias("labels")
+    labels = F.array(F.lit(table.capitalize())).alias("labels")
     props = F.map_from_arrays(
         F.array(*[F.lit(c) for c in prop_cols]),
         F.array(*[F.col(c).cast("string") for c in prop_cols]),
@@ -381,7 +459,9 @@ def graphify(
 
     All node frames keep their typed hot columns; the union pads with
     NULLs (columnar storage makes the wide-but-sparse layout cheap —
-    this is the classic property-table RDF layout).
+    this is the classic property-table RDF layout). The graph's
+    ``summary`` records each predicate's end labels and each label's
+    uri prefix, read off the mapping above with no job.
     """
     t = read_tables(
         spark,
@@ -390,23 +470,23 @@ def graphify(
     )
 
     frames = [
-        _nodeframe(t["region"], "region", F.col("r_regionkey"), "Region", ["r_regionkey", "r_name"]),
-        _nodeframe(t["nation"], "nation", F.col("n_nationkey"), "Nation", ["n_nationkey", "n_name", "n_regionkey"]),
+        _nodeframe(t["region"], "region", F.col("r_regionkey"), ["r_regionkey", "r_name"]),
+        _nodeframe(t["nation"], "nation", F.col("n_nationkey"), ["n_nationkey", "n_name", "n_regionkey"]),
         _nodeframe(
-            t["customer"], "customer", F.col("c_custkey"), "Customer",
+            t["customer"], "customer", F.col("c_custkey"),
             ["c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"],
         ),
         _nodeframe(
-            t["supplier"], "supplier", F.col("s_suppkey"), "Supplier",
+            t["supplier"], "supplier", F.col("s_suppkey"),
             ["s_suppkey", "s_name", "s_nationkey", "s_acctbal"],
         ),
         _nodeframe(
-            t["part"], "part", F.col("p_partkey"), "Part",
+            t["part"], "part", F.col("p_partkey"),
             ["p_partkey", "p_name", "p_brand", "p_type", "p_size", "p_retailprice"],
         ),
         _nodeframe(
             t["orders"].withColumn("o_orderdate", F.col("o_orderdate").cast("string")),
-            "orders", F.col("o_orderkey"), "Orders",
+            "orders", F.col("o_orderkey"),
             ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate", "o_orderpriority"],
         ),
     ]
@@ -423,11 +503,13 @@ def graphify(
         F.col("_metadata.row_index").alias("__row"),
     )
     li_pk = F.xxhash64(F.col("__file"), F.col("__row"))
+    tables = ["region", "nation", "customer", "supplier", "part", "orders"]
     if with_lineitem_nodes:
+        tables.append("lineitem")
         frames.append(
             _nodeframe(
                 li.withColumn("l_shipdate", F.col("l_shipdate").cast("string")),
-                "lineitem", li_pk, "Lineitem",
+                "lineitem", li_pk,
                 ["l_orderkey", "l_partkey", "l_suppkey", "l_linenumber", "l_quantity",
                  "l_extendedprice", "l_discount", "l_tax", "l_returnflag", "l_linestatus", "l_shipdate"],
             )
@@ -437,48 +519,47 @@ def graphify(
     for fr in frames[1:]:
         nodes = nodes.unionByName(fr, allowMissingColumns=True)
 
-    def edge(df, pred, eid, s_band, s_key, d_band, d_key, props=None):
-        prop_col = (
-            F.map_from_arrays(
-                F.array(*[F.lit(k) for k in props]),
-                F.array(*[F.col(k).cast("string") for k in props]),
-            )
-            if props
-            else F.map_from_arrays(
-                F.array().cast("array<string>"), F.array().cast("array<string>")
-            )
-        )
+    ends: dict = {}
+
+    def edge(df, pred, eid, s_table, s_key, d_table, d_key):
+        src, dst = ends.get(pred, (frozenset(), frozenset()))
+        ends[pred] = (src | {s_table.capitalize()}, dst | {d_table.capitalize()})
         return df.select(
             eid.cast("long").alias("id"),
-            (F.lit(s_band) + s_key.cast("long")).alias("src"),
-            (F.lit(d_band) + d_key.cast("long")).alias("dst"),
+            (F.lit(ID_BANDS[s_table]) + s_key.cast("long")).alias("src"),
+            (F.lit(ID_BANDS[d_table]) + d_key.cast("long")).alias("dst"),
             F.lit(pred).alias("predicate"),
-            prop_col.alias("props"),
+            F.map_from_arrays(
+                F.array().cast("array<string>"), F.array().cast("array<string>")
+            ).alias("props"),
         )
 
     # Edge-id bands are deterministic functions of the source row key.
     B = 1_000_000_000
     edges_frames = [
         edge(t["customer"], "IN_NATION", F.lit(1 * B) + F.col("c_custkey"),
-             ID_BANDS["customer"], F.col("c_custkey"), ID_BANDS["nation"], F.col("c_nationkey")),
+             "customer", F.col("c_custkey"), "nation", F.col("c_nationkey")),
         edge(t["nation"], "IN_REGION", F.lit(2 * B) + F.col("n_nationkey"),
-             ID_BANDS["nation"], F.col("n_nationkey"), ID_BANDS["region"], F.col("n_regionkey")),
+             "nation", F.col("n_nationkey"), "region", F.col("n_regionkey")),
         edge(t["supplier"], "IN_NATION", F.lit(3 * B) + F.col("s_suppkey"),
-             ID_BANDS["supplier"], F.col("s_suppkey"), ID_BANDS["nation"], F.col("s_nationkey")),
+             "supplier", F.col("s_suppkey"), "nation", F.col("s_nationkey")),
         edge(t["orders"], "PLACED_BY", F.lit(4 * B) + F.col("o_orderkey"),
-             ID_BANDS["orders"], F.col("o_orderkey"), ID_BANDS["customer"], F.col("o_custkey")),
+             "orders", F.col("o_orderkey"), "customer", F.col("o_custkey")),
         # hash-based edge ids for lineitem edges: adding a numeric band
         # to a full-range hash would overflow; hashing in the predicate
         # name keeps them unique across the three edge types
         edge(li, "PART_OF", F.xxhash64(F.lit("PART_OF"), F.col("__file"), F.col("__row")),
-             ID_BANDS["lineitem"], li_pk, ID_BANDS["orders"], F.col("l_orderkey")),
+             "lineitem", li_pk, "orders", F.col("l_orderkey")),
         edge(li, "OF_PART", F.xxhash64(F.lit("OF_PART"), F.col("__file"), F.col("__row")),
-             ID_BANDS["lineitem"], li_pk, ID_BANDS["part"], F.col("l_partkey")),
+             "lineitem", li_pk, "part", F.col("l_partkey")),
         edge(li, "FROM_SUPPLIER", F.xxhash64(F.lit("FROM_SUPPLIER"), F.col("__file"), F.col("__row")),
-             ID_BANDS["lineitem"], li_pk, ID_BANDS["supplier"], F.col("l_suppkey")),
+             "lineitem", li_pk, "supplier", F.col("l_suppkey")),
     ]
     edges = edges_frames[0]
     for fr in edges_frames[1:]:
         edges = edges.unionByName(fr)
 
-    return PropertyGraph(spark=spark, nodes=nodes, edges=edges)
+    summary = GraphSummary(
+        ends, {t.capitalize(): f"urn:{t}:" for t in tables}
+    )
+    return PropertyGraph(spark=spark, nodes=nodes, edges=edges, summary=summary)

@@ -31,7 +31,36 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pidb_rdf_spark.graph import PropertyGraph
+from pidb_rdf_spark.graph import NODE_CORE, SIDECAR_COLS, PropertyGraph
+from pidb_rdf_spark.session import local_frame
+
+
+def _derive(
+    graph: PropertyGraph, nodes: DataFrame | None = None,
+    edges: DataFrame | None = None, summary=None,
+) -> PropertyGraph:
+    """``graph`` after a mutation: ``nodes``/``edges`` replace its
+    tables when given; spark, namespaces and variables carry over.
+    The summary is dropped unless the caller passes the one it
+    provably keeps: property writes and removals (of any key but a
+    core column) and element removals keep ``graph.summary``, and a
+    vertex insert keeps it minus the uri prefix of each label a new
+    row carries without that prefix. Every other mutation (edge
+    inserts, label changes) drops it."""
+    return PropertyGraph(
+        spark=graph.spark,
+        nodes=graph.nodes if nodes is None else nodes,
+        edges=graph.edges if edges is None else edges,
+        namespaces=graph.namespaces,
+        variables=graph.variables,
+        summary=summary,
+    )
+
+
+def _kept(graph: PropertyGraph, key: str):
+    """The summary a write of property ``key`` keeps: all of it,
+    unless the key is a core column (``uri``, ``labels``, ...)."""
+    return None if key in NODE_CORE else graph.summary
 
 
 def _empty_props():
@@ -62,18 +91,22 @@ def add_vertices(graph: PropertyGraph, rows: list[dict]) -> PropertyGraph:
     "props": {...}}``. Ids are ``xxhash64(uri)`` — deterministic and
     executor-computable, no id-assignment coordination (the reference
     's store assigns ids centrally, ``Neo4jGraph.java:153-154``)."""
-    spark = graph.spark
     data = [
         (r["uri"], r.get("labels", []), {k: str(v) for k, v in r.get("props", {}).items()})
         for r in rows
     ]
-    new = spark.createDataFrame(
-        data, "uri string, labels array<string>, props map<string,string>"
+    new = local_frame(
+        graph.spark, data, "uri string, labels array<string>, props map<string,string>"
     ).select(F.xxhash64("uri").alias("id"), "uri", "labels", "props")
-    nodes = graph.nodes.unionByName(new, allowMissingColumns=True)
-    return PropertyGraph(
-        spark=spark, nodes=nodes, edges=graph.edges,
-        namespaces=graph.namespaces, variables=graph.variables,
+    summary = graph.summary
+    if summary is not None:
+        summary = summary.without_prefixes({
+            lab for uri, labels, _ in data for lab in labels or ()
+            if not (uri or "").startswith(summary.uri_prefix.get(lab, ""))
+        })
+    return _derive(
+        graph, nodes=graph.nodes.unionByName(new, allowMissingColumns=True),
+        summary=summary,
     )
 
 
@@ -130,12 +163,10 @@ def add_vertices_frame(
     # re-scans of the unioned plan (task retry, AQE replan, the same
     # frame on both sides of a self-join) see identical ids
     new = new.localCheckpoint(eager=True)
-    return PropertyGraph(
-        spark=graph.spark,
-        nodes=graph.nodes.unionByName(new, allowMissingColumns=True),
-        edges=graph.edges,
-        namespaces=graph.namespaces,
-        variables=graph.variables,
+    # every new row may carry a uri outside its labels' prefixes
+    return _derive(
+        graph, nodes=graph.nodes.unionByName(new, allowMissingColumns=True),
+        summary=graph.summary and graph.summary.without_prefixes(labels or ()),
     )
 
 
@@ -152,7 +183,6 @@ def add_edges(
     edge attaches correctly even on graphs whose ids are NOT
     ``xxhash64(uri)``, e.g. graphify's banded ids), falling back to
     ``xxhash64(uri)`` only for endpoints not yet in the graph."""
-    spark = graph.spark
     data = [
         (
             r["src_uri"],
@@ -162,8 +192,9 @@ def add_edges(
         )
         for r in rows
     ]
-    raw = spark.createDataFrame(
-        data, "src_uri string, predicate string, dst_uri string, props map<string,string>"
+    raw = local_frame(
+        graph.spark, data,
+        "src_uri string, predicate string, dst_uri string, props map<string,string>",
     )
     src_map = graph.nodes.select(
         F.col("uri").alias("src_uri"), F.col("id").alias("__src_id")
@@ -201,11 +232,7 @@ def add_edges(
             )
             .select(*[c for c in graph.edges.columns])
         )
-    edges = graph.edges.unionByName(new)
-    return PropertyGraph(
-        spark=spark, nodes=graph.nodes, edges=edges,
-        namespaces=graph.namespaces, variables=graph.variables,
-    )
+    return _derive(graph, edges=graph.edges.unionByName(new))
 
 
 def add_edges_frame(
@@ -259,6 +286,7 @@ def add_edges_frame(
         base = (
             pairs.select(F.col(s).alias("src"), F.col(d).alias("dst"))
             .dropDuplicates()
+            .withColumn("__pm", pmap)
         )
     else:
         eid = F.xxhash64(
@@ -269,22 +297,13 @@ def add_edges_frame(
         base = pairs.select(
             F.col(s).alias("src"), F.col(d).alias("dst"), pmap.alias("__pm")
         )
-    if dedup:
-        new = base.select(
-            eid.alias("id"),
-            "src",
-            "dst",
-            F.lit(predicate).alias("predicate"),
-            pmap.alias("props"),
-        )
-    else:
-        new = base.select(
-            eid.alias("id"),
-            "src",
-            "dst",
-            F.lit(predicate).alias("predicate"),
-            F.col("__pm").alias("props"),
-        )
+    new = base.select(
+        eid.alias("id"),
+        "src",
+        "dst",
+        F.lit(predicate).alias("predicate"),
+        F.col("__pm").alias("props"),
+    )
     if dedup:
         new = new.join(
             graph.edges.select("src", "predicate", "dst"),
@@ -296,13 +315,7 @@ def add_edges_frame(
         # re-scans of the unioned plan see identical edge ids (the
         # relationship-uniqueness filter self-joins this frame)
         new = new.localCheckpoint(eager=True)
-    return PropertyGraph(
-        spark=graph.spark,
-        nodes=graph.nodes,
-        edges=graph.edges.unionByName(new),
-        namespaces=graph.namespaces,
-        variables=graph.variables,
-    )
+    return _derive(graph, edges=graph.edges.unionByName(new))
 
 
 # ---------------------------------------------------------------------------
@@ -334,10 +347,7 @@ def set_vertex_property(
         nodes = nodes.withColumn(
             key, F.when(where, F.lit(value).cast(dtype)).otherwise(F.col(key))
         )
-    return PropertyGraph(
-        spark=graph.spark, nodes=nodes.drop(*tmp), edges=graph.edges,
-        namespaces=graph.namespaces, variables=graph.variables,
-    )
+    return _derive(graph, nodes=nodes.drop(*tmp), summary=_kept(graph, key))
 
 
 def remove_vertex_property(graph: PropertyGraph, where, key: str) -> PropertyGraph:
@@ -355,10 +365,7 @@ def remove_vertex_property(graph: PropertyGraph, where, key: str) -> PropertyGra
         nodes = nodes.withColumn(
             key, F.when(where, F.lit(None).cast(dtype)).otherwise(F.col(key))
         )
-    return PropertyGraph(
-        spark=graph.spark, nodes=nodes.drop(*tmp), edges=graph.edges,
-        namespaces=graph.namespaces, variables=graph.variables,
-    )
+    return _derive(graph, nodes=nodes.drop(*tmp), summary=_kept(graph, key))
 
 
 def replace_vertex_properties(
@@ -369,8 +376,6 @@ def replace_vertex_properties(
     map is rebuilt from the dict and every typed hot column not named
     in it nulls out (``SET n = {}`` clears everything). One
     column-rewrite pass, no shuffle."""
-    from pidb_rdf_spark.graph import NODE_CORE, SIDECAR_COLS
-
     base, where, tmp = _resolve_where(graph.nodes, where)
     if props:
         pairs: list = []
@@ -394,10 +399,7 @@ def replace_vertex_properties(
         nodes = nodes.withColumn(
             col, F.when(where, val).otherwise(F.col(col))
         )
-    return PropertyGraph(
-        spark=graph.spark, nodes=nodes.drop(*tmp), edges=graph.edges,
-        namespaces=graph.namespaces, variables=graph.variables,
-    )
+    return _derive(graph, nodes=nodes.drop(*tmp), summary=graph.summary)
 
 
 def replace_edge_properties(
@@ -416,10 +418,7 @@ def replace_edge_properties(
     edges = base.withColumn(
         "props", F.when(where, new_map).otherwise(F.col("props"))
     )
-    return PropertyGraph(
-        spark=graph.spark, nodes=graph.nodes, edges=edges.drop(*tmp),
-        namespaces=graph.namespaces, variables=graph.variables,
-    )
+    return _derive(graph, edges=edges.drop(*tmp), summary=graph.summary)
 
 
 def set_edge_property(graph: PropertyGraph, where, key: str, value) -> PropertyGraph:
@@ -435,10 +434,7 @@ def set_edge_property(graph: PropertyGraph, where, key: str, value) -> PropertyG
             ),
         ).otherwise(F.col("props")),
     )
-    return PropertyGraph(
-        spark=graph.spark, nodes=graph.nodes, edges=edges.drop(*tmp),
-        namespaces=graph.namespaces, variables=graph.variables,
-    )
+    return _derive(graph, edges=edges.drop(*tmp), summary=graph.summary)
 
 
 def remove_edge_property(graph: PropertyGraph, where, key: str) -> PropertyGraph:
@@ -451,10 +447,7 @@ def remove_edge_property(graph: PropertyGraph, where, key: str) -> PropertyGraph
             where, F.map_filter(F.col("props"), lambda k, _: k != key)
         ).otherwise(F.col("props")),
     )
-    return PropertyGraph(
-        spark=graph.spark, nodes=graph.nodes, edges=edges.drop(*tmp),
-        namespaces=graph.namespaces, variables=graph.variables,
-    )
+    return _derive(graph, edges=edges.drop(*tmp), summary=graph.summary)
 
 
 # ---------------------------------------------------------------------------
@@ -467,9 +460,8 @@ def remove_vertices(graph: PropertyGraph, ids: DataFrame | list) -> PropertyGrap
     them (reference ``Vertex.remove`` detaches relationships first,
     ``NoMultiNoMetaNeo4jTrait.java:71-84``). Two left-anti joins; the
     id set is broadcast when small."""
-    spark = graph.spark
     if isinstance(ids, list):
-        ids = spark.createDataFrame([(int(i),) for i in ids], "id long")
+        ids = local_frame(graph.spark, [(int(i),) for i in ids], "id long")
     key = "id" if "id" in ids.columns else ids.columns[0]
     ids = ids.select(F.col(key).alias("id"))
     nodes = graph.nodes.join(ids, on="id", how="leftanti")
@@ -480,25 +472,18 @@ def remove_vertices(graph: PropertyGraph, ids: DataFrame | list) -> PropertyGrap
         .join(ids.withColumnRenamed("id", "dst"), on="dst", how="leftanti")
         .select(*graph.edges.columns)
     )
-    return PropertyGraph(
-        spark=spark, nodes=nodes, edges=edges,
-        namespaces=graph.namespaces, variables=graph.variables,
-    )
+    return _derive(graph, nodes=nodes, edges=edges, summary=graph.summary)
 
 
 def remove_edges(graph: PropertyGraph, ids: DataFrame | list) -> PropertyGraph:
     """M6: delete edges by id (``Neo4jEdge.java:65-77``)."""
-    spark = graph.spark
     if isinstance(ids, list):
-        ids = spark.createDataFrame([(int(i),) for i in ids], "id long")
+        ids = local_frame(graph.spark, [(int(i),) for i in ids], "id long")
     key = "id" if "id" in ids.columns else ids.columns[0]
     edges = graph.edges.join(
         ids.select(F.col(key).alias("id")), on="id", how="leftanti"
     )
-    return PropertyGraph(
-        spark=spark, nodes=graph.nodes, edges=edges,
-        namespaces=graph.namespaces, variables=graph.variables,
-    )
+    return _derive(graph, edges=edges, summary=graph.summary)
 
 
 # ---------------------------------------------------------------------------
@@ -516,10 +501,7 @@ def add_label(graph: PropertyGraph, where, label: str) -> PropertyGraph:
             where, F.array_union(F.col("labels"), F.array(F.lit(label)))
         ).otherwise(F.col("labels")),
     )
-    return PropertyGraph(
-        spark=graph.spark, nodes=nodes.drop(*tmp), edges=graph.edges,
-        namespaces=graph.namespaces, variables=graph.variables,
-    )
+    return _derive(graph, nodes=nodes.drop(*tmp))
 
 
 def remove_label(graph: PropertyGraph, where, label: str) -> PropertyGraph:
@@ -531,10 +513,7 @@ def remove_label(graph: PropertyGraph, where, label: str) -> PropertyGraph:
             where, F.array_remove(F.col("labels"), label)
         ).otherwise(F.col("labels")),
     )
-    return PropertyGraph(
-        spark=graph.spark, nodes=nodes.drop(*tmp), edges=graph.edges,
-        namespaces=graph.namespaces, variables=graph.variables,
-    )
+    return _derive(graph, nodes=nodes.drop(*tmp))
 
 
 # ---------------------------------------------------------------------------
@@ -604,10 +583,7 @@ def set_meta_property(
         .when(where, appended)
         .otherwise(F.col(META_COL)),
     )
-    return PropertyGraph(
-        spark=graph.spark, nodes=nodes, edges=graph.edges,
-        namespaces=graph.namespaces, variables=graph.variables,
-    )
+    return _derive(graph, nodes=nodes, summary=graph.summary)
 
 
 def get_meta_properties(
@@ -663,10 +639,7 @@ def remove_meta_property(
     nodes = nodes.withColumn(
         META_COL, F.when(where, cleaned).otherwise(F.col(META_COL))
     )
-    return PropertyGraph(
-        spark=graph.spark, nodes=nodes, edges=graph.edges,
-        namespaces=graph.namespaces, variables=graph.variables,
-    )
+    return _derive(graph, nodes=nodes, summary=graph.summary)
 
 
 # ---------------------------------------------------------------------------

@@ -55,14 +55,24 @@ def get_spark(
 
 
 def local_frame(spark: SparkSession, rows: list, schema) -> DataFrame:
-    """DataFrame over driver-built ``rows`` with a SIZE-DERIVED slice
-    count: one slice per 8,192 rows, at most ``defaultParallelism``.
-    ``spark.createDataFrame`` alone slices any local list into
-    ``default.parallelism`` partitions (32 near-empty tasks for a
-    4-row list, and every union downstream inherits them), while one
-    slice for a large list makes a single task of it: a 32k-row
-    closure through ``coalesce(1)`` measured 6-9 s. ``schema`` is a
-    DDL string or a ``StructType``."""
-    n = max(1, min(int(spark.sparkContext.defaultParallelism),
-                   len(rows) // 8192 + 1))
-    return spark.createDataFrame(spark.sparkContext.parallelize(rows, n), schema)
+    """DataFrame over driver-built ``rows`` (tuples in ``schema``
+    order), built through Arrow: below
+    ``spark.sql.execution.arrow.localRelationThreshold`` the rows
+    become a JVM ``LocalRelation``, so no query over the frame starts
+    a Python worker (``createDataFrame(list)`` is a ``LogicalRDD`` that
+    does, on every query that reads it) and Catalyst folds a filter or
+    projection over it on the driver. ``LocalTableScan`` runs it in
+    min(rows, ``defaultParallelism``) slices. ``schema`` is a DDL
+    string or a ``StructType``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)

@@ -39,6 +39,7 @@ from pidb_rdf_spark.functions.iri import (
     sql_string,
 )
 from pidb_rdf_spark.graph import PropertyGraph
+from pidb_rdf_spark.session import local_frame
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
@@ -223,9 +224,10 @@ def import_triples(
         )
     )
 
-    ns_df = spark.createDataFrame(
+    ns_df = local_frame(
+        spark,
         [(ns, p) for ns, p in sorted(ns_map.items())] or [("", "")],
-        ["namespace", "prefix"],
+        "namespace string, prefix string",
     )
     return PropertyGraph(spark=spark, nodes=nodes, edges=edges, namespaces=ns_df)
 

@@ -30,16 +30,6 @@ RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 _PN_LOCAL = sql_string(r"^[A-Za-z0-9_](?:[A-Za-z0-9_.-]*[A-Za-z0-9_-])?$")
 
 
-def _ns_dict(graph: PropertyGraph) -> dict[str, str]:
-    if graph.namespaces is None:
-        return {}
-    return {
-        r["namespace"]: r["prefix"]
-        for r in graph.namespaces.collect()
-        if r["namespace"]
-    }
-
-
 _NO_LANG = "CAST(NULL AS STRING) AS lang"
 _NO_DATATYPE = "CAST(NULL AS STRING) AS datatype"
 
@@ -76,7 +66,7 @@ def graph_to_triples(
     and from typed hot columns; ``rdf:type`` triples from labels
     (``Resource`` excluded — it is the importer's marker label); and
     resource triples from edges."""
-    ns = _ns_dict(graph)
+    ns = graph.namespace_map()
 
     def uri(name: str) -> str:
         return build_uri_sql(name, ns, default_ns)
@@ -236,7 +226,7 @@ def describe_nodes(
         )
         .dropDuplicates(["id"])
     )
-    ns = _ns_dict(graph)
+    ns = graph.namespace_map()
     ctx = _edge_triples(n, touching, lambda name: build_uri_sql(name, ns))
     return own.unionByName(ctx)
 
@@ -250,7 +240,8 @@ def triples_to_turtle_lines(
     partition emits its own lines — subject grouping/`;` compaction is
     deliberately not used so the write stays embarrassingly parallel).
     """
-    namespaces = namespaces or {}
+    # the importer's ("", "") placeholder names no namespace
+    namespaces = {ns: p for ns, p in (namespaces or {}).items() if ns}
 
     def term(col: str) -> str:
         # longest-namespace-first so nested namespaces prefix correctly;
@@ -296,7 +287,7 @@ def export_turtle(graph: PropertyGraph, path: str, **kwargs) -> None:
     The header lands in its own (tiny) partition; body partitions
     write in parallel."""
     t = graph_to_triples(graph, **kwargs)
-    triples_to_turtle_lines(t, _ns_dict(graph)).write.mode("overwrite").text(path)
+    triples_to_turtle_lines(t, graph.namespace_map()).write.mode("overwrite").text(path)
 
 
 def triples_to_nquads_lines(
@@ -335,7 +326,8 @@ def triples_to_trig_lines(
     block (TriG permits a graph label in multiple blocks — their
     contents union), so the write stays embarrassingly parallel: no
     global sort, no single-writer funnel."""
-    namespaces = namespaces or {}
+    # the importer's ("", "") placeholder names no namespace
+    namespaces = {ns: p for ns, p in (namespaces or {}).items() if ns}
     body = triples_to_turtle_lines(triples, None)  # statements, no header
     header = [f"@prefix {p}: <{ns}> ." for ns, p in sorted(namespaces.items())]
     open_block = f"<{graph_iri}> {{" if graph_iri else "{"
@@ -360,7 +352,7 @@ def export_trig(
     """Write the whole graph as TriG (named-graph-aware, S12 +
     ``RDFEndpoint.java:589-604`` format set)."""
     t = graph_to_triples(graph, **kwargs)
-    triples_to_trig_lines(t, _ns_dict(graph), graph_iri).write.mode(
+    triples_to_trig_lines(t, graph.namespace_map(), graph_iri).write.mode(
         "overwrite"
     ).text(path)
 
@@ -591,7 +583,7 @@ EXPORTERS = {
 # halves of the exporters (used by query_to_rdf, the reference's
 # POST /cypher analog)
 def _turtle_lines_ns(graph):
-    return lambda t: triples_to_turtle_lines(t, _ns_dict(graph))
+    return lambda t: triples_to_turtle_lines(t, graph.namespace_map())
 
 
 def query_to_rdf(
@@ -631,7 +623,7 @@ def query_to_rdf(
         "N3": _turtle_lines_ns(graph),
         "N-Triples": triples_to_ntriples_lines,
         "N-Quads": triples_to_nquads_lines,
-        "TriG": lambda t: triples_to_trig_lines(t, _ns_dict(graph)),
+        "TriG": lambda t: triples_to_trig_lines(t, graph.namespace_map()),
         "TriX": triples_to_trix_lines,
         "JSON-LD": triples_to_jsonld_lines,
         "RDF/XML": triples_to_rdfxml_lines,

@@ -59,6 +59,25 @@ def _local_name(iri: str) -> str:
     return iri[idx + 1:] if idx >= 0 else iri
 
 
+def _union_terms(frames: list) -> DataFrame:
+    """Union solution frames by variable name, a variable a frame
+    lacks reading NULL. SPARQL bindings are heterogeneous RDF terms:
+    a variable two frames bind with different Spark types is cast to
+    string (ANSI union coercion would throw casting e.g. 'AFRICA' to
+    BIGINT)."""
+    types: dict = {}
+    for f in (f for b in frames for f in b.schema.fields):
+        types.setdefault(f.name, set()).add(f.dataType)
+    out = None
+    for b in frames:
+        b = b.select(*[
+            F.col(c).cast("string").alias(c) if len(types[c]) > 1 else F.col(c)
+            for c in b.columns
+        ])
+        out = b if out is None else out.unionByName(b, allowMissingColumns=True)
+    return out
+
+
 class _BGPState:
     """Bindings under construction: one DataFrame whose columns are the
     bound variable names (node vars hold node ids), plus kind tracking."""
@@ -68,6 +87,8 @@ class _BGPState:
         self.df: DataFrame | None = None
         self.kinds: dict[str, str] = {}  # var -> 'node' | 'value'
         self.order: list[str] = []
+        # node var -> labels one of which each of its bindings carries
+        self.labels: dict[str, frozenset] = {}
 
     def note(self, var: str, kind: str) -> None:
         if var not in self.kinds:
@@ -75,6 +96,14 @@ class _BGPState:
             self.order.append(var)
         elif kind == "node":
             self.kinds[var] = "node"
+
+    def constrain(self, var: str, labels) -> None:
+        """Record the labels a pattern of this group, joined inner,
+        gives ``var``. ONE pattern's set is kept (the smallest), never
+        an intersection of two: a node may carry several labels."""
+        old = self.labels.get(var)
+        if labels is not None and (old is None or len(labels) < len(old)):
+            self.labels[var] = frozenset(labels)
 
     def merge(self, frame: DataFrame) -> None:
         if self.df is None:
@@ -91,7 +120,6 @@ class SparqlCompiler:
     def __init__(self, graph: PropertyGraph, optional_fill: str | None = None):
         self.g = graph
         self.optional_fill = optional_fill  # None => SQL NULL (default)
-        self._ns_map: dict[str, str] | None = None
         self._var_counter = 0
         self._active_agg_map: dict = {}
         self._optional_vars: set[str] = set()
@@ -481,6 +509,8 @@ class SparqlCompiler:
         for sub in subgroups:
             sub_state = _BGPState(self)
             self._compile_group(sub_state, sub)
+            for v, labs in sub_state.labels.items():
+                state.constrain(v, labs)
             state.kinds.update({k: v for k, v in sub_state.kinds.items() if k not in state.kinds})
             for v in sub_state.order:
                 if v not in state.order:
@@ -500,33 +530,7 @@ class SparqlCompiler:
                 if br_state.df is not None:
                     branch_dfs.append(br_state.df)
             if branch_dfs:
-                # SPARQL bindings are heterogeneous RDF terms: when two
-                # branches bind the same var with different Spark types,
-                # reconcile to string (ANSI union coercion would throw
-                # casting e.g. 'AFRICA' to BIGINT)
-                conflicted: set[str] = set()
-                seen_types: dict[str, object] = {}
-                for b in branch_dfs:
-                    for f in b.schema.fields:
-                        prior = seen_types.setdefault(f.name, f.dataType)
-                        if prior != f.dataType:
-                            conflicted.add(f.name)
-                if conflicted:
-                    branch_dfs = [
-                        b.select(
-                            *[
-                                F.col(c).cast("string").alias(c)
-                                if c in conflicted
-                                else F.col(c)
-                                for c in b.columns
-                            ]
-                        )
-                        for b in branch_dfs
-                    ]
-                udf_ = branch_dfs[0]
-                for b in branch_dfs[1:]:
-                    udf_ = udf_.unionByName(b, allowMissingColumns=True)
-                state.merge(udf_)
+                state.merge(_union_terms(branch_dfs))
 
         # UNDEF-bearing VALUES deferred from the top of the group:
         # rows grouped by their bound-variable mask, one natural join
@@ -571,30 +575,7 @@ class SparqlCompiler:
                     if shared
                     else state.df.crossJoin(frame)
                 )
-            # heterogeneous-term reconciliation, as in UNION branches
-            conflicted: set[str] = set()
-            seen_types: dict[str, object] = {}
-            for b in branch_dfs:
-                for f in b.schema.fields:
-                    prior = seen_types.setdefault(f.name, f.dataType)
-                    if prior != f.dataType:
-                        conflicted.add(f.name)
-            if conflicted:
-                branch_dfs = [
-                    b.select(
-                        *[
-                            F.col(c).cast("string").alias(c)
-                            if c in conflicted
-                            else F.col(c)
-                            for c in b.columns
-                        ]
-                    )
-                    for b in branch_dfs
-                ]
-            out = branch_dfs[0]
-            for b in branch_dfs[1:]:
-                out = out.unionByName(b, allowMissingColumns=True)
-            state.df = out
+            state.df = _union_terms(branch_dfs)
 
         for opt in optionals:
             self._apply_optional(state, opt)
@@ -700,12 +681,9 @@ class SparqlCompiler:
                     state.note(pat.o.name, "value")
                     explode_var = pat.o.name
                 else:
-                    df = df.filter(
-                        F.array_contains(
-                            F.col("labels"),
-                            str(self._term_value(pat.o, type_iri)),
-                        )
-                    )
+                    label = str(self._term_value(pat.o, type_iri))
+                    state.constrain(s_var, {label})
+                    df = df.filter(F.array_contains(F.col("labels"), label))
             elif name == "id":
                 if isinstance(pat.o, A.Var):
                     state.note(pat.o.name, "value")
@@ -889,12 +867,15 @@ class SparqlCompiler:
         frame = edges.filter(F.col("predicate") == pred_name)
         if isinstance(pat.o, A.Var):
             state.note(pat.o.name, "node")
-            frame = frame.select(F.col("src").alias(s_var), F.col("dst").alias(pat.o.name))
+            o_var, o_restrict = pat.o.name, None
         else:
             o_var, o_restrict = self._subject_var(state, pat.o)
-            frame = frame.select(F.col("src").alias(s_var), F.col("dst").alias(o_var))
-            if o_restrict is not None:
-                frame = frame.join(o_restrict, on=o_var, how="inner")
+        frame = frame.select(F.col("src").alias(s_var), F.col("dst").alias(o_var))
+        if o_restrict is not None:
+            frame = frame.join(o_restrict, on=o_var, how="inner")
+        if self.g.summary is not None:
+            state.constrain(s_var, self.g.summary.hop_labels([pred_name], "in"))
+            state.constrain(o_var, self.g.summary.hop_labels([pred_name], "out"))
         if s_restrict is not None:
             frame = frame.join(s_restrict, on=s_var, how="inner")
         return frame
@@ -953,6 +934,7 @@ class SparqlCompiler:
         else:
             value = self._term_value(pat.o, type_iri_object)
             if name in ("label", "labels"):
+                state.constrain(s_var, {str(value)})
                 frame = nodes.filter(
                     F.array_contains(F.col("labels"), str(value))
                 ).select(F.col("id").alias(s_var))
@@ -1113,8 +1095,8 @@ class SparqlCompiler:
             # above) and ident is one row per node id, so the union's
             # only overlap is self-pairs: dropping them from pairs
             # replaces a node-set-sized union dedup SHUFFLE with a
-            # narrow filter — identical distinct pair set (r14, guide
-            # §2.4; endpoints are node ids, never NULL).
+            # narrow filter — identical distinct pair set (endpoints
+            # are node ids, never NULL).
             pairs = pairs.filter(F.col("__src") != F.col("__dst")).unionAll(
                 ident
             )
@@ -1217,7 +1199,10 @@ class SparqlCompiler:
             flag = f"__isbnode_{v}"
             if flag in df.columns:
                 continue
-            df = self.g.lookup(df, v, {flag: F.col("uri").startswith("_:")})
+            df = self.g.lookup(
+                df, v, {flag: F.col("uri").startswith("_:")},
+                labels=state.labels.get(v),
+            )
         return df
 
     def _bnode_test_vars(self, expr) -> set[str]:
@@ -1574,7 +1559,7 @@ class SparqlCompiler:
             if state.kinds.get(v) == "node" and v in df.columns
         ]
         for v in node_vars:
-            df = self.g.lookup(df, v, {v: F.col("uri")})
+            df = self.g.lookup(df, v, {v: F.col("uri")}, labels=state.labels.get(v))
         return df
 
     def _node_prop_dtype(self, name: str):
@@ -1587,23 +1572,13 @@ class SparqlCompiler:
         verbatim."""
         if iri.startswith(EDGE_NS):
             return iri[len(EDGE_NS):]
-        ns_map = self._namespace_map()
+        ns_map = self.g.namespace_map()
         if ns_map:
             idx = max(iri.rfind("/"), iri.rfind("#"), iri.rfind(":"))
             ns, local = iri[: idx + 1], iri[idx + 1:]
             if ns in ns_map:
                 return f"{ns_map[ns]}__{local}"
         return iri
-
-    def _namespace_map(self) -> dict[str, str]:
-        if self._ns_map is None:
-            if self.g.namespaces is None:
-                self._ns_map = {}
-            else:
-                self._ns_map = {
-                    r["namespace"]: r["prefix"] for r in self.g.namespaces.collect()
-                }
-        return self._ns_map
 
 
 def sparql(graph: PropertyGraph, query: str, **kwargs) -> DataFrame:

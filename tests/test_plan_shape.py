@@ -565,6 +565,19 @@ def _final_plan(df) -> str:
     return p.toString()
 
 
+def _scans_by_table(plan: str) -> dict:
+    """ReadSchema of every parquet scan in ``plan``, by TPC-H table
+    (the column prefix names it; Location strings are truncated)."""
+    import re
+
+    tables = {"c": "customer", "n": "nation", "s": "supplier", "o": "orders",
+              "l": "lineitem", "p": "part", "r": "region"}
+    by_table: dict = {}
+    for schema in re.findall(r"ReadSchema: struct<([^>]*)>", plan):
+        by_table.setdefault(tables.get(schema.split("_", 1)[0], schema), []).append(schema)
+    return by_table
+
+
 def _uncached_graph(spark, tmp_path):
     """A graph over the test tables that no fixture has cached: the
     files are reached through symlinks, so the scans are new relations
@@ -587,8 +600,6 @@ def test_cypher_props_read_in_binding_scan(spark, tmp_path):
     n_name, and no other node table (lineitem, orders, ...) is read.
     customer.parquet appears twice — the c scan and the customer
     branch of the IN_NATION edges, which never reads c_name."""
-    import re
-
     from pidb_rdf_spark.cypher import cypher
 
     df = cypher(
@@ -598,14 +609,7 @@ def test_cypher_props_read_in_binding_scan(spark, tmp_path):
     )
     assert len(df.collect()) > 0
     plan = _final_plan(df)
-    # the TPC-H column prefix names each scan's table (Location
-    # strings are truncated in plan text)
-    tables = {"c": "customer", "n": "nation", "s": "supplier", "o": "orders",
-              "l": "lineitem", "p": "part", "r": "region"}
-    by_table: dict = {}
-    for schema in re.findall(r"ReadSchema: struct<([^>]*)>", plan):
-        table = tables.get(schema.split("_", 1)[0], schema)
-        by_table.setdefault(table, []).append(schema)
+    by_table = _scans_by_table(plan)
     assert sorted(by_table) == ["customer", "nation", "supplier"]
     assert len(by_table["nation"]) == 1 and "n_name" in by_table["nation"][0]
     assert sorted("c_name" in s for s in by_table["customer"]) == [False, True]
@@ -628,3 +632,46 @@ def test_cypher_read_your_write_lookup_is_one_scan(spark, tmp_path):
     df = cypher(g, "MATCH (t:Tag {name: 'pin'}) RETURN t.weight AS w")
     assert [tuple(r) for r in df.collect()] == [("7",)]
     assert "Exchange" not in _final_plan(df)
+
+
+def test_dsl_hop_read_scans_only_target_label(spark, tmp_path):
+    """After out("IN_NATION") the graph summary says the frontier is
+    Nation nodes, so group_count's node read scans the nation table
+    alone: customer and supplier are read once each, by the Customer
+    scan and the IN_NATION edge branches, and lineitem, orders, part
+    and region not at all."""
+    from pidb_rdf_spark.dsl import P, traversal
+
+    df = (
+        traversal(_uncached_graph(spark, tmp_path)).V().has_label("Customer")
+        .has("c_acctbal", P.gt(0)).out("IN_NATION").group_count("n_name")
+    )
+    assert len(df.collect()) > 0
+    by_table = _scans_by_table(_final_plan(df))
+    assert sorted(by_table) == ["customer", "nation", "supplier"]
+    assert len(by_table["nation"]) == 1 and "n_name" in by_table["nation"][0]
+    assert len(by_table["supplier"]) == 1
+
+
+def test_sparql_uri_lookup_scans_only_end_label(spark, tmp_path):
+    """?n is the object of an IN_NATION pattern, so its uri is read
+    from the nation table alone."""
+    from pidb_rdf_spark.sparql import sparql
+
+    df = sparql(_uncached_graph(spark, tmp_path), "SELECT ?n WHERE { ?c e:IN_NATION ?n }")
+    assert len(df.collect()) > 0
+    by_table = _scans_by_table(_final_plan(df))
+    assert sorted(by_table) == ["customer", "nation", "supplier"]
+    assert len(by_table["nation"]) == 1
+    assert by_table["nation"][0].startswith("n_nationkey:")
+
+
+def test_merge_probe_reads_no_file(spark, tmp_path):
+    """The MERGE existence probe for a urn:cypher: uri excludes every
+    graphify label (none of their uri prefixes match), so Catalyst
+    prunes every union branch and the probe reads no file."""
+    g = _uncached_graph(spark, tmp_path)
+    probe = g.node_by_uri("urn:cypher:merge:Tag|name=pin")
+    assert probe.isEmpty()
+    assert "ReadSchema" not in _final_plan(probe)
+    assert g.node_by_uri("urn:nation:3").count() == 1
